@@ -43,6 +43,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ._sql import sql_ident
+
 
 def _dot(a, b):
     """Column-expression dot product (interpreted HOF fold) — kept for
@@ -946,7 +948,8 @@ def embedding_audit(embeddings: DataFrame, id_col: str = "vec_id",
     # one F.expr per output column: the 4x64-term Column-by-Column build
     # costs ~18k py4j round-trips (~2 s driver time per plan, on the
     # bench clock); parsed trees are node-for-node identical
-    xs = [f"CAST(get(`{vec_col}`, {j}) AS DOUBLE)" for j in range(dim)]
+    v = sql_ident(vec_col)
+    xs = [f"CAST(get({v}, {j}) AS DOUBLE)" for j in range(dim)]
     inf = "CAST('Infinity' AS DOUBLE)"
     n_zero = "0 + " + " + ".join(f"CAST({x} = 0.0D AS BIGINT)" for x in xs)
     n_nan = "0 + " + " + ".join(f"CAST(isnan({x}) AS BIGINT)" for x in xs)
@@ -960,7 +963,7 @@ def embedding_audit(embeddings: DataFrame, id_col: str = "vec_id",
         for x in xs)
     return embeddings.select(
         F.col(id_col),
-        F.size(vec_col).cast("long").alias("n_dims"),
+        F.size(F.col(v)).cast("long").alias("n_dims"),
         F.expr(n_zero).alias("n_zero"), F.expr(n_nan).alias("n_nan"),
         F.expr(n_inf).alias("n_inf"), F.expr(sq).alias("sumsq_micro"),
         F.expr(f"ROUND(SQRT(CAST(({sq}) AS DOUBLE)) / 1.0E6, 6)")

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ._sql import sql_ident, sql_string
+
 STOPWORDS_RE = r"\b(the|and|of|to|in|a|is|for|on|with)\b"
 PUNCT_RE = r"[^A-Za-z0-9\s]"
 TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
@@ -358,10 +360,10 @@ def char_entropy(df: DataFrame, text_col: str = "text",
     # 38 replace-counts + 38 entropy terms Column-by-Column costs ~7.5k
     # py4j round-trips (~0.7 s driver time per plan build, on the bench
     # clock); the parsed Catalyst tree is node-for-node identical.
-    t = f"lower(`{text_col}`)"
+    t = f"lower({sql_ident(text_col)})"
     n = f"CAST(LENGTH({t}) AS BIGINT)"
     cnt_cols = [
-        F.expr(f"{n} - CAST(LENGTH(replace({t}, '{c}')) AS BIGINT)")
+        F.expr(f"{n} - CAST(LENGTH(replace({t}, {sql_string(c)})) AS BIGINT)")
         .alias(f"_c{i}")
         for i, c in enumerate(ENTROPY_ALPHABET)]
     proj = df.select(F.col(id_col), F.expr(n).alias("_n"), *cnt_cols)

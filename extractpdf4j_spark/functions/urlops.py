@@ -23,28 +23,12 @@ _SCHEME_RE = r"^([A-Za-z][A-Za-z0-9+.\-]*)://"
 _AUTHORITY_RE = r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)"
 _PATH_RE = r"^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*([^?#]*)"
 _QUERY_RE = r"\?([^#]*)"
-_FRAGMENT_RE = r"#(.*)$"
 # tracking params dropped by normalization (C4-style query scrub)
 TRACKING_PARAM_RE = r"(^|&)(utm_[A-Za-z0-9_]*|fbclid|gclid|ref)=[^&]*"
 # second-level labels that behave like public suffixes (registered
 # domain = 3 labels under these, else 2): deliberately a small fixed
 # heuristic set, NOT the full PSL — both engines inline the same list
 SECOND_LEVEL_SUFFIXES = ("co", "com", "net", "org", "gov", "ac", "edu")
-
-
-def with_url_parts(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Split ``url_col`` into scheme/host/port/path/query/fragment
-    columns (raw, case-preserved except nothing); pure regexp_extract
-    projection, no shuffle. Unparseable fields come back ''."""
-    u = F.col(url_col)
-    hostport = F.regexp_extract(u, _AUTHORITY_RE, 1)
-    return (df
-            .withColumn("scheme", F.regexp_extract(u, _SCHEME_RE, 1))
-            .withColumn("host", F.regexp_extract(hostport, r"^([^:]*)", 1))
-            .withColumn("port", F.regexp_extract(hostport, r":([0-9]+)$", 1))
-            .withColumn("path", F.regexp_extract(u, _PATH_RE, 1))
-            .withColumn("query", F.regexp_extract(u, _QUERY_RE, 1))
-            .withColumn("fragment", F.regexp_extract(u, _FRAGMENT_RE, 1)))
 
 
 def _registered_domain(host_col):

@@ -238,6 +238,18 @@ def _bilevel_mask01(gray: np.ndarray) -> np.ndarray:
     return out
 
 
+def _win15_bound_le216(cov: np.ndarray, first: np.ndarray,
+                       last: np.ndarray) -> bool:
+    """True when the 15-wide replicate-padded window sum of the per-line
+    bounds ``min(15, cov + 7*(first + last))`` is <= 216 everywhere — see
+    ``detect_line_positions`` for why that proves ``_bilevel_mask01`` is
+    the plain black-pixel mask."""
+    b = np.minimum(cov, 15).astype(np.uint8)
+    b += np.uint8(7) * (first + last)
+    np.minimum(b, 15, out=b)
+    return int(_win15_axis1_u8(b[None, :]).max()) <= 216
+
+
 def _binarize_region_rows(gray: np.ndarray, y0: int, y1: int) -> np.ndarray:
     """Rows [y0, y1) of ``binarize_for_lines(gray)`` — exact, including
     the replicate-border semantics relative to the FULL image."""
@@ -299,15 +311,36 @@ def detect_line_positions(gray: np.ndarray, k: int) -> tuple[np.ndarray, np.ndar
     (opening removes pixels, so sub-35% raw coverage can never pass) and
     apply the exact 1-D opening there. Bit-identical to
     ``project_open_lines(binarize_for_lines(gray), k, ...)`` for both
-    axes — pinned by tests against the literal oracle."""
+    axes — pinned by tests against the literal oracle.
+
+    Bilevel shortcut: ``_bilevel_mask01`` clears a black pixel only when
+    its 15x15 window holds >= 217 black pixels, so the mask is the plain
+    black-pixel mask ``z = (gray == 0)`` whenever no window reaches 217.
+    A row's share of any window is at most ``min(15, row_cov + 7*(z[r,0]
+    + z[r,-1]))``: under replicate borders an interior pixel is counted
+    at most once per window row, but an edge pixel up to 8 times (itself
+    plus 7 clamped copies; in a 1-px-wide image both terms name the same
+    pixel, 1 + 7 + 7 = 15). Summing those row bounds over a 15-row
+    replicate-padded window bounds every window count, and the same holds
+    for columns. If either axis's windowed bound is <= 216 everywhere,
+    ``z`` is the mask and the adaptive window is skipped; otherwise the
+    exact ``_bilevel_mask01`` runs."""
     h, w = gray.shape
     if _is_bilevel(gray):
         # packed-bits rasters: one u8 shift-add binarize materializes the
         # whole (small) mask, then both axes open candidate slices of it
         # — no per-strip or per-slab re-binarization at all
-        m01 = _bilevel_mask01(gray)
-        row_cov = m01.sum(axis=1, dtype=np.int64)
-        col_cov = m01.sum(axis=0, dtype=np.int64)
+        z = (gray == 0).view(np.uint8)
+        acc = np.uint16 if max(h, w) < 65536 else np.int64
+        row_cov = z.sum(axis=1, dtype=acc)
+        col_cov = z.sum(axis=0, dtype=acc)
+        if h and w and (_win15_bound_le216(row_cov, z[:, 0], z[:, -1])
+                        or _win15_bound_le216(col_cov, z[0, :], z[-1, :])):
+            m01 = z
+        else:
+            m01 = _bilevel_mask01(gray)
+            row_cov = m01.sum(axis=1, dtype=np.int64)
+            col_cov = m01.sum(axis=0, dtype=np.int64)
         rows_out = np.empty(0, dtype=np.int64)
         cand_r = np.where(row_cov > w * 0.35)[0]
         if len(cand_r):

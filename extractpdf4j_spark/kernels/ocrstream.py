@@ -233,14 +233,6 @@ def group_lines(words: pd.DataFrame) -> list[pd.DataFrame]:
     return [ln.sort_values("left", kind="stable") for ln in lines]
 
 
-def match_header(line: pd.DataFrame) -> dict[str, float]:
-    """OcrStreamParser.matchHeader:282-296 — each word claims the first
-    unclaimed expected header it fuzzy-matches. Returns target → the
-    matched word's left edge (the only attribute downstream uses)."""
-    ln = _line_from_frame(line)
-    return _match_header_core(ln.norm, ln.left)
-
-
 def looks_like_header(line: pd.DataFrame) -> bool:
     """OcrStreamParser.java:338-347 — >=3 words hitting any target."""
     return _looks_like_header_core(_line_from_frame(line).norm)

@@ -25,8 +25,6 @@ SURVEY.md §4) survives with a real backend.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 import numpy as np
 import pandas as pd
 
@@ -153,11 +151,6 @@ class PytesseractBackend(OcrBackend):
     def cell_text(self, payload: PagePayload, cell_img: np.ndarray,
                   bbox: tuple[int, int, int, int]) -> str:  # pragma: no cover
         return str(self._pt.image_to_string(cell_img, config="--psm 6")).strip()
-
-
-@dataclass
-class OcrStats:
-    cells_ocred: int = 0
 
 
 def default_backend(lang: str = "eng", oem: int = 1,

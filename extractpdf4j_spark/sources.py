@@ -13,7 +13,11 @@ Iceberg implements).
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+
+# the only read failures that mean "no checkpoint yet"
+_NOT_FOUND = frozenset({"PATH_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND"})
 
 
 def is_table_identifier(ref: str) -> bool:
@@ -44,11 +48,18 @@ def append_table(df: DataFrame, ref: str) -> None:
 
 
 def try_read_table(spark: SparkSession, ref: str) -> DataFrame | None:
-    """Read for resume: None when the checkpoint target doesn't exist."""
+    """Read for resume: None when the checkpoint target doesn't exist.
+
+    Only a missing path or table means "no checkpoint". Any other failure
+    (a corrupt file, a permission or transient IO error) raises: treating
+    it as "no checkpoint" would re-extract every document and append
+    duplicate rows."""
     try:
         return read_table(spark, ref)
-    except Exception:
-        return None
+    except AnalysisException as e:
+        if e.getCondition() in _NOT_FOUND:
+            return None
+        raise
 
 
 def write_bucketed(df: DataFrame, ref: str, bucket_col: str,

@@ -20,9 +20,6 @@ from __future__ import annotations
 import re
 from functools import lru_cache
 
-import numpy as np
-import pandas as pd
-
 # ^[\s$\-.,0-9CR]+$ case-insensitive (OcrStreamParser.java:397)
 NUM_LIKE = re.compile(r"^[\s\$\-\.,0-9CR]+$", re.IGNORECASE)
 # ^\d{1,2}\s?[A-Za-z]{3}(?:\s?\d{2,4})?$ (OcrStreamParser.java:398)
@@ -154,31 +151,3 @@ def normalize_numeric_like_columns(grid: list[list[str]]) -> None:
             for row in grid:
                 if c < len(row):
                     row[c] = normalize_date(row[c])
-
-
-# ---------------------------------------------------------------------------
-# Vectorized (pandas) variants used inside Arrow UDF kernels
-# ---------------------------------------------------------------------------
-
-def normalize_amount_series(s: pd.Series) -> pd.Series:
-    """Vectorized normalize_amount over a string Series."""
-    s = s.fillna("")
-    s = s.str.replace(r"\s+", "", regex=True).str.upper()
-    s = s.str.translate(str.maketrans({"O": "0", "I": "1", "L": "1", "S": "5"}))
-    s = s.str.replace(r"(\d),(\d{2})$", r".\2", regex=True)
-    return s
-
-
-def normalize_date_series(s: pd.Series) -> pd.Series:
-    """Vectorized normalize_date over a string Series."""
-    s = s.fillna("")
-    s = s.str.replace(r"\s+", " ", regex=True).str.strip()
-    return s.str.replace(r"^(\d{1,2})([A-Za-z]{3})\b", r"\1 \2", regex=True)
-
-
-def is_likely_numeric_array(s: pd.Series) -> np.ndarray:
-    """Vectorized is_likely_numeric (right-edge anchoring decision,
-    OcrStreamParser.java:191)."""
-    t = s.fillna("").str.strip().str.upper().str.replace("CR", "", regex=False)
-    ok = (t.str.len() > 0) & t.str.fullmatch(NUM_LIKE.pattern[1:-1], case=False)
-    return ok.to_numpy()

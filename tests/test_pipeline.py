@@ -135,6 +135,29 @@ def test_resume_checkpoint(spark, corpus, tmp_path):
     assert lineage["config_hash"] == ExtractConfig().config_hash()
 
 
+def test_resume_unreadable_checkpoint_raises(spark, corpus, tmp_path):
+    """A checkpoint that exists but cannot be read is not "no checkpoint":
+    resume must raise instead of re-extracting everything, and append
+    nothing."""
+    docs, media, _, _ = corpus
+    combined = tmp_path / "out" / "combined"
+    combined.mkdir(parents=True)
+    bad = combined / "part-00000-corrupt.snappy.parquet"
+    bad.write_bytes(b"PAR1" + b"\x00not a parquet footer\x00" * 4 + b"PAR1")
+    before = sorted(p.relative_to(combined) for p in combined.rglob("*"))
+    with pytest.raises(Exception, match="(?i)corrupt|footer|parquet"):
+        run_extraction(spark, docs, media, ExtractConfig(),
+                       str(tmp_path / "out"), run_id="r1", resume=True)
+    assert sorted(p.relative_to(combined)
+                  for p in combined.rglob("*")) == before
+
+
+def test_try_read_table_missing_is_none(spark, tmp_path):
+    from extractpdf4j_spark.sources import try_read_table
+    assert try_read_table(spark, str(tmp_path / "nope" / "combined")) is None
+    assert try_read_table(spark, "no_such_checkpoint_table") is None
+
+
 def test_malformed_documents_never_kill_the_job(spark):
     """Corrupt inputs become 'error'/'no_tables' status rows — a 100 TB
     job must survive any single bad document (SURVEY.md §7 risk:

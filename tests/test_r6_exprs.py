@@ -9,6 +9,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from extractpdf4j_spark.functions._sql import sql_ident, sql_string
 from extractpdf4j_spark.functions.dedup import _tokens, simhash64
 from extractpdf4j_spark.functions.multimodal import _dhash_exprs
 from extractpdf4j_spark.functions.similarity import embedding_audit
@@ -151,3 +152,34 @@ def test_embedding_audit_matches_column_build(spark):
     # -inf is counted by abs() == inf too
     assert got[5]["n_inf"] == 1 and got[6]["n_inf"] == 2
     assert not math.isnan(got[3]["norm"])
+
+
+def test_sql_quoting_helpers():
+    assert sql_ident("text") == "`text`"
+    assert sql_ident("a`b") == "`a``b`"
+    assert sql_string("it's") == "'it''s'"
+    with pytest.raises(ValueError):
+        sql_string("\\")
+    # today's alphabet is spliced exactly as before, so plans are unchanged
+    assert [sql_string(c) for c in ENTROPY_ALPHABET] == \
+        [f"'{c}'" for c in ENTROPY_ALPHABET]
+
+
+def test_expr_builders_quote_column_names(spark):
+    """A backtick in a column name stays part of the name instead of
+    closing the quote in the generated SQL."""
+    df = spark.createDataFrame(
+        [(1, "it's the `quick` fox 42!"), (2, "")], "doc_id long, text string")
+    odd = df.withColumnRenamed("text", "te`xt")
+    _assert_same(char_entropy(df),
+                 char_entropy(odd, text_col="te`xt"))
+    # a name written to break out of the quote only fails to resolve
+    with pytest.raises(Exception, match="UNRESOLVED_COLUMN"):
+        char_entropy(df, text_col="text`), lower(`text").collect()
+
+    emb = spark.createDataFrame(
+        [(1, [0.5, 0.0, float("nan")]), (2, [1.0, -2.0, 3.0])],
+        "vec_id long, embedding array<double>")
+    odd = emb.withColumnRenamed("embedding", "emb`x")
+    _assert_same(embedding_audit(emb, dim=3),
+                 embedding_audit(odd, vec_col="emb`x", dim=3))

@@ -6,10 +6,12 @@ import io
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import given, settings, strategies as st
 
-from extractpdf4j_spark import imageops
+from extractpdf4j_spark import fixtures, imageops
 from extractpdf4j_spark.docmodel import (OCR_WORD_COLS, decode_media_payload,
                                          encode_media_payload)
+from extractpdf4j_spark.kernels.lattice import detect_grid
 from extractpdf4j_spark.textnorm import edit_distance, edit_distance_le1
 
 
@@ -63,6 +65,181 @@ def test_is_bilevel_detection():
     assert imageops._is_bilevel(np.array([[0, 255]], dtype=np.uint8))
     assert not imageops._is_bilevel(np.array([[0, 254]], dtype=np.uint8))
     assert not imageops._is_bilevel(np.array([[1, 255]], dtype=np.uint8))
+
+
+# -- bilevel window-bound shortcut in detect_line_positions -----------------
+
+def _bilevel(h, w):
+    return np.full((h, w), 255, dtype=np.uint8)
+
+
+def _assert_bound_sound(g):
+    """Whenever either axis's bound admits the shortcut, the adaptive
+    mask must really be the plain black-pixel mask."""
+    z = (g == 0).view(np.uint8)
+    if not z.size:
+        return
+    rows_ok = imageops._win15_bound_le216(z.sum(axis=1), z[:, 0], z[:, -1])
+    cols_ok = imageops._win15_bound_le216(z.sum(axis=0), z[0, :], z[-1, :])
+    if rows_ok or cols_ok:
+        assert np.array_equal(imageops._bilevel_mask01(g), z), g.shape
+
+
+def _assert_detect_exact(g, k=10):
+    _assert_bound_sound(g)
+    r0, c0 = _ref_detect(g, k)
+    r1, c1 = imageops.detect_line_positions(g, k)
+    assert np.array_equal(r0, r1) and np.array_equal(c0, c1), g.shape
+
+
+def _border_cases():
+    out = []
+    for side in ("top", "bottom", "left", "right"):
+        for depth in (1, 2, 7, 8, 15):
+            g = _bilevel(60, 50)
+            sl = {"top": np.s_[:depth, :], "bottom": np.s_[-depth:, :],
+                  "left": np.s_[:, :depth], "right": np.s_[:, -depth:]}[side]
+            g[sl] = 0
+            out.append(g)
+    # corner blocks straddling the 216/217 window count: an edge pixel is
+    # counted 8 times by the corner window, so 7x7 stays (14*14=196) and
+    # 8x8 clears (15*15=225); 8x7 gives 15*14=210, 8x8 minus a pixel 224
+    for bh, bw in ((7, 7), (8, 7), (7, 8), (8, 8), (15, 1), (1, 15)):
+        for corner in ((0, 0), (0, -1), (-1, 0), (-1, -1)):
+            g = _bilevel(40, 45)
+            ys = np.s_[:bh] if corner[0] == 0 else np.s_[-bh:]
+            xs = np.s_[:bw] if corner[1] == 0 else np.s_[-bw:]
+            g[ys, xs] = 0
+            out.append(g)
+    # 8x8 corner block less one top-edge pixel: the corner window holds
+    # exactly 217 (8*14 + 7*15) and both bounds are tight, so it must fall
+    # back; less two such pixels (209) it may take the shortcut
+    for n_gap in (1, 2):
+        g = _bilevel(40, 45)
+        g[:8, :8] = 0
+        g[0, 3:3 + n_gap] = 255
+        out.append(g)
+    g = _bilevel(80, 90)                        # all four borders at once
+    g[0, :] = g[-1, :] = g[:, 0] = g[:, -1] = 0
+    out.append(g)
+    return out
+
+
+def test_shortcut_black_on_each_border():
+    for g in _border_cases():
+        _assert_detect_exact(g)
+
+
+def test_shortcut_many_vertical_rules():
+    # 8+ two-pixel vertical rules put >= 16 black pixels in every row, so
+    # every row bound saturates at 15 and the row test fails (15*15 > 216);
+    # the column bound must then decide on its own
+    for n_rules in (8, 9, 12):
+        g = _bilevel(120, 40 * n_rules)
+        for i in range(n_rules):
+            g[:, 20 + 40 * i:22 + 40 * i] = 0
+        z = (g == 0).view(np.uint8)
+        assert not imageops._win15_bound_le216(z.sum(axis=1), z[:, 0], z[:, -1])
+        assert imageops._win15_bound_le216(z.sum(axis=0), z[0, :], z[-1, :])
+        _assert_detect_exact(g)
+    # the same rules crossed by as many horizontal ones: both bounds fail
+    g = _bilevel(40 * 8, 40 * 8)
+    for i in range(8):
+        g[:, 20 + 40 * i:22 + 40 * i] = 0
+        g[20 + 40 * i:22 + 40 * i, :] = 0
+    _assert_detect_exact(g)
+
+
+def test_shortcut_solid_15x15_block():
+    for shape, y, x in (((30, 30), 8, 8), ((200, 300), 90, 140),
+                        ((15, 15), 0, 0), ((40, 40), 0, 25)):
+        g = _bilevel(*shape)
+        g[y:y + 15, x:x + 15] = 0
+        _assert_detect_exact(g)
+    # a 15-row band on a narrow page: the cleared interior changes which
+    # rows pass the 35% coverage test, so a wrong shortcut would show
+    g = _bilevel(60, 24)
+    g[20:35, :] = 0
+    _assert_detect_exact(g)
+
+
+def test_shortcut_tiny_images():
+    rng = np.random.default_rng(11)
+    for h in (1, 2, 7, 14):
+        for w in (1, 3, 14, 15, 40):
+            for g in (_bilevel(h, w), np.zeros((h, w), dtype=np.uint8),
+                      (rng.integers(0, 2, size=(h, w)) * 255).astype(np.uint8)):
+                _assert_detect_exact(g)
+                _assert_detect_exact(np.ascontiguousarray(g.T))
+
+
+def test_shortcut_all_black():
+    for shape in ((1, 1), (15, 15), (64, 64), (30, 200), (200, 30)):
+        _assert_detect_exact(np.zeros(shape, dtype=np.uint8))
+
+
+@st.composite
+def _bilevel_pages(draw):
+    h = draw(st.integers(1, 90))
+    w = draw(st.integers(1, 90))
+    g = _bilevel(h, w)
+    for _ in range(draw(st.integers(0, 10))):
+        kind = draw(st.sampled_from(["hrule", "vrule", "block"]))
+        t = draw(st.integers(1, 4))
+        if kind == "hrule":
+            y = draw(st.integers(0, h - 1))
+            x0 = draw(st.integers(0, w - 1))
+            g[y:y + t, x0:draw(st.integers(x0 + 1, w))] = 0
+        elif kind == "vrule":
+            x = draw(st.integers(0, w - 1))
+            y0 = draw(st.integers(0, h - 1))
+            g[y0:draw(st.integers(y0 + 1, h)), x:x + t] = 0
+        else:
+            y, x = draw(st.integers(0, h - 1)), draw(st.integers(0, w - 1))
+            g[y:y + draw(st.integers(1, 20)), x:x + draw(st.integers(1, 20))] = 0
+    density = draw(st.sampled_from([0.0, 0.02, 0.3, 0.9]))
+    if density:
+        rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+        g[rng.random((h, w)) < density] = 0
+    return g
+
+
+@settings(max_examples=150, deadline=None)
+@given(_bilevel_pages())
+def test_shortcut_property_random_bilevel(g):
+    _assert_detect_exact(g)
+
+
+def _fixture_images():
+    pdf = pd.DataFrame({"doc_id": np.array([6], dtype=np.int64),
+                        "text": [" ".join(["alpha"] * 60)]})
+    _, media = fixtures.build_from_corpus_pdf(pdf)
+    ruled = [decode_media_payload(p).image for p in media["payload"]]
+    fb = fixtures.FixtureBuilder(seed=42)
+    fb.grid_scanned("scanned")
+    fb.grid_ruled("ruled")
+    _, fmedia = fb.to_pandas()
+    built = [decode_media_payload(p).image for p in fmedia["payload"]]
+    return {"corpus_ruled": ruled[0], "grid_scanned": built[0],
+            "grid_ruled": built[1], "blank_ocr": fixtures.blank_page()}
+
+
+def test_fixture_pages_take_the_shortcut(monkeypatch):
+    imgs = _fixture_images()
+    expected = {name: detect_grid(g) for name, g in imgs.items()}
+
+    def boom(gray):
+        raise AssertionError("adaptive-window fallback reached")
+
+    monkeypatch.setattr(imageops, "_bilevel_mask01", boom)
+    dense = np.zeros((64, 64), dtype=np.uint8)  # the patch is live
+    with pytest.raises(AssertionError, match="fallback reached"):
+        imageops.detect_line_positions(dense, 10)
+    for name, g in imgs.items():
+        assert imageops._is_bilevel(g), name
+        assert detect_grid(g) == expected[name], name
+    assert len(expected["grid_ruled"][0]) > 2  # the grids were found
+    assert len(expected["grid_scanned"][1]) > 2
 
 
 def _ref_decode(payload):
