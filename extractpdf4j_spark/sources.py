@@ -18,6 +18,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 # the only read failures that mean "no checkpoint yet"
 _NOT_FOUND = frozenset({"PATH_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND"})
+# a parquet directory that exists but holds no data file yet: a first run
+# that died before its append committed leaves it empty or holding only
+# ``_temporary`` (hidden from the reader)
+_NO_DATA = "UNABLE_TO_INFER_SCHEMA"
 
 
 def is_table_identifier(ref: str) -> bool:
@@ -50,14 +54,18 @@ def append_table(df: DataFrame, ref: str) -> None:
 def try_read_table(spark: SparkSession, ref: str) -> DataFrame | None:
     """Read for resume: None when the checkpoint target doesn't exist.
 
-    Only a missing path or table means "no checkpoint". Any other failure
-    (a corrupt file, a permission or transient IO error) raises: treating
-    it as "no checkpoint" would re-extract every document and append
-    duplicate rows."""
+    Only a missing path or table, or a parquet directory with no data
+    file in it, means "no checkpoint". Any other failure (a corrupt file,
+    a permission or transient IO error) raises: treating it as "no
+    checkpoint" would re-extract every document and append duplicate
+    rows."""
     try:
         return read_table(spark, ref)
     except AnalysisException as e:
-        if e.getCondition() in _NOT_FOUND:
+        # getCondition() is PySpark >= 4.0; getErrorClass() its 3.5 name
+        cond = getattr(e, "getCondition", e.getErrorClass)()
+        if cond in _NOT_FOUND or (cond == _NO_DATA
+                                  and not is_table_identifier(ref)):
             return None
         raise
 

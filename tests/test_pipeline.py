@@ -158,6 +158,52 @@ def test_try_read_table_missing_is_none(spark, tmp_path):
     assert try_read_table(spark, "no_such_checkpoint_table") is None
 
 
+@pytest.mark.parametrize("cond,missing", [("PATH_NOT_FOUND", True),
+                                           ("UNABLE_TO_INFER_SCHEMA", True),
+                                           ("FAILED_READ_FILE", False)])
+def test_try_read_table_pyspark35_error_api(monkeypatch, cond, missing):
+    """PySpark 3.5 exceptions have getErrorClass() but no getCondition()
+    (added in 4.0); both must classify the same way."""
+    from pyspark.errors import AnalysisException
+    from extractpdf4j_spark import sources
+
+    class Spark35Error(AnalysisException):
+        @property
+        def getCondition(self):
+            raise AttributeError("getCondition")
+
+        def getErrorClass(self):
+            return cond
+
+    def read(spark, ref):
+        raise Spark35Error(message=cond)
+
+    monkeypatch.setattr(sources, "read_table", read)
+    if missing:
+        assert sources.try_read_table(None, "/x/combined") is None
+    else:
+        with pytest.raises(Spark35Error):
+            sources.try_read_table(None, "/x/combined")
+
+
+@pytest.mark.parametrize("leftover", ["empty", "temporary_only"])
+def test_resume_checkpoint_dir_without_data(spark, corpus, tmp_path,
+                                            leftover):
+    """A first run that died before its append committed leaves
+    ``combined`` empty or holding only ``_temporary/0``. That is no
+    checkpoint: resume extracts every document, once."""
+    docs, media, docs_pdf, _ = corpus
+    combined = tmp_path / "out" / "combined"
+    combined.mkdir(parents=True)
+    if leftover == "temporary_only":
+        (combined / "_temporary" / "0").mkdir(parents=True)
+    res = run_extraction(spark, docs, media, ExtractConfig(),
+                         str(tmp_path / "out"), run_id="r1", resume=True)
+    got = res.groupBy("doc_id").count().collect()
+    assert all(r["count"] == 1 for r in got)
+    assert {r["doc_id"] for r in got} == set(docs_pdf["doc_id"])
+
+
 def test_malformed_documents_never_kill_the_job(spark):
     """Corrupt inputs become 'error'/'no_tables' status rows — a 100 TB
     job must survive any single bad document (SURVEY.md §7 risk:

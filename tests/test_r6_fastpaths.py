@@ -228,7 +228,7 @@ def test_fixture_pages_take_the_shortcut(monkeypatch):
     imgs = _fixture_images()
     expected = {name: detect_grid(g) for name, g in imgs.items()}
 
-    def boom(gray):
+    def boom(gray, z=None):
         raise AssertionError("adaptive-window fallback reached")
 
     monkeypatch.setattr(imageops, "_bilevel_mask01", boom)
