@@ -33,7 +33,7 @@ GEN_SCHEMA = StructType([
     StructField("payload", BinaryType()),
 ])
 
-GEN_VERSION = "v4"  # bump to invalidate caches when generation changes
+GEN_VERSION = "v5"  # bump to invalidate caches when generation changes
 
 
 def _generate(batches):

@@ -22,10 +22,25 @@ The engine's input is the BASELINE.json ``input_hint`` shape:
 
 * ``kind='media'`` — one rendered page raster; ``media_ref`` keys a row of
   the side table ``media(media_ref string, doc_id string, page int,
-  payload binary)``. The payload is an npz archive holding the grayscale
-  raster, page geometry, and (for this sandbox, which has no Tesseract)
-  the deterministic OCR word layer a real OCR backend would produce — see
-  ``ocr.py`` for the backend seam.
+  payload binary)``. The payload holds the grayscale raster, page
+  geometry, and the deterministic OCR word layer a real OCR backend would
+  produce (see ``ocr.py`` for the backend seam), in one flat layout::
+
+      header   struct '<4sBiIIIIddd': magic b'XPM\x01' (format version in
+               the last byte), bilevel flag, page, h, w, word count n,
+               text byte count, dpi, page width and height in points
+      body     ONE raw-deflate stream (wbits=-15) of
+               pixels    packbits(image > 127) if bilevel, else h*w uint8
+               columns   9 x n int32 LE: left top width height conf
+                         block par line word
+               offsets   n int32 LE end offsets of each word's text
+               text      the words' UTF-8 bytes, concatenated
+
+  Decode is one ``zlib.decompress`` plus ``np.frombuffer`` slices and
+  never deserializes Python objects. A payload with a bad magic,
+  undecodable deflate, a body length the header does not imply, or text
+  offsets that decrease or miss the declared byte count raises
+  ``ValueError``, which stage 1 records as an 'error' status row.
 
 Output ``documents_extracted`` uses the same spans schema: the winning
 strategy's tables re-serialized as an ordered span sequence (the equality
@@ -38,9 +53,6 @@ surface — kind, text, media_ref, order):
 
 from __future__ import annotations
 
-import io
-import pickle
-import re
 import struct
 import zlib
 from dataclasses import dataclass
@@ -48,6 +60,7 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 
+from . import imageops
 from .table import Table
 
 TEXT = "text"
@@ -85,19 +98,10 @@ class GlyphRuns:
 
 def decode_text_span(text: str) -> GlyphRuns:
     """Parse the glyph-run serialization back into numpy columns."""
-    lines = text.split("\n")
-    head = lines[0]
+    head, _, rest = text.partition("\n")
     if not head.startswith("p="):
         raise ValueError(f"bad text span header: {head!r}")
-    page = int(head[2:])
-    n = len(lines) - 1
-    x = np.empty(n); y = np.empty(n); w = np.empty(n); h = np.empty(n)
-    toks = np.empty(n, dtype=object)
-    for i, ln in enumerate(lines[1:]):
-        xs, ys, ws, hs, tok = ln.split("|", 4)
-        x[i] = float(xs); y[i] = float(ys); w[i] = float(ws); h[i] = float(hs)
-        toks[i] = tok
-    return GlyphRuns(page, x, y, w, h, toks)
+    return decode_glyph_blob(int(head[2:]), rest)
 
 
 def decode_glyph_blob(page: int, blob: str | None) -> GlyphRuns:
@@ -126,172 +130,83 @@ class PagePayload:
     """One page's raster + OCR word layer.
 
     ``words`` (the OCR_WORD_COLS frame) is constructed lazily from
-    ``word_arrays`` when decode supplied raw columns — building a pandas
-    frame per payload was a measured decode hot spot, and pages without
-    words never need one."""
+    ``word_arrays`` — building a pandas frame per payload was a measured
+    decode hot spot, and pages without words never need one."""
 
     def __init__(self, page: int, image: np.ndarray, dpi: float,
                  page_width_pt: float, page_height_pt: float,
-                 words: pd.DataFrame | None = None,
-                 word_arrays: dict | None = None):
+                 word_arrays: dict):
         self.page = page
         self.image = image                  # uint8 grayscale raster
         self.dpi = dpi                      # pixels = points*dpi/72
         self.page_width_pt = page_width_pt
         self.page_height_pt = page_height_pt
-        self._words = words
+        self._words = None
         self._word_arrays = word_arrays
 
     @property
     def words(self) -> pd.DataFrame:
         if self._words is None:
-            wa = self._word_arrays
-            if wa is None:
-                wa = {c: [] for c in OCR_WORD_COLS}
-            self._words = pd.DataFrame(wa, copy=False)
+            self._words = pd.DataFrame(self._word_arrays, copy=False)
         return self._words
+
+
+# magic+version, bilevel, page, h, w, word count, text bytes, dpi, page w/h pt
+_HDR = struct.Struct("<4sBiIIIIddd")
+_MAGIC = b"XPM\x01"
+_INT_COLS = [c for c in OCR_WORD_COLS if c != "text"]
 
 
 def encode_media_payload(page: int, image: np.ndarray, dpi: float,
                          page_width_pt: float, page_height_pt: float,
                          words: pd.DataFrame | None = None) -> bytes:
-    """Serialize a page raster + OCR word layer as compressed npz bytes."""
+    """Serialize a page raster + OCR word layer (layout: module docstring)."""
     if words is None:
         words = pd.DataFrame({c: [] for c in OCR_WORD_COLS})
     image = np.ascontiguousarray(image, dtype=np.uint8)
-    # bilevel rasters (the common scanned-page case) pack 8 pixels/byte:
-    # decode is a 0.05 ms unpackbits instead of a ~3 ms zlib inflate
-    vals = np.unique(image)
-    bilevel = len(vals) <= 2 and set(vals.tolist()) <= {0, 255}
-    img_fields = (
-        {"image_bits": np.packbits(image > 127),
-         "image_shape": np.asarray(image.shape, dtype=np.int64)}
-        if bilevel else {"image": image})
-    buf = io.BytesIO()
-    np.savez_compressed(
-        buf,
-        page=np.int64(page),
-        **img_fields,
-        dpi=np.float64(dpi),
-        page_width_pt=np.float64(page_width_pt),
-        page_height_pt=np.float64(page_height_pt),
-        ocr_left=words["left"].to_numpy(np.int32),
-        ocr_top=words["top"].to_numpy(np.int32),
-        ocr_width=words["width"].to_numpy(np.int32),
-        ocr_height=words["height"].to_numpy(np.int32),
-        ocr_conf=words["conf"].to_numpy(np.int32),
-        ocr_block=words["block"].to_numpy(np.int32),
-        ocr_par=words["par"].to_numpy(np.int32),
-        ocr_line=words["line"].to_numpy(np.int32),
-        ocr_word=words["word"].to_numpy(np.int32),
-        ocr_text=np.asarray(words["text"].tolist(), dtype=object),
-    )
-    return buf.getvalue()
-
-
-# --- minimal npz reader -----------------------------------------------------
-# np.load on an npz archive pays per-member zipfile.open + npy header
-# ast.literal_eval; at one payload per page that machinery was a measured
-# ~20% of stage-1 kernel CPU. The layout np.savez_compressed writes is a
-# plain sequential zip (seekable sink → sizes in the local headers, no
-# data descriptors), so a linear local-header walk + zlib + np.frombuffer
-# reads the identical bytes; any structural surprise falls back to np.load.
-
-_NPY_HDR_RE = re.compile(
-    rb"'descr': '([^']+)', 'fortran_order': (False|True), "
-    rb"'shape': \(([0-9, ]*)\)")
-
-
-def _parse_npy(buf: bytes) -> np.ndarray:
-    if buf[:6] != b"\x93NUMPY":
-        raise ValueError("not npy")
-    if buf[6] == 1:
-        off = 10 + struct.unpack_from("<H", buf, 8)[0]
-    else:
-        off = 12 + struct.unpack_from("<I", buf, 8)[0]
-    m = _NPY_HDR_RE.search(buf[:off])
-    if m is None:
-        raise ValueError("npy header")
-    descr = m.group(1).decode()
-    shape = tuple(int(x) for x in m.group(3).split(b",") if x.strip())
-    if descr == "|O":
-        return pickle.loads(buf[off:])
-    a = np.frombuffer(buf, dtype=np.dtype(descr), offset=off)
-    order = "F" if m.group(2) == b"True" else "C"
-    return a.reshape(shape, order=order)
-
-
-def _fast_npz(data: bytes) -> dict[str, np.ndarray]:
-    out: dict[str, np.ndarray] = {}
-    off = 0
-    n = len(data)
-    while off + 30 <= n and data[off:off + 4] == b"PK\x03\x04":
-        flags, method = struct.unpack_from("<HH", data, off + 6)
-        csize, usize = struct.unpack_from("<II", data, off + 18)
-        nlen, elen = struct.unpack_from("<HH", data, off + 26)
-        if flags & 0x08:
-            raise ValueError("streamed member")  # → np.load fallback
-        name = data[off + 30:off + 30 + nlen].decode()
-        if csize == 0xFFFFFFFF or usize == 0xFFFFFFFF:
-            # numpy writes with force_zip64: real sizes live in the 0x0001
-            # extra field (uncompressed first, then compressed, 8B each,
-            # present only for the 0xFFFFFFFF-masked header fields)
-            e0 = off + 30 + nlen
-            end = e0 + elen
-            found = False
-            while e0 + 4 <= end:
-                fid, flen = struct.unpack_from("<HH", data, e0)
-                if fid == 0x0001:
-                    p = e0 + 4
-                    if usize == 0xFFFFFFFF:
-                        usize = struct.unpack_from("<Q", data, p)[0]
-                        p += 8
-                    if csize == 0xFFFFFFFF:
-                        csize = struct.unpack_from("<Q", data, p)[0]
-                    found = True
-                    break
-                e0 += 4 + flen
-            if not found:
-                raise ValueError("zip64 sizes missing")
-        start = off + 30 + nlen + elen
-        raw = data[start:start + csize]
-        buf = zlib.decompress(raw, -15) if method == 8 else raw
-        if not name.endswith(".npy"):
-            raise ValueError("unexpected member")
-        out[name[:-4]] = _parse_npy(buf)
-        off = start + csize
-    if not out:
-        raise ValueError("no members")
-    return out
+    h, w = image.shape
+    bilevel = imageops._is_bilevel(image)
+    pixels = np.packbits(image > 127) if bilevel else image
+    cols = np.array([words[c].to_numpy(np.int32) for c in _INT_COLS], "<i4")
+    texts = [str(t).encode() for t in words["text"]]
+    ends = np.cumsum([len(t) for t in texts], dtype="<i4")
+    text = b"".join(texts)
+    z = zlib.compressobj(wbits=-15)
+    body = z.compress(b"".join([pixels.tobytes(), cols.tobytes(),
+                                ends.tobytes(), text])) + z.flush()
+    return _HDR.pack(_MAGIC, bilevel, page, h, w, len(texts), len(text), dpi,
+                     page_width_pt, page_height_pt) + body
 
 
 def decode_media_payload(payload: bytes) -> PagePayload:
+    """Inverse of ``encode_media_payload``; any malformed payload raises
+    ValueError (stage 1 turns it into an 'error' status row)."""
+    if len(payload) < _HDR.size:
+        raise ValueError("media payload: truncated header")
+    magic, bilevel, page, h, w, n, nt, dpi, pw, ph = _HDR.unpack_from(payload)
+    if magic != _MAGIC:
+        raise ValueError("media payload: bad magic")
     try:
-        z = _fast_npz(payload)
-    except Exception:
-        with np.load(io.BytesIO(payload), allow_pickle=True) as zf:
-            z = {k: zf[k] for k in zf.files}
-    word_arrays = {
-        "left": z["ocr_left"], "top": z["ocr_top"],
-        "width": z["ocr_width"], "height": z["ocr_height"],
-        "conf": z["ocr_conf"], "text": list(z["ocr_text"]),
-        "block": z["ocr_block"], "par": z["ocr_par"],
-        "line": z["ocr_line"], "word": z["ocr_word"],
-    }
-    if "image_bits" in z:
-        h, w = (int(v) for v in z["image_shape"])
-        image = (np.unpackbits(z["image_bits"], count=h * w)
-                 .reshape(h, w) * np.uint8(255))
-    else:
-        image = np.ascontiguousarray(z["image"])  # writable (frombuffer view)
-    return PagePayload(
-        page=int(z["page"]),
-        image=image,
-        dpi=float(z["dpi"]),
-        page_width_pt=float(z["page_width_pt"]),
-        page_height_pt=float(z["page_height_pt"]),
-        word_arrays=word_arrays,
-    )
+        body = zlib.decompress(memoryview(payload)[_HDR.size:], -15)
+    except zlib.error as e:
+        raise ValueError(f"media payload: {e}") from None
+    npx = (h * w + 7) // 8 if bilevel else h * w
+    if len(body) != npx + 40 * n + nt:
+        raise ValueError("media payload: body length mismatch")
+    cols = np.frombuffer(body, "<i4", 9 * n, npx).reshape(9, n)
+    ends = np.frombuffer(body, "<i4", n, npx + 36 * n).tolist()
+    starts = [0] + ends[:-1]
+    if (ends[-1] if n else 0) != nt or any(
+            b < a for a, b in zip(starts, ends)):
+        raise ValueError("media payload: bad text offsets")
+    text = body[npx + 40 * n:]
+    word_arrays = dict(zip(_INT_COLS, cols))
+    word_arrays["text"] = [text[a:b].decode() for a, b in zip(starts, ends)]
+    pixels = np.frombuffer(body, np.uint8, npx)
+    image = (np.unpackbits(pixels, count=h * w).reshape(h, w) * np.uint8(255)
+             if bilevel else pixels.reshape(h, w))
+    return PagePayload(page, image, dpi, pw, ph,
+                       {c: word_arrays[c] for c in OCR_WORD_COLS})
 
 
 # ---------------------------------------------------------------------------

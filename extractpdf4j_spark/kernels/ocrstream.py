@@ -27,15 +27,13 @@ Re-expresses OcrStreamParser.java over a page raster payload:
 Internal representation: a page's words are ~tens of rows, so the hot
 path runs on plain Python lists extracted ONCE from the word table
 (per-line pandas frames cost more in object construction than the whole
-page's matching work — measured 2x kernel time at bench scale). The
-public pandas-facing helpers below are thin adapters over the same
-list-based cores so tests and the kernel exercise identical logic.
+page's matching work — measured 2x kernel time at bench scale). Tests
+call the same ``_*_core`` functions the kernel runs.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from .. import imageops
 from ..docmodel import PagePayload
@@ -202,58 +200,6 @@ def _locate_clamped(bounds: list[float], x: float) -> int:
         if bounds[i] <= x < bounds[i + 1]:
             return i
     return max(0, len(bounds) - 2)
-
-
-# ---------------------------------------------------------------------------
-# Public pandas-facing helpers (tests / oracle parity surface)
-# ---------------------------------------------------------------------------
-
-def _line_from_frame(ln: pd.DataFrame) -> _Line:
-    if "_norm" in ln.columns:
-        norms = ln["_norm"].tolist()
-    else:
-        norms = [normalize_alpha(str(t)) for t in ln["text"]]
-    return _Line(ln["left"].tolist(), ln["top"].tolist(),
-                 ln["width"].tolist(), ln["height"].tolist(),
-                 [str(t) for t in ln["text"]], norms)
-
-
-def group_lines(words: pd.DataFrame) -> list[pd.DataFrame]:
-    """Group words into logical lines (OcrStreamParser.java:153-158)."""
-    if len(words) == 0:
-        return []
-    # first-appearance order of (block,par,line), then sort lines by min
-    # top (stable), words inside each line by left (stable).
-    # groupby(sort=False) preserves first-appearance key order and
-    # intra-group row order — one pass instead of a mask per key.
-    key = (words["block"].astype(str) + ":" + words["par"].astype(str)
-           + ":" + words["line"].astype(str))
-    lines = [g for _, g in words.groupby(key.to_numpy(), sort=False)]
-    lines.sort(key=lambda ln: int(ln["top"].min()))
-    return [ln.sort_values("left", kind="stable") for ln in lines]
-
-
-def looks_like_header(line: pd.DataFrame) -> bool:
-    """OcrStreamParser.java:338-347 — >=3 words hitting any target."""
-    return _looks_like_header_core(_line_from_frame(line).norm)
-
-
-def header_anchored_bounds(lines: list[pd.DataFrame], page_width: int) -> list[float] | None:
-    """OcrStreamParser.java:246-279."""
-    return _header_anchored_bounds_core(
-        [_line_from_frame(ln) for ln in lines], page_width)
-
-
-def infer_separators(lines: list[pd.DataFrame], page_width: int) -> list[int]:
-    """OcrStreamParser.java:357-387 (Java int division throughout)."""
-    return _infer_separators_core(
-        [_line_from_frame(ln) for ln in lines], page_width)
-
-
-def matches_required_headers(line: pd.DataFrame, required: tuple[str, ...]) -> bool:
-    """OcrStreamParser.matchRequiredHeaders:301-313 (equality or
-    editDistance<=1 — note: NO containment rule here)."""
-    return _matches_required_core(_line_from_frame(line).norm, required)
 
 
 # ---------------------------------------------------------------------------

@@ -34,7 +34,8 @@ from pyspark.sql.types import (BinaryType, IntegerType, StringType,
 from .docmodel import OCR_WORD_COLS, encode_media_payload, encode_text_span
 
 # one decoded row per span the PDF produces; media rows additionally
-# carry the npz payload for the media side table
+# carry the media payload (docmodel.encode_media_payload's flat layout)
+# for the media side table
 DECODED_SCHEMA = StructType([
     StructField("doc_id", StringType()),
     StructField("kind", StringType()),       # text | media | empty

@@ -116,6 +116,21 @@ def test_min_score_gate(spark, corpus):
     assert json.loads(row["spans_json"]) == []
 
 
+def test_page_work_plan_joins_pages_by_shuffle_hash(spark, corpus):
+    """The (doc_id, page) full-outer page join runs as the hinted
+    ShuffledHashJoin, and the executed plan holds no sort-merge join
+    (the sorts of metadata rows it replaced were the cost)."""
+    from extractpdf4j_spark.pipeline import build_page_work
+    docs, media, _, _ = corpus
+    work = build_page_work(docs, media, ExtractConfig(), num_partitions=4)
+    work.collect()
+    plan = work._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]  # AQE: the plan that ran
+    assert any("ShuffledHashJoin" in ln and "FullOuter" in ln
+               for ln in final.splitlines()), final
+    assert "SortMergeJoin" not in final, final
+
+
 def test_resume_checkpoint(spark, corpus, tmp_path):
     """Kill-and-restart semantics: second run only processes missing
     documents; no duplicates, no missing."""

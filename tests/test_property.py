@@ -8,9 +8,8 @@ import pandas as pd
 from hypothesis import given, settings, strategies as st
 
 from extractpdf4j_spark.kernels.stream import stream_extract_page
-from extractpdf4j_spark.kernels.ocrstream import (group_lines,
-                                                  header_anchored_bounds,
-                                                  infer_separators)
+from extractpdf4j_spark.kernels.ocrstream import (
+    _group_lines_lists, _header_anchored_bounds_core, _infer_separators_core)
 from extractpdf4j_spark.table import Table
 
 import oracle
@@ -67,7 +66,9 @@ def _words_df(entries):
 @given(st.lists(word_box, min_size=1, max_size=40), st.integers(200, 900))
 def test_separator_inference_matches_oracle(entries, page_width):
     df = _words_df(entries)
-    lines_k = group_lines(df)
+    lines_k = _group_lines_lists(
+        *(df[c].tolist() for c in ("left", "top", "width", "height", "text",
+                                   "block", "par", "line")))
     lines_o = []
     groups = {}
     for w in df.to_dict("records"):
@@ -76,11 +77,11 @@ def test_separator_inference_matches_oracle(entries, page_width):
     for ln in lines_o:
         ln.sort(key=lambda w: w["left"])
 
-    got = infer_separators(lines_k, page_width)
+    got = _infer_separators_core(lines_k, page_width)
     want = oracle._infer_separators(lines_o, page_width)
     assert got == want
 
-    got_b = header_anchored_bounds(lines_k, page_width)
+    got_b = _header_anchored_bounds_core(lines_k, page_width)
     want_b = oracle._header_anchored_bounds(lines_o, page_width)
     assert got_b == want_b
 

@@ -1,7 +1,11 @@
 """Round-6 optimization fast paths: each must be bit-identical to the
-generic/reference path it replaces (no Spark session needed)."""
+generic/reference path it replaces. Also the media payload codec: exact
+round trips, ValueError on malformed bytes, and nothing unpickled."""
 
+import ast
 import io
+import pathlib
+import zlib
 
 import numpy as np
 import pandas as pd
@@ -9,7 +13,8 @@ import pytest
 from hypothesis import given, settings, strategies as st
 
 from extractpdf4j_spark import fixtures, imageops
-from extractpdf4j_spark.docmodel import (OCR_WORD_COLS, decode_media_payload,
+from extractpdf4j_spark.docmodel import (OCR_WORD_COLS, _HDR,
+                                         decode_media_payload,
                                          encode_media_payload)
 from extractpdf4j_spark.kernels.lattice import detect_grid
 from extractpdf4j_spark.textnorm import edit_distance, edit_distance_le1
@@ -242,59 +247,155 @@ def test_fixture_pages_take_the_shortcut(monkeypatch):
     assert len(expected["grid_scanned"][1]) > 2
 
 
-def _ref_decode(payload):
-    """np.load-based reference decode (the pre-r6 implementation)."""
-    with np.load(io.BytesIO(payload), allow_pickle=True) as z:
-        words = pd.DataFrame({
-            "left": z["ocr_left"], "top": z["ocr_top"],
-            "width": z["ocr_width"], "height": z["ocr_height"],
-            "conf": z["ocr_conf"], "text": list(z["ocr_text"]),
-            "block": z["ocr_block"], "par": z["ocr_par"],
-            "line": z["ocr_line"], "word": z["ocr_word"],
-        })
-        if "image_bits" in z:
-            h, w = (int(v) for v in z["image_shape"])
-            image = (np.unpackbits(z["image_bits"], count=h * w)
-                     .reshape(h, w) * np.uint8(255))
-        else:
-            image = z["image"]
-        return (int(z["page"]), image, float(z["dpi"]),
-                float(z["page_width_pt"]), float(z["page_height_pt"]), words)
+# -- media payload codec ------------------------------------------------------
+
+def _words(texts):
+    n = len(texts)
+    cols = {c: np.arange(n, dtype=np.int64) * (i + 3) - 2
+            for i, c in enumerate(OCR_WORD_COLS) if c != "text"}
+    return pd.DataFrame({**cols, "text": texts})[OCR_WORD_COLS]
 
 
-@pytest.mark.parametrize("bilevel", [True, False])
-def test_fast_npz_decode_matches_np_load(bilevel):
-    if bilevel:
-        img = (np.arange(120 * 80).reshape(120, 80) % 2 * 255).astype(np.uint8)
-    else:
-        img = (np.arange(120 * 80).reshape(120, 80) % 251).astype(np.uint8)
-    words = pd.DataFrame({
-        "left": np.array([3, 40], dtype=np.int32),
-        "top": np.array([5, 5], dtype=np.int32),
-        "width": np.array([20, 25], dtype=np.int32),
-        "height": np.array([10, 10], dtype=np.int32),
-        "conf": np.array([90, 80], dtype=np.int32),
-        "text": ["hello", "world"],
-        "block": np.array([1, 1], dtype=np.int32),
-        "par": np.array([1, 1], dtype=np.int32),
-        "line": np.array([1, 1], dtype=np.int32),
-        "word": np.array([1, 2], dtype=np.int32),
-    })[OCR_WORD_COLS]
-    payload = encode_media_payload(4, img, 144.0, 612.0, 792.0, words)
-    page, rimg, dpi, wpt, hpt, rwords = _ref_decode(payload)
+_TEXTS = ["héllo wörld", "", "a|b|c", "日本語", "|", "plain"]
+_CODEC_CASES = {
+    "bilevel": ((np.arange(120 * 80).reshape(120, 80) % 2 * 255), _TEXTS),
+    "grayscale": ((np.arange(120 * 80).reshape(120, 80) % 251), _TEXTS),
+    "bilevel_13x11": ((np.arange(13 * 11).reshape(13, 11) % 3 == 0) * 255,
+                      _TEXTS),
+    "grayscale_13x11": (np.arange(13 * 11).reshape(13, 11), ["x"]),
+    "bilevel_1x1": (np.zeros((1, 1)), ["solo"]),
+    "grayscale_1x1": (np.full((1, 1), 7), _TEXTS),
+    "zero_words": (np.full((9, 9), 255), []),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_CODEC_CASES))
+def test_media_payload_round_trip(case):
+    img, texts = _CODEC_CASES[case]
+    img = img.astype(np.uint8)
+    words = _words(texts)
+    payload = encode_media_payload(4, img, 144.0, 612.5, 792.25, words)
+    assert _HDR.unpack_from(payload)[1] == (not case.startswith("grayscale"))
     p = decode_media_payload(payload)
     assert (p.page, p.dpi, p.page_width_pt, p.page_height_pt) == \
-        (page, dpi, wpt, hpt)
-    assert np.array_equal(p.image, rimg)
-    pd.testing.assert_frame_equal(p.words.reset_index(drop=True), rwords)
+        (4, 144.0, 612.5, 792.25)
+    assert p.image.dtype == np.uint8 and np.array_equal(p.image, img)
+    want = words.astype({c: np.int32 for c in OCR_WORD_COLS if c != "text"})
+    pd.testing.assert_frame_equal(p.words, want)
 
 
-def test_fast_npz_decode_empty_words():
-    img = np.zeros((10, 10), dtype=np.uint8)
-    payload = encode_media_payload(1, img, 72.0, 100.0, 100.0, None)
-    p = decode_media_payload(payload)
-    assert len(p.words) == 0
-    assert list(p.words.columns) == OCR_WORD_COLS
+def test_media_payload_default_words_empty():
+    p = decode_media_payload(
+        encode_media_payload(1, np.zeros((10, 10), np.uint8), 72.0, 1.0, 1.0))
+    assert len(p.words) == 0 and list(p.words.columns) == OCR_WORD_COLS
+
+
+def _with_body(payload, edit):
+    """Re-deflate ``payload``'s body after ``edit(bytearray)``."""
+    body = bytearray(zlib.decompress(payload[_HDR.size:], -15))
+    edit(body)
+    z = zlib.compressobj(wbits=-15)
+    return payload[:_HDR.size] + z.compress(bytes(body)) + z.flush()
+
+
+def _set_ends(ends):
+    def edit(body):
+        off = len(body) - 5 - 4 * len(ends)  # texts "abc" + "de" = 5 bytes
+        body[off:off + 4 * len(ends)] = np.array(ends, "<i4").tobytes()
+    return edit
+
+
+def _old_npz(**extra):
+    buf = io.BytesIO()
+    np.savez_compressed(buf, page=np.int64(1),
+                        image=np.zeros((4, 4), np.uint8), **extra)
+    return buf.getvalue()
+
+
+def _malformed(case):
+    good = encode_media_payload(2, np.full((16, 12), 255, np.uint8), 72.0,
+                                100.0, 100.0, _words(["abc", "de"]))
+    if case == "truncated_header":
+        return good[:_HDR.size - 1]
+    if case == "bad_magic":
+        return b"XPM\x02" + good[4:]
+    if case == "length_mismatch":                   # 4 bytes past the text
+        return _with_body(good, lambda body: body.extend(b"\0" * 4))
+    if case == "decreasing_offsets":
+        return _with_body(good, _set_ends([6, 5]))
+    if case == "offsets_miss_text_end":
+        return _with_body(good, _set_ends([3, 4]))
+    if case == "garbage_deflate":
+        return good[:_HDR.size] + b"\xff" * 32
+    if case == "npz":
+        return _old_npz(ocr_left=np.zeros(0, np.int32))
+    raise AssertionError(case)
+
+
+@pytest.mark.parametrize("case", [
+    "truncated_header", "bad_magic", "length_mismatch", "decreasing_offsets",
+    "offsets_miss_text_end", "garbage_deflate", "npz"])
+def test_media_payload_malformed_raises_value_error(case):
+    with pytest.raises(ValueError):
+        decode_media_payload(_malformed(case))
+
+
+class _TouchOnUnpickle:
+    """Unpickling this object creates ``path`` (stands in for any code a
+    crafted payload could run on an executor)."""
+
+    def __init__(self, path):
+        self.path = path
+
+    def __reduce__(self):
+        return (open, (self.path, "w"))
+
+
+def test_pickled_npz_payload_is_an_error_and_runs_nothing(spark, tmp_path):
+    from extractpdf4j_spark.config import ExtractConfig
+    from extractpdf4j_spark.pipeline import (DOCUMENTS_SCHEMA, MEDIA_SCHEMA,
+                                             extract)
+    marker = tmp_path / "unpickled"
+    z = np.zeros(1, np.int32)
+    crafted = _old_npz(
+        dpi=np.float64(72.0), page_width_pt=np.float64(100.0),
+        page_height_pt=np.float64(100.0),
+        **{f"ocr_{c}": z for c in OCR_WORD_COLS if c != "text"},
+        ocr_text=np.array([_TouchOnUnpickle(str(marker))], dtype=object))
+    valid = encode_media_payload(1, np.full((4, 4), 255, np.uint8), 72.0,
+                                 100.0, 100.0)
+    docs = spark.createDataFrame(
+        [(d, [{"kind": "media", "text": "", "media_ref": d, "offset": 0}])
+         for d in ("crafted", "valid")], schema=DOCUMENTS_SCHEMA)
+    media = spark.createDataFrame(
+        [("crafted", "crafted", 1, crafted), ("valid", "valid", 1, valid)],
+        schema=MEDIA_SCHEMA)
+    out = {r["doc_id"]: r["status"]
+           for r in extract(docs, media, ExtractConfig()).collect()}
+    assert out["crafted"] == "error" and out["valid"] != "error"
+    assert not marker.exists()
+
+
+def test_package_never_unpickles():
+    """No package module imports pickle or passes allow_pickle (other
+    than a literal False)."""
+    pkg = pathlib.Path(imageops.__file__).parent
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Import):
+                bad = any(a.name.split(".")[0] == "pickle" for a in node.names)
+            elif isinstance(node, ast.ImportFrom):
+                bad = (node.module or "").split(".")[0] == "pickle"
+            elif isinstance(node, ast.keyword):
+                bad = node.arg == "allow_pickle" and not (
+                    isinstance(node.value, ast.Constant)
+                    and node.value.value is False)
+            else:
+                continue
+            if bad:
+                offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert offenders == []
 
 
 def test_edit_distance_le1_matches_reference():

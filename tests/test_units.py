@@ -15,9 +15,7 @@ from extractpdf4j_spark.textnorm import (edit_distance, is_likely_numeric,
                                          normalize_date)
 from extractpdf4j_spark.kernels.stream import stream_extract_page
 from extractpdf4j_spark.kernels.ocrstream import (_locate_clamped,
-                                                  matches_required_headers)
-
-import pandas as pd
+                                                  _matches_required_core)
 
 
 # ---- PageRangeTest.java:7-17 ----------------------------------------------
@@ -140,28 +138,22 @@ def test_locate_clamps_to_last_column():
 
 
 def _line(texts):
-    return pd.DataFrame({
-        "left": range(len(texts)), "top": [0] * len(texts),
-        "width": [1] * len(texts), "height": [1] * len(texts),
-        "conf": [90] * len(texts), "text": texts,
-        "block": [1] * len(texts), "par": [1] * len(texts),
-        "line": [1] * len(texts), "word": range(1, len(texts) + 1),
-    })
+    return [normalize_alpha(t) for t in texts]
 
 
 def test_required_headers_all_present():
     line = _line(["Date", "Description", "Balance"])
-    assert matches_required_headers(line, ("date", "description", "balance"))
+    assert _matches_required_core(line, ("date", "description", "balance"))
 
 
 def test_required_headers_missing_one():
     line = _line(["Date", "Description"])
-    assert not matches_required_headers(line, ("date", "description", "balance"))
+    assert not _matches_required_core(line, ("date", "description", "balance"))
 
 
 def test_required_headers_small_typos():
     line = _line(["Datc", "Descriptlon", "Balance"])
-    assert matches_required_headers(line, ("date", "description", "balance"))
+    assert _matches_required_core(line, ("date", "description", "balance"))
 
 
 # ---- textnorm (OcrStreamParser.java:315-336,397-438) -----------------------
