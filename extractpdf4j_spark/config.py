@@ -7,10 +7,8 @@ Mirrors the reference's parser builder/annotation config surface:
                               extracts whole documents)
 * stripText                 — BaseParser.java:67 (default true)
 * lattice dpi / min cell    — LatticeParser.java:47-56 (300f, 20x10)
-* ocrstream dpi             — OcrStreamParser.java:32 (450f)
 * hybrid minScore           — HybridParser.java:51 (0.0)
 * requiredHeaders           — OcrStreamParser.java:35 (empty)
-* OCR PSM sweep             — Ocr.java:30 ("6","4","11","3")
 
 The reference's ``System.exit`` paths on minScore/headers failures
 (HybridParser.java:198-201, OcrStreamParser.java:69-72) become per-document
@@ -36,12 +34,10 @@ class ExtractConfig:
     pages: str = "all"
     strip_text: bool = True
     lattice_dpi: float = 300.0
-    ocr_dpi: float = 450.0
     min_score: float = 0.0
     min_cell_w: float = 20.0
     min_cell_h: float = 10.0
     required_headers: tuple[str, ...] = ()
-    ocr_psms: tuple[int, ...] = (6, 4, 11, 3)
     # Tesseract config parity with the reference's tess.* system
     # properties (Ocr.java:189-196): language ("eng", "eng+fra", ...),
     # page segmentation mode, and OCR engine mode
@@ -60,9 +56,6 @@ class ExtractConfig:
     # confine the stream parser's glyphs
     columns: tuple[float, ...] = ()
     table_areas: tuple[tuple[float, float, float, float], ...] = ()
-    # scale knobs (no reference analog — Spark-side physical tuning)
-    arrow_batch_docs: int = 128
-    shuffle_partitions: int | None = None
 
     def config_hash(self) -> str:
         """Stable hash recorded in per-partition lineage."""

@@ -305,16 +305,27 @@ def _open_count_rows(sub01: np.ndarray, k: int) -> np.ndarray:
     return op.sum(axis=1)
 
 
+def _line_candidates(cov: np.ndarray, length: int) -> np.ndarray:
+    """Lines whose opened coverage can still exceed 35%. A 1-D opening
+    adds at most ONE pixel to a line: with an even k the anchor k//2
+    (the same for erode and dilate) shifts every run one pixel to the
+    right, and a run that starts at the border keeps its start (the
+    erosion pads with 1), so it grows by one. Raw coverage within one
+    pixel of the threshold must therefore still be opened exactly."""
+    return np.where(cov > length * 0.35 - 1)[0]
+
+
 def detect_line_positions(gray: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
     """Fused binarize → morphological-open → projection for BOTH axes,
     without ever materializing the full binarized image.
 
     Pass A streams binarize strips accumulating raw per-row/per-column
     coverage; passes B/C re-binarize only the candidate rows/columns
-    (opening removes pixels, so sub-35% raw coverage can never pass) and
-    apply the exact 1-D opening there. Bit-identical to
-    ``project_open_lines(binarize_for_lines(gray), k, ...)`` for both
-    axes — pinned by tests against the literal oracle.
+    (see ``_line_candidates``) and apply the exact 1-D opening there.
+    Bit-identical to erode+dilate with a (k,1)/(1,k) kernel then the
+    >35% projection (LatticeParser.java:150-161,268-291) on
+    ``binarize_for_lines(gray)`` for both axes — pinned by tests against
+    the literal oracle.
 
     Bilevel shortcut: ``_bilevel_mask01`` clears a black pixel only when
     its 15x15 window holds >= 217 black pixels, so the mask is the plain
@@ -347,12 +358,12 @@ def detect_line_positions(gray: np.ndarray, k: int) -> tuple[np.ndarray, np.ndar
             row_cov = m01.sum(axis=1, dtype=acc)
             col_cov = m01.sum(axis=0, dtype=acc)
         rows_out = np.empty(0, dtype=np.int64)
-        cand_r = np.where(row_cov > w * 0.35)[0]
+        cand_r = _line_candidates(row_cov, w)
         if len(cand_r):
             keep = _open_count_rows(m01[cand_r], k) > w * 0.35
             rows_out = cand_r[keep]
         cols_out = np.empty(0, dtype=np.int64)
-        cand_c = np.where(col_cov > h * 0.35)[0]
+        cand_c = _line_candidates(col_cov, h)
         if len(cand_c):
             sub = np.ascontiguousarray(m01[:, cand_c].T)
             keep = _open_count_rows(sub, k) > h * 0.35
@@ -369,7 +380,7 @@ def detect_line_positions(gray: np.ndarray, k: int) -> tuple[np.ndarray, np.ndar
         col_cov += m.sum(axis=0)
 
     rows_out = np.empty(0, dtype=np.int64)
-    cand_r = np.where(row_cov > w * 0.35)[0]
+    cand_r = _line_candidates(row_cov, w)
     if len(cand_r):
         # contiguous candidate runs re-binarize as one slab each
         subs = []
@@ -385,7 +396,7 @@ def detect_line_positions(gray: np.ndarray, k: int) -> tuple[np.ndarray, np.ndar
         rows_out = cand_r[keep]
 
     cols_out = np.empty(0, dtype=np.int64)
-    cand_c = np.where(col_cov > h * 0.35)[0]
+    cand_c = _line_candidates(col_cov, h)
     if len(cand_c):
         # column slab = row slab of a transposed NARROW slice (15x15 box
         # mean and the pixelwise threshold are symmetric); only the ±7
@@ -411,52 +422,6 @@ def detect_line_positions(gray: np.ndarray, k: int) -> tuple[np.ndarray, np.ndar
 # ---------------------------------------------------------------------------
 # Line projection / dedupe (lattice)
 # ---------------------------------------------------------------------------
-
-def project_open_lines(bin_img: np.ndarray, k: int, horizontal: bool) -> np.ndarray:
-    """Fused morphological-open + projection line detector.
-
-    Semantically identical to ``erode+dilate with a (k,1)/(1,k) kernel
-    then project_lines`` (LatticeParser.java:150-161,268-291), but
-    exploits two exact properties: a 1-D opening along an axis touches no
-    other rows/columns, and opening only REMOVES pixels — so any line
-    whose raw coverage is already below 35% can never pass. We therefore
-    open only the candidate rows/columns (usually a handful), collapsing
-    the full-image morphology to O(candidates * length)."""
-    m = bin_img > 0
-    if horizontal:
-        cov = m.sum(axis=1)
-        cand = np.where(cov > bin_img.shape[1] * 0.35)[0]
-        if len(cand) == 0:
-            return cand
-        sub = m[cand].astype(np.uint8)
-        er = (_window_count(sub, k, axis=1, pad_value=1) == k).astype(np.uint8)
-        op = _window_count(er, k, axis=1, pad_value=0) > 0
-        keep = op.sum(axis=1) > bin_img.shape[1] * 0.35
-        return cand[keep]
-    cov = m.sum(axis=0)
-    cand = np.where(cov > bin_img.shape[0] * 0.35)[0]
-    if len(cand) == 0:
-        return cand
-    sub = np.ascontiguousarray(m[:, cand].T).astype(np.uint8)
-    er = (_window_count(sub, k, axis=1, pad_value=1) == k).astype(np.uint8)
-    op = _window_count(er, k, axis=1, pad_value=0) > 0
-    keep = op.sum(axis=1) > bin_img.shape[0] * 0.35
-    return cand[keep]
-
-
-def project_lines(bin_img: np.ndarray, horizontal: bool) -> np.ndarray:
-    """Positions whose white-pixel coverage exceeds 35%
-    (LatticeParser.java:268-291: strict ``sum > len*0.35``).
-
-    The reference's O(W*H) per-pixel Java loop is one vectorized
-    reduction here."""
-    m = bin_img > 0
-    if horizontal:
-        cov = m.sum(axis=1)
-        return np.where(cov > bin_img.shape[1] * 0.35)[0]
-    cov = m.sum(axis=0)
-    return np.where(cov > bin_img.shape[0] * 0.35)[0]
-
 
 def dedupe_positions(xs: np.ndarray, tol: int) -> list[int]:
     """Sort then drop neighbors within tol (LatticeParser.java:297-307:

@@ -10,15 +10,12 @@ one-document call the reference's HTTP endpoint served
 
 from __future__ import annotations
 
-from .config import ExtractConfig, MODE_LATTICE, MODE_OCRSTREAM, MODE_STREAM
-from .docmodel import (GlyphRuns, PagePayload, decode_media_payload,
-                       decode_text_span, serialize_tables)
-from .kernels.lattice import lattice_extract_page
-from .kernels.ocrstream import ocrstream_extract_page
-from .kernels.stream import stream_extract_page
-from .ocr import OcrBackend, default_backend
+from .config import ExtractConfig
+from .docmodel import decode_media_payload, decode_text_span, serialize_tables
+from .kernels import page_extractor
+from .ocr import OcrBackend
 from .pagerange import is_all, parse_pages
-from .scoring import pick_strategy, score_cells_vectorized
+from .scoring import STATUS_OK, score_cells_vectorized, select_strategy
 from .table import Table
 
 
@@ -28,8 +25,9 @@ def extract_document(spans: list[dict],
                      backend: OcrBackend | None = None):
     """Extract one interleaved document. Returns (output_spans, status,
     strategy, tables) with the same semantics as the Spark pipeline's
-    per-document result."""
-    backend = backend or default_backend(cfg.tess_lang, cfg.tess_oem)
+    per-document result: the same per-page fan-out
+    (kernels.page_extractor) and selection rule (scoring.select_strategy)."""
+    extract_page = page_extractor(cfg, backend)
     media_payloads = media_payloads or {}
 
     pages: dict[int, list] = {}
@@ -50,44 +48,16 @@ def extract_document(spans: list[dict],
     headers_found = False
     for page_no in page_nos:
         g, payload = pages[page_no]
-        for strat in cfg.strategies():
-            if strat == MODE_STREAM:
-                t = (stream_extract_page(g.x, g.y, g.w, g.tokens,
-                                         cfg.strip_text, cfg.columns,
-                                         cfg.table_areas)
-                     if g is not None else Table([], [], []))
-            elif strat == MODE_LATTICE:
-                t, _ = lattice_extract_page(payload, g, backend,
-                                            cfg.min_cell_w, cfg.min_cell_h)
-            else:
-                t, found = ocrstream_extract_page(payload, backend,
-                                                  cfg.required_headers,
-                                                  psm=cfg.tess_psm)
-                headers_found = headers_found or found
+        for strat, t, _, found in extract_page(g, payload):
+            headers_found = headers_found or found
             if t.nrows > 0:
                 per[strat].append((page_no, t))
 
-    if cfg.required_headers and MODE_OCRSTREAM in per and not headers_found:
-        per[MODE_OCRSTREAM] = []  # OcrStreamParser.java:107-112
-
-    scores = {s: (sum(score_cells_vectorized(t.cells) for _, t in v) / len(v)
-                  if v else 0.0) for s, v in per.items()}
-    if all(not v for v in per.values()):
-        # mirror the pipeline's status branch (pipeline.py _assemble_one):
-        # an ocrstream-only job whose required headers never appeared is
-        # 'headers_missing', not 'no_tables'
-        if (cfg.required_headers and not headers_found
-                and cfg.strategies() == (MODE_OCRSTREAM,)):
-            return [], "headers_missing", "", []
-        return [], "no_tables", "", []
-    if len(cfg.strategies()) > 1:
-        winner = pick_strategy(scores.get(MODE_STREAM, 0.0),
-                               scores.get(MODE_LATTICE, 0.0),
-                               scores.get(MODE_OCRSTREAM, 0.0))
-    else:
-        winner = cfg.strategies()[0]
-    if max(scores.values()) < cfg.min_score:
-        return [], "below_min_score", winner, []
+    status, winner, _ = select_strategy(
+        cfg, {s: [score_cells_vectorized(t.cells) for _, t in v]
+              for s, v in per.items()}, headers_found)
+    if status != STATUS_OK:
+        return [], status, winner, []
     tables = per[winner]
     out = serialize_tables([(p, winner, t) for p, t in tables])
-    return out, "ok", winner, [t for _, t in tables]
+    return out, status, winner, [t for _, t in tables]

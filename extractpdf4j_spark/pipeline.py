@@ -15,11 +15,11 @@ Dataflow (all DataFrame ops; the only Python is Arrow-batched kernels):
         repartition(hash(doc_id, page))     ← page-level units kill doc-size
         |                                     skew (a 500-page scan becomes
         |                                     500 independent tasks' worth)
-        mapInPandas(extract_partition)      ← stage 1: per-page strategy
-        |                                     fan-out (stream/lattice/ocr),
+        mapInPandas(extract_pages)          ← stage 1: per-page strategy
+        |                                     fan-out (kernels.page_extractor),
         |                                     vectorized numpy kernels
-        repartition(doc_id) + mapInPandas   ← stage 2: per-doc scoring,
-        |                                     argmax + tie-break, span
+        repartition(doc_id) + mapInPandas   ← stage 2: per-doc selection
+        |                                     (scoring.select_strategy), span
         |                                     re-serialization, metrics
         write parquet (combined extracted+metrics, append by run)
 
@@ -49,14 +49,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (ArrayType, BinaryType, DoubleType, IntegerType,
                                LongType, StringType, StructField, StructType)
 
-from .config import ExtractConfig, MODE_LATTICE, MODE_OCRSTREAM, MODE_STREAM
+from .config import ExtractConfig, MODE_STREAM
 from .docmodel import decode_glyph_blob, decode_media_payload, serialize_tables
-from .kernels.lattice import lattice_extract_page
-from .kernels.ocrstream import ocrstream_extract_page
-from .kernels.stream import stream_extract_page
-from .ocr import default_backend
+from .kernels import page_extractor
 from .pagerange import is_all, parse_pages
-from .scoring import pick_strategy, score_cells_vectorized
+from .scoring import STATUS_OK, score_cells_vectorized, select_strategy
 from .table import Table
 from . import __version__
 
@@ -111,12 +108,6 @@ COMBINED_SCHEMA = StructType([
 ])
 
 PAGE_MARKER = "_page"
-
-STATUS_OK = "ok"
-STATUS_NO_TABLES = "no_tables"
-STATUS_HEADERS_MISSING = "headers_missing"
-STATUS_BELOW_MIN_SCORE = "below_min_score"
-STATUS_ERROR = "error"
 
 
 # ---------------------------------------------------------------------------
@@ -265,11 +256,8 @@ def build_page_work(docs: DataFrame, media: DataFrame | None,
 # ---------------------------------------------------------------------------
 
 def _make_extract_pages(cfg: ExtractConfig):
-    strategies = cfg.strategies()
-
     def extract_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        backend = default_backend(cfg.tess_lang, cfg.tess_oem,
-                                  cfg.ocr_backend)
+        extract_page = page_extractor(cfg)
         cols = [f.name for f in PAGE_RESULT_SCHEMA.fields]
         for pdf in batches:
             rows: list[tuple] = []
@@ -300,23 +288,10 @@ def _make_extract_pages(cfg: ExtractConfig):
                               else None)
                     payload = (decode_media_payload(t.payload)
                                if t.payload is not None else None)
-                    for strat in strategies:
-                        if strat == MODE_STREAM:
-                            table = (stream_extract_page(
-                                glyphs.x, glyphs.y, glyphs.w, glyphs.tokens,
-                                cfg.strip_text, cfg.columns,
-                                cfg.table_areas) if glyphs is not None
-                                else Table([], [], []))
-                        elif strat == MODE_LATTICE:
-                            table, n_ocr = lattice_extract_page(
-                                payload, glyphs, backend,
-                                cfg.min_cell_w, cfg.min_cell_h)
-                            ocr_fb += n_ocr
-                        else:
-                            table, found = ocrstream_extract_page(
-                                payload, backend, cfg.required_headers,
-                                psm=cfg.tess_psm)
-                            headers_found |= int(found)
+                    for strat, table, n_ocr, found in extract_page(glyphs,
+                                                                   payload):
+                        ocr_fb += n_ocr
+                        headers_found |= int(found)
                         if table.nrows > 0:
                             # score here while the table is in hand — the
                             # selection stage then never parses losers
@@ -351,7 +326,6 @@ def _make_assemble_partition(cfg: ExtractConfig):
     O(arrow batch + largest single doc), never O(partition) — a
     pathological partition cannot OOM the worker."""
     strategies = cfg.strategies()
-    hybrid = len(strategies) > 1
     cols = [f.name for f in COMBINED_SCHEMA.fields]
 
     def assemble_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -373,7 +347,7 @@ def _make_assemble_partition(cfg: ExtractConfig):
                     ("strategy", "score", "page", "cells_json", "col_bounds",
                      "row_bounds", "ocr_fallbacks", "headers_found",
                      "errors", "wall_ms")}
-            out = [_assemble_run(cfg, strategies, hybrid, doc[s], arrs,
+            out = [_assemble_run(cfg, strategies, doc[s], arrs,
                                  int(s), int(e), partition_id)
                    for s, e in zip(starts, ends)]
             return pd.DataFrame(out, columns=cols)
@@ -398,11 +372,11 @@ def _make_assemble_partition(cfg: ExtractConfig):
     return assemble_partition
 
 
-def _assemble_run(cfg: ExtractConfig, strategies, hybrid: bool, doc_id: str,
+def _assemble_run(cfg: ExtractConfig, strategies, doc_id: str,
                   arrs: dict, s: int, e: int, partition_id: int) -> dict:
     """Assemble one document from its contiguous row run [s, e) of the
-    batch's column arrays — same semantics as the previous per-document
-    frame path, minus the frame/mask construction per document."""
+    batch's column arrays: fold its page markers, select the strategy
+    (scoring.select_strategy) and serialize the winner's tables."""
     strat = arrs["strategy"]
     ocr_fallbacks = 0
     headers_found = False
@@ -422,38 +396,12 @@ def _assemble_run(cfg: ExtractConfig, strategies, hybrid: bool, doc_id: str,
         elif st in per_idx:
             per_idx[st].append(i)
 
-    # required-headers gate: the reference returns an empty result for
-    # the WHOLE ocrstream parse when the headers never appear
-    # (OcrStreamParser.java:107-112) — never a process kill.
-    if (cfg.required_headers and MODE_OCRSTREAM in per_idx
-            and not headers_found):
-        per_idx[MODE_OCRSTREAM] = []
-
     score = arrs["score"]
-    scores = {st: (float(np.mean(score[idx])) if idx else 0.0)
-              for st, idx in per_idx.items()}
-
-    if all(len(idx) == 0 for idx in per_idx.values()):
-        if errors > 0:
-            status = STATUS_ERROR
-        elif (cfg.required_headers and not headers_found
-                and strategies == (MODE_OCRSTREAM,)):
-            status = STATUS_HEADERS_MISSING
-        else:
-            status = STATUS_NO_TABLES
-        return _one_row(doc_id, [], status, "", 0, 0,
-                        ocr_fallbacks, 0.0, wall_ms, partition_id)
-
-    if hybrid:
-        winner = pick_strategy(scores.get(MODE_STREAM, 0.0),
-                               scores.get(MODE_LATTICE, 0.0),
-                               scores.get(MODE_OCRSTREAM, 0.0))
-    else:
-        winner = strategies[0]
-    best = max(scores.values())
-    if best < cfg.min_score:
-        # HybridParser.java:251-255 service semantics: empty result.
-        return _one_row(doc_id, [], STATUS_BELOW_MIN_SCORE, winner, 0, 0,
+    status, winner, best = select_strategy(
+        cfg, {st: score[idx] for st, idx in per_idx.items()},
+        headers_found, errors)
+    if status != STATUS_OK:
+        return _one_row(doc_id, [], status, winner, 0, 0,
                         ocr_fallbacks, best, wall_ms, partition_id)
 
     page = arrs["page"]
@@ -465,8 +413,7 @@ def _assemble_run(cfg: ExtractConfig, strategies, hybrid: bool, doc_id: str,
     spans = serialize_tables([(p, winner, t) for p, t in tables])
     cells_parsed = sum(t.nrows * t.ncols for _, t in tables)
     return _one_row(doc_id, spans, STATUS_OK, winner, len(tables),
-                    cells_parsed, ocr_fallbacks, scores[winner],
-                    wall_ms, partition_id)
+                    cells_parsed, ocr_fallbacks, best, wall_ms, partition_id)
 
 
 def _one_row(doc_id, spans, status, strategy, tables_found, cells_parsed,

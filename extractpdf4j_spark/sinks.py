@@ -120,18 +120,13 @@ DEBUG_SCHEMA = StructType([
 
 
 def _make_debug_pages(cfg):
-    from .config import MODE_LATTICE, MODE_OCRSTREAM, MODE_STREAM
     from .docmodel import decode_glyph_blob, decode_media_payload
-    from .kernels.lattice import lattice_extract_page
-    from .kernels.ocrstream import ocrstream_extract_page
-    from .kernels.stream import stream_extract_page
-    from .ocr import default_backend
-    from .table import Table
+    from .kernels import page_extractor
 
     cols = [f.name for f in DEBUG_SCHEMA.fields]
 
     def debug_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        backend = default_backend(cfg.tess_lang, cfg.tess_oem)
+        extract_page = page_extractor(cfg)
         for pdf in batches:
             rows: list[tuple] = []
             for t in pdf.itertuples(index=False):
@@ -157,20 +152,7 @@ def _make_debug_pages(cfg):
                         rows.append((doc_id, page, "", "ocr_words",
                                      payload.words.to_json(orient="records"),
                                      None))
-                    for strat in cfg.strategies():
-                        if strat == MODE_STREAM:
-                            tbl = (stream_extract_page(
-                                glyphs.x, glyphs.y, glyphs.w, glyphs.tokens,
-                                cfg.strip_text, cfg.columns, cfg.table_areas)
-                                if glyphs is not None else Table([], [], []))
-                        elif strat == MODE_LATTICE:
-                            tbl, _ = lattice_extract_page(
-                                payload, glyphs, backend,
-                                cfg.min_cell_w, cfg.min_cell_h)
-                        else:
-                            tbl, _ = ocrstream_extract_page(
-                                payload, backend, cfg.required_headers,
-                                psm=cfg.tess_psm)
+                    for strat, tbl, _, _ in extract_page(glyphs, payload):
                         if tbl.nrows > 0:
                             rows.append((doc_id, page, strat, "table",
                                          json.dumps({

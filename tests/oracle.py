@@ -125,11 +125,9 @@ def oracle_lattice_page(payload: PagePayload | None, runs: GlyphRuns | None,
     bw = imageops.binarize_for_lines(gray)
     scale = max(1, gray.shape[1] // 1000)
     k = max(10 * scale, 10)
-    horizontal = imageops.dilate_binary(imageops.erode_binary(bw, k, 1), k, 1)
-    vertical = imageops.dilate_binary(imageops.erode_binary(bw, 1, k), 1, k)
-
-    rows_y = _dedupe(_project(horizontal, True), 3)
-    cols_x = _dedupe(_project(vertical, False), 3)
+    peaks_y, peaks_x = line_peaks(bw, k)
+    rows_y = _dedupe(peaks_y, 3)
+    cols_x = _dedupe(peaks_x, 3)
     h, w = gray.shape
     if not rows_y or rows_y[0] > 3:
         rows_y.insert(0, 0)
@@ -174,6 +172,14 @@ def oracle_lattice_page(payload: PagePayload | None, runs: GlyphRuns | None,
                 grid[r][c] = backend.cell_text(payload, binimg, (x, y, cw, ch))
 
     return Table(grid, [float(v) for v in cols_x], [float(v) for v in rows_y])
+
+
+def line_peaks(bw: np.ndarray, k: int) -> tuple[list[int], list[int]]:
+    """LatticeParser.java:150-159: open the binarized page with (k,1) and
+    (1,k) kernels (erode then dilate), then project each axis."""
+    horizontal = imageops.dilate_binary(imageops.erode_binary(bw, k, 1), k, 1)
+    vertical = imageops.dilate_binary(imageops.erode_binary(bw, 1, k), 1, k)
+    return _project(horizontal, True), _project(vertical, False)
 
 
 def _project(bin_img: np.ndarray, horizontal: bool) -> list[int]:

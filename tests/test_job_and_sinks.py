@@ -147,6 +147,41 @@ def test_pytesseract_backend_lang_oem_gated():
         assert (b.lang, b.oem) == ("eng+fra", 3)
 
 
+def test_embedded_ocr_backend_is_honoured_everywhere(monkeypatch):
+    """ocr_backend="embedded" never constructs the Tesseract backend: not
+    in the single-document API, the debug sink or stage 1."""
+    import pandas as pd
+    from extractpdf4j_spark import ocr
+    from extractpdf4j_spark.config import ExtractConfig
+    from extractpdf4j_spark.local import extract_document
+    from extractpdf4j_spark.pipeline import _make_extract_pages
+    from extractpdf4j_spark.sinks import _make_debug_pages
+
+    built = []
+
+    class StubTesseract(ocr.EmbeddedWordsBackend):
+        def __init__(self, lang="eng", oem=1):
+            built.append((lang, oem))
+
+    monkeypatch.setattr(ocr, "PytesseractBackend", StubTesseract)
+    docs_pdf, media_pdf = FixtureBuilder(seed=42).standard_corpus().to_pandas()
+    payloads = dict(zip(media_pdf["media_ref"], media_pdf["payload"]))
+    spans = next(list(t.spans) for t in docs_pdf.itertuples(index=False)
+                 if any(s["kind"] == "media" for s in t.spans))
+    m = media_pdf.iloc[0]
+    batch = pd.DataFrame({"doc_id": [m["doc_id"]], "page": [m["page"]],
+                          "glyph_blob": [None], "payload": [m["payload"]]})
+
+    cfg = ExtractConfig(ocr_backend="embedded")
+    extract_document(spans, payloads, cfg)
+    list(_make_debug_pages(cfg)(iter([batch])))
+    list(_make_extract_pages(cfg)(iter([batch])))
+    assert built == []
+    # the stub is live: the default "auto" preference does construct it
+    extract_document(spans, payloads, ExtractConfig())
+    assert built == [("eng", 1)]
+
+
 def test_numbered_csv_export(spark, fixture_parquet, tmp_path):
     """Main.java:234-271 naming parity: out-1.csv per table per doc."""
     from extractpdf4j_spark.config import ExtractConfig

@@ -281,11 +281,8 @@ def test_completeness_stream_only_and_unknown_kinds(spark):
     assert out["mixed-unknown"]["status"] == "ok"
 
 
-def test_interleaved_multipage_doc(spark):
-    """A document interleaving a digital page and a scanned page: winner
-    selection is per-document across both pages' tables."""
-    fb = FixtureBuilder(seed=99)
-    # page 1: text layer; page 2: scanned with OCR words
+def _mix_doc(fb):
+    """Page 1: text layer; page 2: scanned with OCR words."""
     from extractpdf4j_spark.fixtures import (layout_text_rows, STMT_COL_X,
                                              statement_rows, blank_page,
                                              layout_ocr_rows, words_df)
@@ -301,22 +298,47 @@ def test_interleaved_multipage_doc(spark):
          "words": words_df(layout_ocr_rows(rows2, [60, 160, 400, 520, 650],
                                            right_edges={2: 450, 3: 575, 4: 760}))},
     ])
+
+
+@pytest.mark.parametrize("build,cfg,status", [
+    (_mix_doc, ExtractConfig(), "ok"),
+    (_mix_doc, ExtractConfig(min_score=0.99), "below_min_score"),
+    (_mix_doc, ExtractConfig(mode="ocrstream",
+                             required_headers=("NoSuchHeader",)),
+     "headers_missing"),
+    (lambda fb: fb.grid_scanned("media-only"), ExtractConfig(mode="stream"),
+     "no_tables"),
+    # >= 8 scores per strategy mean: where np.mean's pairwise sum and a
+    # plain left-to-right sum could round differently
+    (lambda fb: fb.stmt_text("stmt-9p", n_rows=6, n_pages=9), ExtractConfig(),
+     "ok"),
+], ids=["default", "below_min_score", "headers_missing", "no_tables",
+        "stmt_text_9p"])
+def test_interleaved_multipage_doc(spark, build, cfg, status):
+    """Multi-page documents (an interleaved digital + scanned one among
+    them): winner selection is per-document across all pages' tables, and
+    the single-document API agrees with the job on every status branch."""
+    fb = FixtureBuilder(seed=99)
+    build(fb)
     docs_pdf, media_pdf = fb.to_pandas()
     docs = spark.createDataFrame(docs_pdf, schema=DOCUMENTS_SCHEMA)
     media = spark.createDataFrame(media_pdf, schema=MEDIA_SCHEMA)
-    row = extract(docs, media, ExtractConfig(), num_partitions=4).collect()[0]
-    assert row["status"] == "ok"
+    row = extract(docs, media, cfg, num_partitions=4).collect()[0]
+    assert row["status"] == status
     spans = json.loads(row["spans_json"])
-    table_refs = [s["media_ref"] for s in spans if s["kind"] == "media"]
-    # winner produced tables from the pages IT could parse; offsets ordered
-    assert len(table_refs) >= 1
-    offs = [s["offset"] for s in spans]
-    assert offs == sorted(offs)
-    # parity with the oracle on this interleaved doc
+    if status == "ok":
+        table_refs = [s["media_ref"] for s in spans if s["kind"] == "media"]
+        # winner produced tables from the pages IT could parse; offsets
+        # ordered
+        assert len(table_refs) >= 1
+        offs = [s["offset"] for s in spans]
+        assert offs == sorted(offs)
+    # parity with the single-document API
     from extractpdf4j_spark.local import extract_document
     payloads = dict(zip(media_pdf["media_ref"], media_pdf["payload"]))
     want, wstatus, wstrat, _ = extract_document(
-        list(docs_pdf["spans"][0]), payloads, ExtractConfig())
+        list(docs_pdf["spans"][0]), payloads, cfg)
+    assert row["status"] == wstatus
     assert row["strategy"] == wstrat
     assert [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans] \
         == [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in want]

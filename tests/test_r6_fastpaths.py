@@ -12,6 +12,7 @@ import pandas as pd
 import pytest
 from hypothesis import given, settings, strategies as st
 
+import oracle
 from extractpdf4j_spark import fixtures, imageops
 from extractpdf4j_spark.docmodel import (OCR_WORD_COLS, _HDR,
                                          decode_media_payload,
@@ -31,9 +32,7 @@ def _ref_binarize(g):
 
 
 def _ref_detect(g, k):
-    bw = _ref_binarize(g)
-    return (imageops.project_open_lines(bw, k, True),
-            imageops.project_open_lines(bw, k, False))
+    return oracle.line_peaks(_ref_binarize(g), k)
 
 
 def _cases():
