@@ -6,7 +6,8 @@ Mirrors the reference's parser builder/annotation config surface:
                               pipeline defaults to "all" since a corpus job
                               extracts whole documents)
 * stripText                 — BaseParser.java:67 (default true)
-* lattice dpi / min cell    — LatticeParser.java:47-56 (300f, 20x10)
+* lattice min cell          — LatticeParser.java:47-56 (20x10; the
+                              300f dpi is the PDF render's, job.py --dpi)
 * hybrid minScore           — HybridParser.java:51 (0.0)
 * requiredHeaders           — OcrStreamParser.java:35 (empty)
 
@@ -33,7 +34,6 @@ class ExtractConfig:
     mode: str = MODE_HYBRID
     pages: str = "all"
     strip_text: bool = True
-    lattice_dpi: float = 300.0
     min_score: float = 0.0
     min_cell_w: float = 20.0
     min_cell_h: float = 10.0

@@ -29,36 +29,44 @@ from __future__ import annotations
 
 import numpy as np
 
+LINE_COVERAGE = 0.35  # a line is a row/column >35% set — LatticeParser.java:278
+
 
 # ---------------------------------------------------------------------------
 # Windowed sums (the building block)
 # ---------------------------------------------------------------------------
 
-def _window_count(mask01: np.ndarray, k: int, axis: int, pad_value: int) -> np.ndarray:
-    """Count of set pixels in a length-k window along ``axis`` with OpenCV
-    center anchor a=k//2 (window for output i covers [i-a, i+k-1-a]),
-    padded with ``pad_value`` (0 or 1). O(N) independent of k.
+def _window_count(arr: np.ndarray, k: int, axis: int,
+                  border: int | str) -> np.ndarray:
+    """Sum of a length-k window along ``axis`` with OpenCV center anchor
+    a=k//2 (window for output i covers [i-a, i+k-1-a]). ``border`` is
+    the padding: 0 or 1 (constant — dilate/erode of a 0/1 mask) or
+    ``"replicate"`` (the box filter of adaptiveThreshold). O(N)
+    independent of k.
 
     Uses uint16 cumulative sums with NATURAL OVERFLOW: the running total
     wraps mod 2^16, but window differences c[i+k]-c[i] computed in uint16
-    arithmetic are exact because every true window sum (<= k <= 255) fits.
-    Halving the accumulator width matters — at 32 cores these kernels are
-    memory-bandwidth-bound, not compute-bound."""
+    arithmetic are exact while every true window sum fits in 16 bits
+    (callers keep it there). Halving the accumulator width matters — at
+    32 cores these kernels are memory-bandwidth-bound, not compute-bound."""
     if k <= 1:
-        return mask01.astype(np.uint16)
+        return arr.astype(np.uint16)
     assert k < 65536
     a = k // 2
     pad = [(0, 0), (0, 0)]
     pad[axis] = (a + 1, k - 1 - a)   # +1 leading zero slot for the diff
-    p = np.pad(mask01, pad, mode="constant", constant_values=pad_value)
-    if pad_value:
+    if border == "replicate":
+        p = np.pad(arr, pad, mode="edge")
+    else:
+        p = np.pad(arr, pad, mode="constant", constant_values=border)
+    if border:
         # the extra leading slot must be zero for the running sum diff
         if axis == 0:
             p[0, :] = 0
         else:
             p[:, 0] = 0
     c = np.cumsum(p, axis=axis, dtype=np.uint16)  # overflow-exact windows
-    n = mask01.shape[axis]
+    n = arr.shape[axis]
     if axis == 0:
         return c[k:k + n, :] - c[0:n, :]
     return c[:, k:k + n] - c[:, 0:n]
@@ -68,9 +76,9 @@ def erode_binary(bin_img: np.ndarray, kw: int, kh: int) -> np.ndarray:
     """Erosion with a (kw x kh) rect kernel on a 0/255 binary image."""
     m = (bin_img > 0).astype(np.uint8)
     if kw > 1:
-        m = (_window_count(m, kw, axis=1, pad_value=1) == kw).astype(np.uint8)
+        m = (_window_count(m, kw, axis=1, border=1) == kw).astype(np.uint8)
     if kh > 1:
-        m = (_window_count(m, kh, axis=0, pad_value=1) == kh).astype(np.uint8)
+        m = (_window_count(m, kh, axis=0, border=1) == kh).astype(np.uint8)
     return m * np.uint8(255)
 
 
@@ -78,9 +86,9 @@ def dilate_binary(bin_img: np.ndarray, kw: int, kh: int) -> np.ndarray:
     """Dilation with a (kw x kh) rect kernel on a 0/255 binary image."""
     m = (bin_img > 0).astype(np.uint8)
     if kw > 1:
-        m = (_window_count(m, kw, axis=1, pad_value=0) > 0).astype(np.uint8)
+        m = (_window_count(m, kw, axis=1, border=0) > 0).astype(np.uint8)
     if kh > 1:
-        m = (_window_count(m, kh, axis=0, pad_value=0) > 0).astype(np.uint8)
+        m = (_window_count(m, kh, axis=0, border=0) > 0).astype(np.uint8)
     return m * np.uint8(255)
 
 
@@ -93,25 +101,6 @@ def morph_open_binary(bin_img: np.ndarray, kw: int, kh: int) -> np.ndarray:
 # Adaptive thresholding
 # ---------------------------------------------------------------------------
 
-def _window_sum_u16(arr: np.ndarray, k: int, axis: int) -> np.ndarray:
-    """Exact length-k windowed sum along ``axis`` with replicate borders,
-    via overflow-modular uint16 cumsum (valid while true window sums fit
-    in 16 bits). Returns uint16, same shape as input."""
-    a = k // 2
-    pad = [(0, 0), (0, 0)]
-    pad[axis] = (a + 1, k - 1 - a)
-    p = np.pad(arr, pad, mode="edge")
-    if axis == 0:
-        p[0, :] = 0
-    else:
-        p[:, 0] = 0
-    c = np.cumsum(p, axis=axis, dtype=np.uint16)
-    n = arr.shape[axis]
-    if axis == 0:
-        return c[k:k + n, :] - c[0:n, :]
-    return c[:, k:k + n] - c[:, 0:n]
-
-
 def _box_mean(gray: np.ndarray, block: int) -> np.ndarray:
     """Box-filter mean with replicate borders, rounded like OpenCV's
     boxFilter path inside adaptiveThreshold. Separable 16-bit windowed
@@ -119,8 +108,8 @@ def _box_mean(gray: np.ndarray, block: int) -> np.ndarray:
     uint16 via the overflow trick); floor(s/b²+0.5) = (2s+b²)//(2b²).
     Bandwidth, not FLOPs, bounds these kernels at high core counts."""
     assert block * block * 255 < 65536, "block too large for u16 scheme"
-    s1 = _window_sum_u16(gray, block, axis=1)
-    s = _window_sum_u16(s1, block, axis=0).astype(np.int32)
+    s1 = _window_count(gray, block, axis=1, border="replicate")
+    s = _window_count(s1, block, axis=0, border="replicate").astype(np.int32)
     b2 = block * block
     return (2 * s + b2) // (2 * b2)
 
@@ -159,18 +148,9 @@ def adaptive_threshold(gray: np.ndarray, block: int, c: float,
 
     ``invert=True``  → THRESH_BINARY_INV: dst=255 where src <= T else 0
     ``invert=False`` → THRESH_BINARY:     dst=255 where src >  T else 0
-    with T = localmean(block) - c.
+    with T = localmean(block) - c. ``method="mean"`` with 15/10 is the
+    reference the tests hold ``binarize_for_lines`` to.
     """
-    if method == "mean" and float(c).is_integer():
-        # fused integer compare: g <= floor((2s+b²)/(2b²)) - c  ⟺
-        # (g+c)·2b² <= 2s+b² — skips the division and float temporaries
-        s1 = _window_sum_u16(gray, block, axis=1)
-        s = _window_sum_u16(s1, block, axis=0).astype(np.int32)
-        b2 = block * block
-        lhs = (gray.astype(np.int32) + int(c)) * (2 * b2)
-        rhs = 2 * s + b2
-        out = (lhs <= rhs) if invert else (lhs > rhs)
-        return out.astype(np.uint8) * np.uint8(255)
     mean = _box_mean(gray, block) if method == "mean" else _gaussian_mean(gray, block)
     t = (mean - c).astype(np.int16)  # mean-c ∈ [-c, 255]; int16 halves traffic
     g = gray.astype(np.int16)
@@ -211,9 +191,9 @@ def _bilevel_mask01(gray: np.ndarray,
     ``(gray == 0)`` as uint8; callers that already hold it skip a pass.
 
     Derivation: with pixels ∈ {0,255} the window sum is 255·cnt255, and
-    the fused integer compare (g+10)·450 <= 2s+225 reduces to
-    ``g==0 and cnt255>=9`` ⟺ ``g==0 and cnt0<=216`` (cnt0+cnt255=225
-    under replicate borders)."""
+    the integer compare (g+10)·450 <= 2s+225 of ``_binarize_region_rows``
+    reduces to ``g==0 and cnt255>=9`` ⟺ ``g==0 and cnt0<=216``
+    (cnt0+cnt255=225 under replicate borders)."""
     h, w = gray.shape
     if z is None:
         z = (gray == 0).view(np.uint8)
@@ -266,7 +246,7 @@ def _binarize_region_rows(gray: np.ndarray, y0: int, y1: int) -> np.ndarray:
     bot_pad = (block - 1 - a) - (hi - y1)
     if top_pad or bot_pad:
         g = np.pad(g, ((top_pad, bot_pad), (0, 0)), mode="edge")
-    s1 = _window_sum_u16(g, block, axis=1)          # horizontal window sums
+    s1 = _window_count(g, block, axis=1, border="replicate")
     zero = np.zeros((1, w), dtype=np.uint16)
     c2 = np.cumsum(np.vstack([zero, s1]), axis=0, dtype=np.uint16)
     n = y1 - y0
@@ -300,123 +280,86 @@ def binarize_for_lines(gray: np.ndarray) -> np.ndarray:
 def _open_count_rows(sub01: np.ndarray, k: int) -> np.ndarray:
     """Per-row set-pixel count after a 1-D opening of width k (the
     erode+dilate pair with OpenCV border semantics)."""
-    er = (_window_count(sub01, k, axis=1, pad_value=1) == k).astype(np.uint8)
-    op = _window_count(er, k, axis=1, pad_value=0) > 0
+    er = (_window_count(sub01, k, axis=1, border=1) == k).astype(np.uint8)
+    op = _window_count(er, k, axis=1, border=0) > 0
     return op.sum(axis=1)
 
 
 def _line_candidates(cov: np.ndarray, length: int) -> np.ndarray:
-    """Lines whose opened coverage can still exceed 35%. A 1-D opening
-    adds at most ONE pixel to a line: with an even k the anchor k//2
-    (the same for erode and dilate) shifts every run one pixel to the
-    right, and a run that starts at the border keeps its start (the
-    erosion pads with 1), so it grows by one. Raw coverage within one
-    pixel of the threshold must therefore still be opened exactly."""
-    return np.where(cov > length * 0.35 - 1)[0]
+    """Lines whose opened coverage can still exceed ``LINE_COVERAGE``. A
+    1-D opening adds at most ONE pixel to a line: with an even k the
+    anchor k//2 (the same for erode and dilate) shifts every run one
+    pixel to the right, and a run that starts at the border keeps its
+    start (the erosion pads with 1), so it grows by one. Raw coverage
+    within one pixel of the threshold must therefore still be opened
+    exactly."""
+    return np.where(cov > length * LINE_COVERAGE - 1)[0]
+
+
+def _open_lines(m01: np.ndarray, row_cov: np.ndarray, col_cov: np.ndarray,
+                k: int) -> tuple[np.ndarray, np.ndarray]:
+    """Rows/columns of the 0/1 mask ``m01`` (raw coverage ``row_cov`` /
+    ``col_cov``) whose coverage after a (k,1)/(1,k) opening exceeds
+    ``LINE_COVERAGE``; only the candidate lines are opened."""
+    h, w = m01.shape
+    rows_out = np.empty(0, dtype=np.int64)
+    cand_r = _line_candidates(row_cov, w)
+    if len(cand_r):
+        keep = _open_count_rows(m01[cand_r], k) > w * LINE_COVERAGE
+        rows_out = cand_r[keep]
+    cols_out = np.empty(0, dtype=np.int64)
+    cand_c = _line_candidates(col_cov, h)
+    if len(cand_c):
+        sub = np.ascontiguousarray(m01[:, cand_c].T)
+        keep = _open_count_rows(sub, k) > h * LINE_COVERAGE
+        cols_out = cand_c[keep]
+    return rows_out, cols_out
 
 
 def detect_line_positions(gray: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
-    """Fused binarize → morphological-open → projection for BOTH axes,
-    without ever materializing the full binarized image.
+    """Binarize → morphological-open → projection for BOTH axes.
 
-    Pass A streams binarize strips accumulating raw per-row/per-column
-    coverage; passes B/C re-binarize only the candidate rows/columns
-    (see ``_line_candidates``) and apply the exact 1-D opening there.
-    Bit-identical to erode+dilate with a (k,1)/(1,k) kernel then the
-    >35% projection (LatticeParser.java:150-161,268-291) on
-    ``binarize_for_lines(gray)`` for both axes — pinned by tests against
-    the literal oracle.
+    Every page builds ONE 0/1 mask equal to ``binarize_for_lines(gray) >
+    0`` and counts its per-row/per-column coverage; ``_open_lines`` then
+    applies the exact 1-D opening to the candidate lines only (see
+    ``_line_candidates``). Bit-identical to erode+dilate with a (k,1)/
+    (1,k) kernel then the >35% projection (LatticeParser.java:150-161,
+    268-291) on ``binarize_for_lines(gray)`` for both axes — pinned by
+    tests against the literal oracle.
 
-    Bilevel shortcut: ``_bilevel_mask01`` clears a black pixel only when
-    its 15x15 window holds >= 217 black pixels, so the mask is the plain
-    black-pixel mask ``z = (gray == 0)`` whenever no window reaches 217.
-    A row's share of any window is at most ``min(15, row_cov + 7*(z[r,0]
-    + z[r,-1]))``: under replicate borders an interior pixel is counted
-    at most once per window row, but an edge pixel up to 8 times (itself
-    plus 7 clamped copies; in a 1-px-wide image both terms name the same
-    pixel, 1 + 7 + 7 = 15). Summing those row bounds over a 15-row
-    replicate-padded window bounds every window count, and the same holds
-    for columns. If either axis's windowed bound is <= 216 everywhere,
-    ``z`` is the mask and the adaptive window is skipped; otherwise the
-    exact ``_bilevel_mask01`` runs (reusing ``z``). Ruled or blank pages
-    pass the bound; pages with rendered glyphs or dense rules usually
-    fail it and pay the full window."""
+    The mask comes from one of three places, picked by the input:
+    grayscale pages use ``binarize_for_lines``; bilevel pages use the
+    plain black-pixel mask ``z = (gray == 0)`` when a bound proves it
+    exact, and ``_bilevel_mask01`` otherwise.
+
+    Bilevel bound: ``_bilevel_mask01`` clears a black pixel only when
+    its 15x15 window holds >= 217 black pixels, so the mask is ``z``
+    whenever no window reaches 217. A row's share of any window is at
+    most ``min(15, row_cov + 7*(z[r,0] + z[r,-1]))``: under replicate
+    borders an interior pixel is counted at most once per window row,
+    but an edge pixel up to 8 times (itself plus 7 clamped copies; in a
+    1-px-wide image both terms name the same pixel, 1 + 7 + 7 = 15).
+    Summing those row bounds over a 15-row replicate-padded window bounds
+    every window count, and the same holds for columns. If either axis's
+    windowed bound is <= 216 everywhere, ``z`` is the mask and the
+    adaptive window is skipped; otherwise the exact ``_bilevel_mask01``
+    runs (reusing ``z``). Ruled or blank pages pass the bound; pages
+    with rendered glyphs or dense rules usually fail it and pay the full
+    window."""
     h, w = gray.shape
+    acc = np.uint16 if max(h, w) < 65536 else np.int64
     if _is_bilevel(gray):
-        # packed-bits rasters: one u8 shift-add binarize materializes the
-        # whole (small) mask, then both axes open candidate slices of it
-        # — no per-strip or per-slab re-binarization at all
         z = (gray == 0).view(np.uint8)
-        acc = np.uint16 if max(h, w) < 65536 else np.int64
         row_cov = z.sum(axis=1, dtype=acc)
         col_cov = z.sum(axis=0, dtype=acc)
         if h and w and (_win15_bound_le216(row_cov, z[:, 0], z[:, -1])
                         or _win15_bound_le216(col_cov, z[0, :], z[-1, :])):
-            m01 = z
-        else:
-            m01 = _bilevel_mask01(gray, z)
-            row_cov = m01.sum(axis=1, dtype=acc)
-            col_cov = m01.sum(axis=0, dtype=acc)
-        rows_out = np.empty(0, dtype=np.int64)
-        cand_r = _line_candidates(row_cov, w)
-        if len(cand_r):
-            keep = _open_count_rows(m01[cand_r], k) > w * 0.35
-            rows_out = cand_r[keep]
-        cols_out = np.empty(0, dtype=np.int64)
-        cand_c = _line_candidates(col_cov, h)
-        if len(cand_c):
-            sub = np.ascontiguousarray(m01[:, cand_c].T)
-            keep = _open_count_rows(sub, k) > h * 0.35
-            cols_out = cand_c[keep]
-        return rows_out, cols_out
-
-    row_cov = np.empty(h, dtype=np.int64)
-    col_cov = np.zeros(w, dtype=np.int64)
-    for y0 in range(0, h, 128):
-        y1 = min(h, y0 + 128)
-        bw = _binarize_region_rows(gray, y0, y1)
-        m = bw > 0
-        row_cov[y0:y1] = m.sum(axis=1)
-        col_cov += m.sum(axis=0)
-
-    rows_out = np.empty(0, dtype=np.int64)
-    cand_r = _line_candidates(row_cov, w)
-    if len(cand_r):
-        # contiguous candidate runs re-binarize as one slab each
-        subs = []
-        start = 0
-        for i in range(1, len(cand_r) + 1):
-            if i == len(cand_r) or cand_r[i] != cand_r[i - 1] + 1:
-                r0, r1 = int(cand_r[start]), int(cand_r[i - 1]) + 1
-                subs.append(((_binarize_region_rows(gray, r0, r1) > 0)
-                             .astype(np.uint8)))
-                start = i
-        sub = np.vstack(subs)
-        keep = _open_count_rows(sub, k) > w * 0.35
-        rows_out = cand_r[keep]
-
-    cols_out = np.empty(0, dtype=np.int64)
-    cand_c = _line_candidates(col_cov, h)
-    if len(cand_c):
-        # column slab = row slab of a transposed NARROW slice (15x15 box
-        # mean and the pixelwise threshold are symmetric); only the ±7
-        # neighbor columns are copied, never the whole image
-        a = 7  # block 15 // 2
-        subs = []
-        start = 0
-        for i in range(1, len(cand_c) + 1):
-            if i == len(cand_c) or cand_c[i] != cand_c[i - 1] + 1:
-                c0, c1 = int(cand_c[start]), int(cand_c[i - 1]) + 1
-                s0 = max(0, c0 - a)
-                slab_t = np.ascontiguousarray(gray[:, s0:min(w, c1 + a)].T)
-                subs.append(((_binarize_region_rows(slab_t, c0 - s0,
-                                                    c1 - s0) > 0)
-                             .astype(np.uint8)))
-                start = i
-        sub = np.vstack(subs)
-        keep = _open_count_rows(sub, k) > h * 0.35
-        cols_out = cand_c[keep]
-    return rows_out, cols_out
+            return _open_lines(z, row_cov, col_cov, k)
+        m01 = _bilevel_mask01(gray, z)
+    else:
+        m01 = (binarize_for_lines(gray) > 0).view(np.uint8)
+    return _open_lines(m01, m01.sum(axis=1, dtype=acc),
+                       m01.sum(axis=0, dtype=acc), k)
 
 
 # ---------------------------------------------------------------------------

@@ -21,6 +21,7 @@ with one batch job: the CLI flags mirror Main.java's options
 from __future__ import annotations
 
 import argparse
+import functools
 import sys
 import time
 
@@ -45,7 +46,8 @@ def build_parser() -> argparse.ArgumentParser:
                    choices=["stream", "lattice", "ocrstream", "hybrid"])
     p.add_argument("--pages", default="all",
                    help='"all", "1", "2-5", "1,3-4" (PageRange.java:15 format)')
-    p.add_argument("--dpi", type=float, default=300.0)
+    p.add_argument("--dpi", type=float, default=300.0,
+                   help="with --pdf-input: raster render resolution")
     p.add_argument("--min-score", type=float, default=0.0)
     p.add_argument("--no-strip-text", action="store_true")
     p.add_argument("--required-headers", default="",
@@ -94,7 +96,6 @@ def main(argv: list[str] | None = None) -> int:
         mode=args.mode,
         pages=args.pages,
         strip_text=not args.no_strip_text,
-        lattice_dpi=args.dpi,
         min_score=args.min_score,
         required_headers=tuple(
             h.strip() for h in args.required_headers.split(",") if h.strip()),
@@ -106,9 +107,12 @@ def main(argv: list[str] | None = None) -> int:
     run_id = args.run_id or f"run-{int(time.time())}"
 
     if args.pdf_input:
-        from .pdfio import read_pdf_corpus
-        docs, media = read_pdf_corpus(spark, args.pdf_input,
-                                      stage_dir=args.pdf_stage)
+        from . import pdfio
+        docs, media = pdfio.read_pdf_corpus(
+            spark, args.pdf_input,
+            backend_factory=functools.partial(pdfio.Pypdfium2Backend,
+                                              dpi=args.dpi),
+            stage_dir=args.pdf_stage)
     else:
         # paths read parquet; dotted identifiers read catalog (Iceberg)
         # tables through the sources seam

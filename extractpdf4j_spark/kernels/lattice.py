@@ -8,7 +8,8 @@ Re-expresses LatticeParser.java over a page's raster payload + glyph runs:
     v-kernel (1, max(10*scale,10)); erode+dilate
                                             — LatticeParser.java:150-157
 3.  projection profiles: a row/col is a line when white coverage > 35%
-    (numpy axis reduction replaces the O(W*H) Java loop)
+    (imageops.LINE_COVERAGE; numpy axis reduction replaces the O(W*H)
+    Java loop)
                                             — LatticeParser.java:268-291
 4.  dedupe near-duplicates within 3 px      — LatticeParser.java:160-161,297-307
 5.  border closing (prepend 0 / append edge when >3 px away)
@@ -36,7 +37,6 @@ from ..docmodel import GlyphRuns, PagePayload
 from ..ocr import OcrBackend
 from ..table import Table
 
-COVERAGE = 0.35      # LatticeParser.java:278
 DEDUPE_TOL = 3       # LatticeParser.java:160-161
 BORDER_TOL = 3       # LatticeParser.java:164-167
 OCR_FILL_GATE = 0.25  # LatticeParser.java:192
@@ -45,10 +45,10 @@ OCR_FILL_GATE = 0.25  # LatticeParser.java:192
 def detect_grid(gray: np.ndarray) -> tuple[list[int], list[int]]:
     """Steps 1-5: ruling-line positions (rowsY, colsX) incl. border close.
 
-    Uses the fully fused binarize→open→project fast path
-    (imageops.detect_line_positions) — exact semantics of the reference's
-    binarize + full-image erode/dilate + projection, verified against the
-    literal oracle."""
+    Uses imageops.detect_line_positions (one mask per page, candidate
+    lines opened once) — exact semantics of the reference's binarize +
+    full-image erode/dilate + projection, verified against the literal
+    oracle."""
     scale = max(1, gray.shape[1] // 1000)
     k = max(10 * scale, 10)
     rows_pos, cols_pos = imageops.detect_line_positions(gray, k)

@@ -47,6 +47,26 @@ def _oracle_pairs():
     return [(name, QUERIES[name], ORACLES[name]) for name in ORACLES]
 
 
+def test_registry_contract():
+    """Registry order, oracle coverage and the extraction exec-prefs set.
+    External correctness checks attest the first 50 registered gates by
+    position, so the 10 E2E/flagship gates must stay first; ``_COALESCE_OFF`` must name
+    exactly the builders that reach ``pipeline.extract``, or a misspelled
+    or forgotten name would run an extraction gate with coalescing on."""
+    from extractpdf4j_spark.entry_queries import (ORACLES, QUERIES,
+                                                  _COALESCE_OFF)
+    gates = [f"q_extract_{s}_{kind}"
+             for s in ("stream", "lattice", "ocr", "hybrid")
+             for kind in ("spans", "metrics")]
+    assert list(QUERIES)[:10] == gates + ["q_flagship_spans",
+                                          "q_flagship_metrics"]
+    assert set(ORACLES) <= set(QUERIES)
+    assert set(QUERIES) - set(ORACLES) == {"q_extract_metrics",
+                                           "q_extract_spans"}
+    assert _COALESCE_OFF == {n for n in QUERIES
+                             if n.startswith(("q_extract_", "q_flagship_"))}
+
+
 @pytest.mark.parametrize("name,fn,sql", _oracle_pairs(),
                          ids=[n for n, *_ in _oracle_pairs()])
 def test_query_matches_oracle(spark, name, fn, sql):

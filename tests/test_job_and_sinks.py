@@ -59,6 +59,29 @@ def test_job_resume_cli(spark, fixture_parquet, capsys):
     assert {r["run_id"] for r in combined.select("run_id").collect()} == {"test-run"}
 
 
+def test_job_dpi_reaches_pdf_render(spark, fixture_parquet, tmp_path,
+                                    monkeypatch):
+    """--dpi sets the render resolution of the --pdf-input decode backend
+    (the PDF read is faked: no pypdfium2 needed)."""
+    from extractpdf4j_spark import job, pdfio
+    docs = spark.read.parquet(str(fixture_parquet / "documents"))
+    media = spark.read.parquet(str(fixture_parquet / "media"))
+    seen = {}
+
+    def fake_read_pdf_corpus(spark_, path, **kwargs):
+        seen.update(kwargs)
+        return docs, media
+
+    monkeypatch.setattr(pdfio, "read_pdf_corpus", fake_read_pdf_corpus)
+    rc = job.main(["--pdf-input", str(tmp_path / "pdfs"), "--dpi", "150",
+                   "--out", str(tmp_path / "out"), "--mode", "stream",
+                   "--partitions", "2"])
+    assert rc == 0
+    factory = seen["backend_factory"]
+    assert factory.func is pdfio.Pypdfium2Backend
+    assert factory.keywords == {"dpi": 150.0}
+
+
 def test_csv_sink_round_trip(spark, fixture_parquet):
     """The CSV sink reproduces the reference quoting (CsvExporter.java)."""
     from extractpdf4j_spark.pipeline import with_spans
