@@ -1,12 +1,10 @@
 #!/usr/bin/env python
-"""Extra benchmarks (round 6): noop-sink isolation + plan capture.
+"""Extra benchmarks: plan capture and per-query timing.
 
-``bench.py`` is frozen for measurement; this file holds the guide-§1.4
-instrumentation used during optimization:
+``bench.py`` is frozen for measurement; this file holds the per-query
+instrumentation used during optimization (per-layer cuts of the
+extraction pipeline live in ``perfbench/ledger.py``):
 
-* ``--stages``   — time the extraction pipeline's pieces in isolation
-  (corpus scan, page-work build, stage 1, full pipeline) against the
-  noop sink, labelled via setJobDescription.
 * ``--plans Q1,Q2`` — write ``plans/r06/<q>_{label}.txt`` with
   ``.explain('formatted')`` for the named queries.
 * ``--queries Q1,Q2 [--reps N]`` — steady-state per-query timing
@@ -30,50 +28,6 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 from bench import CPUS, SF_DIR, make_spark  # noqa: E402
-
-
-def noop(df):
-    df.write.format("noop").mode("overwrite").save()
-
-
-def stages(spark, sf_dir: str):
-    from extractpdf4j_spark.config import ExtractConfig
-    from extractpdf4j_spark.corpusgen import ensure_fixture_corpus
-    from extractpdf4j_spark.pipeline import build_page_work, extract
-
-    sc = spark.sparkContext
-    docs, media = ensure_fixture_corpus(spark, sf_dir)
-    docs = docs.cache(); n = docs.count()
-    media.cache().count()
-    cfg = ExtractConfig()
-    out = {"n_docs": n}
-    parts = CPUS * 2
-
-    def timed(label, thunk):
-        sc.setJobDescription(label)
-        t0 = time.perf_counter()
-        thunk()
-        out[label] = round(time.perf_counter() - t0, 3)
-        sc.setJobDescription(None)
-
-    timed("scan_docs_noop", lambda: noop(docs))
-    timed("scan_media_noop", lambda: noop(media))
-    timed("page_work_noop",
-          lambda: noop(build_page_work(docs, media, cfg, parts)))
-    timed("stage1_noop", lambda: noop(
-        build_page_work(docs, media, cfg, parts).mapInPandas(
-            __import__("extractpdf4j_spark.pipeline",
-                       fromlist=["_make_extract_pages"])
-            ._make_extract_pages(cfg),
-            schema=__import__("extractpdf4j_spark.pipeline",
-                              fromlist=["PAGE_RESULT_SCHEMA"])
-            .PAGE_RESULT_SCHEMA)))
-    timed("full_extract_count",
-          lambda: extract(docs, media, cfg, num_partitions=parts).count())
-    timed("full_extract_count_2",
-          lambda: extract(docs, media, cfg, num_partitions=parts).count())
-    docs.unpersist(); media.unpersist()
-    return out
 
 
 def capture_plans(spark, sf_dir: str, names: list[str], label: str,
@@ -116,7 +70,6 @@ def time_queries(spark, sf_dir: str, names: list[str], reps: int) -> dict:
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--stages", action="store_true")
     ap.add_argument("--plans", default="")
     ap.add_argument("--label", default="after")
     ap.add_argument("--exec", dest="execute", action="store_true",
@@ -129,8 +82,6 @@ def main():
     spark = make_spark(CPUS)
     spark.sparkContext.setLogLevel("ERROR")
     try:
-        if args.stages:
-            print(json.dumps(stages(spark, SF_DIR)))
         if args.plans:
             capture_plans(spark, SF_DIR, args.plans.split(","), args.label,
                           execute=args.execute,

@@ -15,6 +15,10 @@ Determinism rules shared by both sides:
 
 from __future__ import annotations
 
+import functools
+from collections.abc import Callable
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 # Partitioning used by the E2E extraction gates. The gate hashes must be
@@ -8669,7 +8673,15 @@ SQL_BPE_ENCODE = _bpe_encode_oracle_sql()
 # Registry
 # ---------------------------------------------------------------------------
 
-QUERIES = {
+class Gate(NamedTuple):
+    """One registered gate: its plan builder, registered under the
+    builder's ``__name__``, and the DuckDB oracle SQL its rows must match
+    (None for a rows-only gate)."""
+    build: Callable[[SparkSession, str], DataFrame]
+    oracle: str | None
+
+
+GATES = (
     # The 8 E2E extraction gates are registered FIRST: they hash-gate the
     # actual product (the four strategy pipelines vs full SQL
     # transliterations of StreamParser/LatticeParser/OcrStreamParser/
@@ -8679,196 +8691,173 @@ QUERIES = {
     # sample positions 0..49), so after the E2E gates the registry lists
     # every never-driver-attested gate, then the ones already green in
     # CORRECTNESS_r01-r04 (VERDICT r4 Next-round #1).
-    "q_extract_stream_spans": q_extract_stream_spans,
-    "q_extract_stream_metrics": q_extract_stream_metrics,
-    "q_extract_lattice_spans": q_extract_lattice_spans,
-    "q_extract_lattice_metrics": q_extract_lattice_metrics,
-    "q_extract_ocr_spans": q_extract_ocr_spans,
-    "q_extract_ocr_metrics": q_extract_ocr_metrics,
-    "q_extract_hybrid_spans": q_extract_hybrid_spans,
-    "q_extract_hybrid_metrics": q_extract_hybrid_metrics,
+    Gate(q_extract_stream_spans, SQL_EXTRACT_STREAM_SPANS),
+    Gate(q_extract_stream_metrics, SQL_EXTRACT_STREAM_METRICS),
+    Gate(q_extract_lattice_spans, SQL_EXTRACT_LATTICE_SPANS),
+    Gate(q_extract_lattice_metrics, SQL_EXTRACT_LATTICE_METRICS),
+    Gate(q_extract_ocr_spans, SQL_EXTRACT_OCR_SPANS),
+    Gate(q_extract_ocr_metrics, SQL_EXTRACT_OCR_METRICS),
+    Gate(q_extract_hybrid_spans, SQL_EXTRACT_HYBRID_SPANS),
+    Gate(q_extract_hybrid_metrics, SQL_EXTRACT_HYBRID_METRICS),
     # flagship front door: entry()'s own lineage, oracle-pinned (r5)
-    "q_flagship_spans": q_flagship_spans,
-    "q_flagship_metrics": q_flagship_metrics,
+    Gate(q_flagship_spans, SQL_FLAGSHIP_SPANS),
+    Gate(q_flagship_metrics, SQL_FLAGSHIP_METRICS),
     # --- below: never driver-attested (local-oracle green only) ---
-    "q_hash_embed": q_hash_embed,
-    "q_token_drift": q_token_drift,
-    "q_corpus_divergence": q_corpus_divergence,
-    "q_window_drift": q_window_drift,
-    "q_zorder": q_zorder,
-    "q_compact_plan": q_compact_plan,
-    "q_rp_project": q_rp_project,
-    "q_embed_audit": q_embed_audit,
-    "q_bpe_encode": q_bpe_encode,
-    "q_rp_ann": q_rp_ann,
-    "q_shard_manifest": q_shard_manifest,
-    "q_decontaminate": q_decontaminate,
-    "q_decontam_scrub": q_decontam_scrub,
-    "q_warc_parse": q_warc_parse,
-    "q_warc_docs": q_warc_docs,
-    "q_temperature_sample": q_temperature_sample,
-    "q_dedup_paragraphs": q_dedup_paragraphs,
-    "q_pack_sequences": q_pack_sequences,
-    "q_pack_multimodal": q_pack_multimodal,
-    "q_cdc_chunks": q_cdc_chunks,
-    "q_cdc_dedup": q_cdc_dedup,
-    "q_cdc_rewrite": q_cdc_rewrite,
-    "q_mix_corpora": q_mix_corpora,
-    "q_ppl_buckets": q_ppl_buckets,
-    "q_edit_sim": q_edit_sim,
-    "q_bigram_lm": q_bigram_lm,
-    "q_event_join": q_event_join,
-    "q_text_clean": q_text_clean,
-    "q_nfc_normalize": q_nfc_normalize,
-    "q_char_entropy": q_char_entropy,
-    "q_bpe_merges": q_bpe_merges,
-    "q_bpe_token_count": q_bpe_token_count,
-    "q_qhist": q_qhist,
-    "q_dedup_keep_best": q_dedup_keep_best,
-    "q_tfidf_topk": q_tfidf_topk,
-    "q_bm25": q_bm25,
-    "q_hll": q_hll,
-    "q_cms": q_cms,
-    "q_quantiles": q_quantiles,
-    "q_quantiles_weighted": q_quantiles_weighted,
-    "q_key_skew": q_key_skew,
-    "q_salted_join": q_salted_join,
-    "q_quality_classifier": q_quality_classifier,
-    "q_pmi": q_pmi,
-    "q_event_distinct": q_event_distinct,
-    "q_snapshot_diff": q_snapshot_diff,
-    "q_source_overlap": q_source_overlap,
-    "q_cms_joinsize": q_cms_joinsize,
-    "q_corpus_report": q_corpus_report,
-    "q_bloom_dedup": q_bloom_dedup,
-    "q_pq_encode": q_pq_encode,
-    "q_pq_ann": q_pq_ann,
-    "q_leakage_split": q_leakage_split,
-    "q_ivf_pq": q_ivf_pq,
-    "q_semantic_dedup": q_semantic_dedup,
-    "q_kcenter": q_kcenter,
-    "q_pagerank": q_pagerank,
-    "q_dsir": q_dsir,
-    "q_url_normalize": q_url_normalize,
-    "q_anchor_corpus": q_anchor_corpus,
-    "q_robots": q_robots,
-    "q_curate_web": q_curate_web,
-    "q_sitemap": q_sitemap,
-    "q_crawl_schedule": q_crawl_schedule,
-    "q_domain_curate": q_domain_curate,
-    "q_dom_stats": q_dom_stats,
-    "q_html_links": q_html_links,
-    "q_html_tables": q_html_tables,
-    "q_html_table_stats": q_html_table_stats,
+    Gate(q_hash_embed, SQL_HASH_EMBED),
+    Gate(q_token_drift, SQL_TOKEN_DRIFT),
+    Gate(q_corpus_divergence, SQL_CORPUS_DIVERGENCE),
+    Gate(q_window_drift, SQL_WINDOW_DRIFT),
+    Gate(q_zorder, SQL_ZORDER),
+    Gate(q_compact_plan, SQL_COMPACT_PLAN),
+    Gate(q_rp_project, SQL_RP_PROJECT),
+    Gate(q_embed_audit, SQL_EMBED_AUDIT),
+    Gate(q_bpe_encode, SQL_BPE_ENCODE),
+    Gate(q_rp_ann, SQL_RP_ANN),
+    Gate(q_shard_manifest, SQL_SHARD_MANIFEST),
+    Gate(q_decontaminate, SQL_DECONTAMINATE),
+    Gate(q_decontam_scrub, SQL_DECONTAM_SCRUB),
+    Gate(q_warc_parse, SQL_WARC_PARSE),
+    Gate(q_warc_docs, SQL_WARC_DOCS),
+    Gate(q_temperature_sample, SQL_TEMPERATURE_SAMPLE),
+    Gate(q_dedup_paragraphs, SQL_DEDUP_PARAGRAPHS),
+    Gate(q_pack_sequences, SQL_PACK_SEQUENCES),
+    Gate(q_pack_multimodal, SQL_PACK_MULTIMODAL),
+    Gate(q_cdc_chunks, SQL_CDC_CHUNKS),
+    Gate(q_cdc_dedup, SQL_CDC_DEDUP),
+    Gate(q_cdc_rewrite, SQL_CDC_REWRITE),
+    Gate(q_mix_corpora, SQL_MIX_CORPORA),
+    Gate(q_ppl_buckets, SQL_PPL_BUCKETS),
+    Gate(q_edit_sim, SQL_EDIT_SIM),
+    Gate(q_bigram_lm, SQL_BIGRAM_LM),
+    Gate(q_event_join, SQL_EVENT_JOIN),
+    Gate(q_text_clean, SQL_TEXT_CLEAN),
+    Gate(q_nfc_normalize, SQL_NFC_NORMALIZE),
+    Gate(q_char_entropy, SQL_CHAR_ENTROPY),
+    Gate(q_bpe_merges, SQL_BPE_MERGES),
+    Gate(q_bpe_token_count, SQL_BPE_TOKEN_COUNT),
+    Gate(q_qhist, SQL_QHIST),
+    Gate(q_dedup_keep_best, SQL_DEDUP_KEEP_BEST),
+    Gate(q_tfidf_topk, SQL_TFIDF_TOPK),
+    Gate(q_bm25, SQL_BM25),
+    Gate(q_hll, SQL_HLL),
+    Gate(q_cms, SQL_CMS),
+    Gate(q_quantiles, SQL_QUANTILES),
+    Gate(q_quantiles_weighted, SQL_QUANTILES_WEIGHTED),
+    Gate(q_key_skew, SQL_KEY_SKEW),
+    Gate(q_salted_join, SQL_SALTED_JOIN),
+    Gate(q_quality_classifier, SQL_QUALITY_CLASSIFIER),
+    Gate(q_pmi, SQL_PMI),
+    Gate(q_event_distinct, SQL_EVENT_DISTINCT),
+    Gate(q_snapshot_diff, SQL_SNAPSHOT_DIFF),
+    Gate(q_source_overlap, SQL_SOURCE_OVERLAP),
+    Gate(q_cms_joinsize, SQL_CMS_JOINSIZE),
+    Gate(q_corpus_report, SQL_CORPUS_REPORT),
+    Gate(q_bloom_dedup, SQL_BLOOM_DEDUP),
+    Gate(q_pq_encode, SQL_PQ_ENCODE),
+    Gate(q_pq_ann, SQL_PQ_ANN),
+    Gate(q_leakage_split, SQL_LEAKAGE_SPLIT),
+    Gate(q_ivf_pq, SQL_IVF_PQ),
+    Gate(q_semantic_dedup, SQL_SEMANTIC_DEDUP),
+    Gate(q_kcenter, SQL_KCENTER),
+    Gate(q_pagerank, SQL_PAGERANK),
+    Gate(q_dsir, SQL_DSIR),
+    Gate(q_url_normalize, SQL_URL_NORMALIZE),
+    Gate(q_anchor_corpus, SQL_ANCHOR_CORPUS),
+    Gate(q_robots, SQL_ROBOTS),
+    Gate(q_curate_web, SQL_CURATE_WEB),
+    Gate(q_sitemap, SQL_SITEMAP),
+    Gate(q_crawl_schedule, SQL_CRAWL_SCHEDULE),
+    Gate(q_domain_curate, SQL_DOMAIN_CURATE),
+    Gate(q_dom_stats, SQL_DOM_STATS),
+    Gate(q_html_links, SQL_HTML_LINKS),
+    Gate(q_html_tables, SQL_HTML_TABLES),
+    Gate(q_html_table_stats, SQL_HTML_TABLE_STATS),
     # --- below: already driver-attested in r01-r04 ---
-    "q_row_cluster": q_row_cluster,
-    "q_span_merge": q_span_merge,
-    "q_col_histogram": q_col_histogram,
-    "q_cell_assign": q_cell_assign,
-    "q_table_score": q_table_score,
-    "q_hybrid_pick": q_hybrid_pick,
-    "q_norm_amount": q_norm_amount,
-    "q_fuzzy_header": q_fuzzy_header,
-    "q_dedup_exact": q_dedup_exact,
-    "q_text_quality": q_text_quality,
-    "q_token_count": q_token_count,
-    "q_lang_id": q_lang_id,
-    "q_fingerprint": q_fingerprint,
-    "q_ann_cosine": q_ann_cosine,
-    "q_page_filter": q_page_filter,
-    "q_line_group": q_line_group,
-    "q_sep_histogram": q_sep_histogram,
-    "q_numeric_anchor": q_numeric_anchor,
-    "q_line_dedupe": q_line_dedupe,
-    "q_event_windows": q_event_windows,
-    "q_event_sessions": q_event_sessions,
-    "q_event_json": q_event_json,
-    "q_minhash_sig": q_minhash_sig,
-    "q_minhash_pairs": q_minhash_pairs,
-    "q_ngram_jaccard": q_ngram_jaccard,
-    "q_containment": q_containment,
-    "q_dedup_clusters": q_dedup_clusters,
-    "q_cluster_doubling": q_cluster_doubling,
-    "q_dedup_fuzzy": q_dedup_fuzzy,
-    "q_dedup_ngrams": q_dedup_ngrams,
-    "q_dedup_fuzzy_incr": q_dedup_fuzzy_incr,
-    "q_simhash": q_simhash,
-    "q_lsh_ann": q_lsh_ann,
-    "q_ivf_ann": q_ivf_ann,
-    "q_embed_neardup": q_embed_neardup,
-    "q_knn_join": q_knn_join,
-    "q_ann_scale": q_ann_scale,
-    "q_asof_join": q_asof_join,
-    "q_range_join": q_range_join,
-    "q_media_features": q_media_features,
-    "q_media_resize": q_media_resize,
-    "q_frame_sample": q_frame_sample,
-    "q_video_dhash": q_video_dhash,
-    "q_video_neardup": q_video_neardup,
-    "q_audio_fp": q_audio_fp,
-    "q_audio_neardup": q_audio_neardup,
-    "q_image_dhash": q_image_dhash,
-    "q_image_dedup": q_image_dedup,
-    "q_image_dedup_keep": q_image_dedup_keep,
-    "q_embed_quantize": q_embed_quantize,
-    "q_dedup_keep": q_dedup_keep,
-    "q_vocab_topk": q_vocab_topk,
-    "q_boilerplate": q_boilerplate,
-    "q_hash_sample": q_hash_sample,
-    "q_quota_sample": q_quota_sample,
-    "q_pack_shards": q_pack_shards,
-    "q_pii_scrub": q_pii_scrub,
-    "q_doc_logprob": q_doc_logprob,
-    "q_chunk_docs": q_chunk_docs,
-    "q_repetition": q_repetition,
-    "q_curate": q_curate,
-    "q_dedup_incr": q_dedup_incr,
-    "q_html_main": q_html_main,
-    "q_extract_metrics": q_extract_metrics,
-    "q_extract_spans": q_extract_spans,
-}
-
-# ---------------------------------------------------------------------------
-# Per-query AQE partition-coalescing preference (guide §2: scale-adaptive
-# partitioning instead of a constant). The bench session disables
-# spark.sql.adaptive.coalescePartitions globally because the EXTRACTION
-# pipeline's stage-1 input rides a join exchange whose rows are
-# small-bytes/heavy-CPU — size-based coalescing collapses them onto few
-# cores (measured 3x regression, CLAUDE.md). Every OTHER registered query
-# is ordinary data-proportional work where coalescing tiny post-shuffle
-# partitions removes pure task-scheduling latency (interleaved A/B at
-# sf0.1 local[32], min of 2: q_bm25 6.53→1.77 s, q_leakage_split
-# 6.79→3.14 s, q_curate 6.70→3.37 s, q_tfidf_topk 2.89→1.24 s,
-# q_dedup_fuzzy 6.21→4.25 s, q_bpe_* 0.67-0.74x, CC loops 0.79-0.85x).
-# The wrapper sets the RUNTIME conf at build time — every caller
-# (bench.py sweep, driver correctness gate, oracle battery, tests)
-# executes the returned frame immediately, and each query declares its
-# own preference so ordering cannot leak state. parallelismFirst=false
-# makes the coalescing genuinely size-based (advisory 64 MB target), the
-# configuration that scales with input instead of with the local core
-# count. Results are partition-layout-independent (certified at
-# shuffle.partitions 32 AND 8; tests/battery already ran with coalescing
-# on by default).
-_COALESCE_OFF = {
-    "q_extract_stream_spans", "q_extract_stream_metrics",
-    "q_extract_lattice_spans", "q_extract_lattice_metrics",
-    "q_extract_ocr_spans", "q_extract_ocr_metrics",
-    "q_extract_hybrid_spans", "q_extract_hybrid_metrics",
-    "q_flagship_spans", "q_flagship_metrics",
-    "q_extract_metrics", "q_extract_spans",
-}
+    Gate(q_row_cluster, SQL_ROW_CLUSTER),
+    Gate(q_span_merge, SQL_SPAN_MERGE),
+    Gate(q_col_histogram, SQL_COL_HISTOGRAM),
+    Gate(q_cell_assign, SQL_CELL_ASSIGN),
+    Gate(q_table_score, SQL_TABLE_SCORE),
+    Gate(q_hybrid_pick, SQL_HYBRID_PICK),
+    Gate(q_norm_amount, SQL_NORM_AMOUNT),
+    Gate(q_fuzzy_header, SQL_FUZZY_HEADER),
+    Gate(q_dedup_exact, SQL_DEDUP_EXACT),
+    Gate(q_text_quality, SQL_TEXT_QUALITY),
+    Gate(q_token_count, SQL_TOKEN_COUNT),
+    Gate(q_lang_id, SQL_LANG_ID),
+    Gate(q_fingerprint, SQL_FINGERPRINT),
+    Gate(q_ann_cosine, SQL_ANN_COSINE),
+    Gate(q_page_filter, SQL_PAGE_FILTER),
+    Gate(q_line_group, SQL_LINE_GROUP),
+    Gate(q_sep_histogram, SQL_SEP_HISTOGRAM),
+    Gate(q_numeric_anchor, SQL_NUMERIC_ANCHOR),
+    Gate(q_line_dedupe, SQL_LINE_DEDUPE),
+    Gate(q_event_windows, SQL_EVENT_WINDOWS),
+    Gate(q_event_sessions, SQL_EVENT_SESSIONS),
+    Gate(q_event_json, SQL_EVENT_JSON),
+    Gate(q_minhash_sig, SQL_MINHASH_SIG),
+    Gate(q_minhash_pairs, SQL_MINHASH_PAIRS),
+    Gate(q_ngram_jaccard, SQL_NGRAM_JACCARD),
+    Gate(q_containment, SQL_CONTAINMENT),
+    Gate(q_dedup_clusters, SQL_DEDUP_CLUSTERS),
+    Gate(q_cluster_doubling, SQL_DEDUP_CLUSTERS),
+    Gate(q_dedup_fuzzy, SQL_DEDUP_FUZZY),
+    Gate(q_dedup_ngrams, SQL_DEDUP_NGRAMS),
+    Gate(q_dedup_fuzzy_incr, SQL_DEDUP_FUZZY_INCR),
+    Gate(q_simhash, SQL_SIMHASH),
+    Gate(q_lsh_ann, SQL_LSH_ANN),
+    Gate(q_ivf_ann, SQL_IVF_ANN),
+    Gate(q_embed_neardup, SQL_EMBED_NEARDUP),
+    Gate(q_knn_join, SQL_KNN_JOIN),
+    Gate(q_ann_scale, SQL_ANN_SCALE),
+    Gate(q_asof_join, SQL_ASOF_JOIN),
+    Gate(q_range_join, SQL_RANGE_JOIN),
+    Gate(q_media_features, SQL_MEDIA_FEATURES),
+    Gate(q_media_resize, SQL_MEDIA_RESIZE),
+    Gate(q_frame_sample, SQL_FRAME_SAMPLE),
+    Gate(q_video_dhash, SQL_VIDEO_DHASH),
+    Gate(q_video_neardup, SQL_VIDEO_NEARDUP),
+    Gate(q_audio_fp, SQL_AUDIO_FP),
+    Gate(q_audio_neardup, SQL_AUDIO_NEARDUP),
+    Gate(q_image_dhash, SQL_IMAGE_DHASH),
+    Gate(q_image_dedup, SQL_IMAGE_DEDUP),
+    Gate(q_image_dedup_keep, SQL_IMAGE_DEDUP_KEEP),
+    Gate(q_embed_quantize, SQL_EMBED_QUANTIZE),
+    Gate(q_dedup_keep, SQL_DEDUP_KEEP),
+    Gate(q_vocab_topk, SQL_VOCAB_TOPK),
+    Gate(q_boilerplate, SQL_BOILERPLATE),
+    Gate(q_hash_sample, SQL_HASH_SAMPLE),
+    Gate(q_quota_sample, SQL_QUOTA_SAMPLE),
+    Gate(q_pack_shards, SQL_PACK_SHARDS),
+    Gate(q_pii_scrub, SQL_PII_SCRUB),
+    Gate(q_doc_logprob, SQL_DOC_LOGPROB),
+    Gate(q_chunk_docs, SQL_CHUNK_DOCS),
+    Gate(q_repetition, SQL_REPETITION),
+    Gate(q_curate, SQL_CURATE),
+    Gate(q_dedup_incr, SQL_DEDUP_INCR),
+    Gate(q_html_main, SQL_HTML_MAIN),
+    # rows-only (no SQL-expressible oracle): the full HYBRID pipeline;
+    # its stream path is hash-gated by q_extract_stream_spans
+    Gate(q_extract_metrics, None),
+    Gate(q_extract_spans, None),
+)
 
 
-def _with_exec_prefs(name: str, fn):
-    import functools
+def _with_exec_prefs(fn):
+    """Set the gate's exec prefs on the session, then build.
 
-    extraction = name in _COALESCE_OFF
+    Extraction gates (``q_extract_*``, ``q_flagship_*``) run with AQE
+    partition coalescing off and 64-row Arrow batches: their stage-1 rows
+    are small-bytes/heavy-CPU, so size-based coalescing of a hashed
+    payload join packs them onto few cores (measured 3x regression), and
+    64 rows is the raster-kernel batch. Every other gate is
+    data-proportional operator work, where coalescing and 4096-row
+    batches cut scheduling and per-batch overhead (sf0.1 local[32] A/B,
+    e.g. q_bm25 6.53→1.77 s, q_ann_scale 2.62→0.93 s). parallelismFirst
+    off keeps coalescing size-based. Every gate sets all three confs, so
+    none inherits another's; every caller executes the frame at once."""
+    extraction = fn.__name__.startswith(("q_extract_", "q_flagship_"))
     enabled = "false" if extraction else "true"
-    # Arrow batch size: 64 is tuned for the extraction kernels' raster
-    # rows (see bench.py); the operator gates' mapInPandas stages are
-    # narrow numeric/BLAS work where 64-row batches cost per-batch
-    # overhead (interleaved A/B, min of 2: q_ann_scale 2.62→0.93 s,
-    # q_media_features/q_ivf_pq ~0.75x, others neutral).
     batch = "64" if extraction else "4096"
 
     @functools.wraps(fn)
@@ -8885,154 +8874,5 @@ def _with_exec_prefs(name: str, fn):
     return wrapped
 
 
-QUERIES = {k: _with_exec_prefs(k, v) for k, v in QUERIES.items()}
-
-ORACLES = {
-    "q_row_cluster": SQL_ROW_CLUSTER,
-    "q_span_merge": SQL_SPAN_MERGE,
-    "q_col_histogram": SQL_COL_HISTOGRAM,
-    "q_cell_assign": SQL_CELL_ASSIGN,
-    "q_table_score": SQL_TABLE_SCORE,
-    "q_hybrid_pick": SQL_HYBRID_PICK,
-    "q_norm_amount": SQL_NORM_AMOUNT,
-    "q_fuzzy_header": SQL_FUZZY_HEADER,
-    "q_dedup_exact": SQL_DEDUP_EXACT,
-    "q_text_quality": SQL_TEXT_QUALITY,
-    "q_token_count": SQL_TOKEN_COUNT,
-    "q_lang_id": SQL_LANG_ID,
-    "q_fingerprint": SQL_FINGERPRINT,
-    "q_ann_cosine": SQL_ANN_COSINE,
-    "q_page_filter": SQL_PAGE_FILTER,
-    "q_line_group": SQL_LINE_GROUP,
-    "q_sep_histogram": SQL_SEP_HISTOGRAM,
-    "q_numeric_anchor": SQL_NUMERIC_ANCHOR,
-    "q_line_dedupe": SQL_LINE_DEDUPE,
-    "q_event_windows": SQL_EVENT_WINDOWS,
-    "q_event_sessions": SQL_EVENT_SESSIONS,
-    "q_event_json": SQL_EVENT_JSON,
-    "q_minhash_sig": SQL_MINHASH_SIG,
-    "q_minhash_pairs": SQL_MINHASH_PAIRS,
-    "q_ngram_jaccard": SQL_NGRAM_JACCARD,
-    "q_containment": SQL_CONTAINMENT,
-    "q_dedup_clusters": SQL_DEDUP_CLUSTERS,
-    "q_cluster_doubling": SQL_DEDUP_CLUSTERS,
-    "q_dedup_fuzzy": SQL_DEDUP_FUZZY,
-    "q_dedup_ngrams": SQL_DEDUP_NGRAMS,
-    "q_dedup_fuzzy_incr": SQL_DEDUP_FUZZY_INCR,
-    "q_simhash": SQL_SIMHASH,
-    "q_lsh_ann": SQL_LSH_ANN,
-    "q_ivf_ann": SQL_IVF_ANN,
-    "q_embed_neardup": SQL_EMBED_NEARDUP,
-    "q_knn_join": SQL_KNN_JOIN,
-    "q_ann_scale": SQL_ANN_SCALE,
-    "q_asof_join": SQL_ASOF_JOIN,
-    "q_range_join": SQL_RANGE_JOIN,
-    "q_media_features": SQL_MEDIA_FEATURES,
-    "q_media_resize": SQL_MEDIA_RESIZE,
-    "q_frame_sample": SQL_FRAME_SAMPLE,
-    "q_video_dhash": SQL_VIDEO_DHASH,
-    "q_video_neardup": SQL_VIDEO_NEARDUP,
-    "q_audio_fp": SQL_AUDIO_FP,
-    "q_audio_neardup": SQL_AUDIO_NEARDUP,
-    "q_image_dhash": SQL_IMAGE_DHASH,
-    "q_image_dedup": SQL_IMAGE_DEDUP,
-    "q_image_dedup_keep": SQL_IMAGE_DEDUP_KEEP,
-    "q_embed_quantize": SQL_EMBED_QUANTIZE,
-    "q_dedup_keep": SQL_DEDUP_KEEP,
-    "q_vocab_topk": SQL_VOCAB_TOPK,
-    "q_hash_embed": SQL_HASH_EMBED,
-    "q_token_drift": SQL_TOKEN_DRIFT,
-    "q_corpus_divergence": SQL_CORPUS_DIVERGENCE,
-    "q_window_drift": SQL_WINDOW_DRIFT,
-    "q_zorder": SQL_ZORDER,
-    "q_compact_plan": SQL_COMPACT_PLAN,
-    "q_rp_project": SQL_RP_PROJECT,
-    "q_embed_audit": SQL_EMBED_AUDIT,
-    "q_bpe_encode": SQL_BPE_ENCODE,
-    "q_rp_ann": SQL_RP_ANN,
-    "q_boilerplate": SQL_BOILERPLATE,
-    "q_hash_sample": SQL_HASH_SAMPLE,
-    "q_quota_sample": SQL_QUOTA_SAMPLE,
-    "q_pack_shards": SQL_PACK_SHARDS,
-    "q_shard_manifest": SQL_SHARD_MANIFEST,
-    "q_pii_scrub": SQL_PII_SCRUB,
-    "q_doc_logprob": SQL_DOC_LOGPROB,
-    "q_chunk_docs": SQL_CHUNK_DOCS,
-    "q_repetition": SQL_REPETITION,
-    "q_curate": SQL_CURATE,
-    "q_decontaminate": SQL_DECONTAMINATE,
-    "q_decontam_scrub": SQL_DECONTAM_SCRUB,
-    "q_warc_parse": SQL_WARC_PARSE,
-    "q_warc_docs": SQL_WARC_DOCS,
-    "q_temperature_sample": SQL_TEMPERATURE_SAMPLE,
-    "q_dedup_paragraphs": SQL_DEDUP_PARAGRAPHS,
-    "q_pack_sequences": SQL_PACK_SEQUENCES,
-    "q_pack_multimodal": SQL_PACK_MULTIMODAL,
-    "q_cdc_chunks": SQL_CDC_CHUNKS,
-    "q_cdc_dedup": SQL_CDC_DEDUP,
-    "q_cdc_rewrite": SQL_CDC_REWRITE,
-    "q_mix_corpora": SQL_MIX_CORPORA,
-    "q_ppl_buckets": SQL_PPL_BUCKETS,
-    "q_edit_sim": SQL_EDIT_SIM,
-    "q_bigram_lm": SQL_BIGRAM_LM,
-    "q_event_join": SQL_EVENT_JOIN,
-    "q_text_clean": SQL_TEXT_CLEAN,
-    "q_nfc_normalize": SQL_NFC_NORMALIZE,
-    "q_char_entropy": SQL_CHAR_ENTROPY,
-    "q_bpe_merges": SQL_BPE_MERGES,
-    "q_bpe_token_count": SQL_BPE_TOKEN_COUNT,
-    "q_qhist": SQL_QHIST,
-    "q_dedup_keep_best": SQL_DEDUP_KEEP_BEST,
-    "q_tfidf_topk": SQL_TFIDF_TOPK,
-    "q_bm25": SQL_BM25,
-    "q_hll": SQL_HLL,
-    "q_cms": SQL_CMS,
-    "q_quantiles": SQL_QUANTILES,
-    "q_quantiles_weighted": SQL_QUANTILES_WEIGHTED,
-    "q_key_skew": SQL_KEY_SKEW,
-    "q_salted_join": SQL_SALTED_JOIN,
-    "q_quality_classifier": SQL_QUALITY_CLASSIFIER,
-    "q_pmi": SQL_PMI,
-    "q_event_distinct": SQL_EVENT_DISTINCT,
-    "q_snapshot_diff": SQL_SNAPSHOT_DIFF,
-    "q_source_overlap": SQL_SOURCE_OVERLAP,
-    "q_cms_joinsize": SQL_CMS_JOINSIZE,
-    "q_corpus_report": SQL_CORPUS_REPORT,
-    "q_bloom_dedup": SQL_BLOOM_DEDUP,
-    "q_pq_encode": SQL_PQ_ENCODE,
-    "q_pq_ann": SQL_PQ_ANN,
-    "q_leakage_split": SQL_LEAKAGE_SPLIT,
-    "q_ivf_pq": SQL_IVF_PQ,
-    "q_semantic_dedup": SQL_SEMANTIC_DEDUP,
-    "q_kcenter": SQL_KCENTER,
-    "q_pagerank": SQL_PAGERANK,
-    "q_dsir": SQL_DSIR,
-    "q_url_normalize": SQL_URL_NORMALIZE,
-    "q_anchor_corpus": SQL_ANCHOR_CORPUS,
-    "q_robots": SQL_ROBOTS,
-    "q_curate_web": SQL_CURATE_WEB,
-    "q_sitemap": SQL_SITEMAP,
-    "q_crawl_schedule": SQL_CRAWL_SCHEDULE,
-    "q_domain_curate": SQL_DOMAIN_CURATE,
-    "q_dedup_incr": SQL_DEDUP_INCR,
-    "q_html_main": SQL_HTML_MAIN,
-    "q_dom_stats": SQL_DOM_STATS,
-    "q_html_links": SQL_HTML_LINKS,
-    "q_html_tables": SQL_HTML_TABLES,
-    "q_html_table_stats": SQL_HTML_TABLE_STATS,
-    # full stream-kernel transliteration gating the real pipeline
-    # end-to-end (stream-only config over derived text docs)
-    "q_extract_hybrid_spans": SQL_EXTRACT_HYBRID_SPANS,
-    "q_extract_hybrid_metrics": SQL_EXTRACT_HYBRID_METRICS,
-    "q_flagship_spans": SQL_FLAGSHIP_SPANS,
-    "q_flagship_metrics": SQL_FLAGSHIP_METRICS,
-    "q_extract_lattice_spans": SQL_EXTRACT_LATTICE_SPANS,
-    "q_extract_lattice_metrics": SQL_EXTRACT_LATTICE_METRICS,
-    "q_extract_ocr_spans": SQL_EXTRACT_OCR_SPANS,
-    "q_extract_ocr_metrics": SQL_EXTRACT_OCR_METRICS,
-    "q_extract_stream_spans": SQL_EXTRACT_STREAM_SPANS,
-    "q_extract_stream_metrics": SQL_EXTRACT_STREAM_METRICS,
-    # rows-only (no SQL-expressible oracle): q_extract_metrics /
-    # q_extract_spans (the full HYBRID pipeline; the stream path is
-    # hash-gated by q_extract_stream_spans above)
-}
+QUERIES = {g.build.__name__: _with_exec_prefs(g.build) for g in GATES}
+ORACLES = {g.build.__name__: g.oracle for g in GATES if g.oracle is not None}

@@ -21,6 +21,7 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 import hashlib
+import warnings
 
 from pyspark.sql import DataFrame, Window, functions as F
 
@@ -481,8 +482,6 @@ def duplicate_clusters(pairs: DataFrame, a_col: str = "a", b_col: str = "b",
       (the jump lands on ``label_old[m] <= m`` for ``m = label[x]``),
       so the unique fixpoint is still the component minimum.
     """
-    import warnings
-
     if algorithm not in ("propagate", "doubling"):
         raise ValueError(
             f"algorithm must be 'propagate' or 'doubling', got {algorithm!r}")
@@ -495,16 +494,17 @@ def duplicate_clusters(pairs: DataFrame, a_col: str = "a", b_col: str = "b",
         prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", str(num_partitions))
     try:
-        fn = (_propagate_min_labels if algorithm == "propagate"
-              else _doubling_min_labels)
-        return fn(edges, max_iter, check_every, warnings)
+        return _min_labels(edges, max_iter, check_every,
+                           doubling=algorithm == "doubling")
     finally:
         if prev_sp is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
 
 
-def _propagate_min_labels(edges: DataFrame, max_iter: int,
-                          check_every: int, warnings) -> DataFrame:
+def _min_labels(edges: DataFrame, max_iter: int, check_every: int,
+                doubling: bool) -> DataFrame:
+    """The connected-components round loop: min-label propagation, plus
+    one pointer-jump join per round when ``doubling``."""
     # checkpoint the edge list BEFORE iterating: without this every round
     # re-executes the upstream pair-generation pipeline (its lineage),
     # not just the propagation join. Lazy: the eager labels checkpoint
@@ -525,6 +525,24 @@ def _propagate_min_labels(edges: DataFrame, max_iter: int,
         new = (own.unionByName(nbr)
                .groupBy("node").agg(F.min("cand").alias("label"),
                                     F.min("own").alias("own")))
+        if doubling:
+            # Pointer jump through the PREVIOUS round's checkpointed
+            # labels (label <- labels_prev[min_cand]): a self-join on the
+            # fresh aggregation would execute the union+groupBy TWICE per
+            # round (measured: 4 HashAggregates, zero ReusedExchange),
+            # while labels_prev is a checkpointed scan. Jumping through
+            # one-round-older pointers is still logarithmic (chain-99
+            # converges in 8 rounds, chain-500 in 10). Every label is a
+            # node id, so the join is total (left join + coalesce is
+            # belt-and-braces); labels only decrease and stay
+            # in-component, so the fixpoint is still the component min.
+            prev = labels.select(F.col("node").alias("_pn"),
+                                 F.col("label").alias("_pl"))
+            new = (new.join(prev, new["label"] == prev["_pn"], "left")
+                   .select(new["node"],
+                           F.coalesce(F.col("_pl"), new["label"])
+                           .alias("label"),
+                           new["own"]))
         # every node has exactly one non-null own row, so own == the
         # previous label. On counted rounds the checkpoint is LAZY: the
         # convergence count is the job that materializes it, so the
@@ -535,74 +553,6 @@ def _propagate_min_labels(edges: DataFrame, max_iter: int,
         # before the next builds on it; changed stays None = unknown.
         # The final round always counts so the non-convergence warning
         # stays live.
-        will_check = (it + 1) % check_every == 0 or it == max_iter - 1
-        new = new.localCheckpoint(eager=not will_check)
-        if will_check:
-            changed = new.filter(F.col("label") != F.col("own")).count()
-        else:
-            changed = None
-        labels = new.select("node", "label")
-        if changed == 0:
-            break
-    if changed is not None and changed > 0:
-        warnings.warn(
-            f"duplicate_clusters: stopped at max_iter={max_iter} while the "
-            f"final round still changed {changed} labels — convergence is "
-            "NOT confirmed and long-chain components may carry non-minimal "
-            "labels; raise max_iter to verify",
-            RuntimeWarning, stacklevel=2)
-    return labels.select("node", F.col("label").alias("cluster"))
-
-
-def _doubling_min_labels(edges: DataFrame, max_iter: int,
-                         check_every: int, warnings) -> DataFrame:
-    """Min-label propagation + pointer jumping.
-
-    The jump reads the PREVIOUS round's checkpointed label table
-    (``label <- labels_prev[min_cand]``) rather than self-joining the
-    fresh min-aggregation: a self-join on the aggregation would execute
-    the union+groupBy TWICE per round (measured: 4 HashAggregates, zero
-    ReusedExchange), while ``labels_prev`` is a checkpointed scan that
-    costs nothing to read twice. Jumping through the one-round-older
-    pointers contracts fractionally slower per round but is still
-    logarithmic (chain-99 converges in 8 rounds, chain-500 in 10) at
-    one aggregation and zero extra barriers per round.
-
-    Correctness: every label value is a node id from the initial node
-    set (ids survive the min), so the jump join is total — the left
-    join + coalesce is belt-and-braces, not a semantic choice. Labels
-    only decrease (``labels_prev[m] <= m`` because ``label[x] <= x``
-    always) and stay in-component; at a fixpoint the min step forces
-    label[u] == label[v] across every undirected edge, hence labels
-    are constant per component, hence = the minimum (which keeps its
-    own id). Same convergence check / warning contract as
-    _propagate_min_labels."""
-    # lazy edges + eager labels: both persist in one job (see
-    # _propagate_min_labels)
-    edges = edges.localCheckpoint(eager=False)
-    labels = (edges.select("u").distinct()
-              .select(F.col("u").alias("node"), F.col("u").alias("label")))
-    labels = labels.localCheckpoint(eager=True)
-    label_t = labels.schema["label"].dataType
-    changed = None
-    for it in range(max_iter):
-        nbr = (edges.join(labels, edges["v"] == labels["node"])
-               .select(edges["u"].alias("node"),
-                       F.col("label").alias("cand"),
-                       F.lit(None).cast(label_t).alias("own")))
-        own = labels.select("node", F.col("label").alias("cand"),
-                            F.col("label").alias("own"))
-        m = (own.unionByName(nbr)
-             .groupBy("node").agg(F.min("cand").alias("label"),
-                                  F.min("own").alias("own")))
-        prev = labels.select(F.col("node").alias("_pn"),
-                             F.col("label").alias("_pl"))
-        new = (m.join(prev, m["label"] == prev["_pn"], "left")
-               .select(m["node"],
-                       F.coalesce(F.col("_pl"), m["label"]).alias("label"),
-                       m["own"]))
-        # lazy on counted rounds — the count materializes it (see
-        # _propagate_min_labels)
         will_check = (it + 1) % check_every == 0 or it == max_iter - 1
         new = new.localCheckpoint(eager=not will_check)
         if will_check:

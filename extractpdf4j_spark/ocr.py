@@ -18,9 +18,8 @@ implementations:
 * :class:`PytesseractBackend` — the production path, import-gated; raises
   a clearly-marked NotImplementedError when pytesseract is absent.
 
-The PSM sweep is preserved in :func:`ocr_words_heuristic` so the adaptive
-physical-strategy behavior (the reference's only cost-based choice,
-SURVEY.md §4) survives with a real backend.
+The engine runs one configured PSM (``ExtractConfig.tess_psm``); the
+reference's PSM sweep is not reproduced, since only its tests call it.
 """
 
 from __future__ import annotations
@@ -165,15 +164,3 @@ def default_backend(lang: str = "eng", oem: int = 1,
         return PytesseractBackend(lang=lang, oem=oem)
     except NotImplementedError:
         return EmbeddedWordsBackend()
-
-
-def ocr_words_heuristic(backend: OcrBackend, payload: PagePayload,
-                        image: np.ndarray, psms=(6, 4, 11, 3)) -> pd.DataFrame:
-    """PSM sweep keeping the run with most words (Ocr.java:28-45; strict
-    ``>`` so the first PSM wins ties)."""
-    best = pd.DataFrame({c: [] for c in OCR_WORD_COLS})
-    for psm in psms:
-        cur = backend.words(payload, image, psm)
-        if len(cur) > len(best):
-            best = cur
-    return best

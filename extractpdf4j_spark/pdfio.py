@@ -185,6 +185,26 @@ def _doc_id_from_path(path: str) -> str:
     return name[:-4] if name.lower().endswith(".pdf") else name
 
 
+def _encode_pages(pages: list[PageDecode], ref_prefix: str):
+    """Decoded pages → one (kind, text, media_ref, offset, page, payload)
+    span per text layer and per raster, in page order. The Spark path
+    (``_make_decode_pdfs``, prefix ``"{doc_id}:"``) and the in-process
+    path (:func:`decode_pages_to_document`, empty prefix) both encode
+    through here, so their spans agree."""
+    off = 0
+    for pg in pages:
+        if pg.runs:
+            yield ("text", encode_text_span(pg.page, pg.runs), "", off,
+                   pg.page, None)
+            off += 1
+        if pg.image is not None:
+            yield ("media", "", f"{ref_prefix}p{pg.page}", off, pg.page,
+                   encode_media_payload(pg.page, pg.image, pg.dpi,
+                                        pg.page_width_pt, pg.page_height_pt,
+                                        pg.words))
+            off += 1
+
+
 def _make_decode_pdfs(backend_factory):
     cols = [f.name for f in DECODED_SCHEMA.fields]
 
@@ -205,22 +225,10 @@ def _make_decode_pdfs(backend_factory):
                     rows.append((doc_id, "text", MALFORMED_MARKER, "",
                                  0, -1, None))
                     continue
-                off = 0
-                for pg in pages:
-                    if pg.runs:
-                        rows.append((doc_id, "text",
-                                     encode_text_span(pg.page, pg.runs),
-                                     "", off, pg.page, None))
-                        off += 1
-                    if pg.image is not None:
-                        ref = f"{doc_id}:p{pg.page}"
-                        payload = encode_media_payload(
-                            pg.page, pg.image, pg.dpi, pg.page_width_pt,
-                            pg.page_height_pt, pg.words)
-                        rows.append((doc_id, "media", "", ref, off,
-                                     pg.page, payload))
-                        off += 1
-                if off == 0:   # zero-page/empty PDF still yields a doc row
+                n = len(rows)
+                rows.extend((doc_id, *span)
+                            for span in _encode_pages(pages, f"{doc_id}:"))
+                if len(rows) == n:  # zero-page/empty PDF still yields a row
                     rows.append((doc_id, "empty", "", "", 0, -1, None))
             yield pd.DataFrame(rows, columns=cols)
 
@@ -232,24 +240,14 @@ def decode_pages_to_document(pages: list[PageDecode]
     """Decoded pages → (spans, media_payloads) in the single-document
     model :func:`local.extract_document` consumes — the in-process
     counterpart of the rows `_make_decode_pdfs` emits for the Spark
-    path (same encode functions, same span ordering)."""
+    path (both encode through ``_encode_pages``)."""
     spans: list[dict] = []
     media: dict[str, bytes] = {}
-    off = 0
-    for pg in pages:
-        if pg.runs:
-            spans.append({"kind": "text",
-                          "text": encode_text_span(pg.page, pg.runs),
-                          "media_ref": "", "offset": off})
-            off += 1
-        if pg.image is not None:
-            ref = f"p{pg.page}"
-            media[ref] = encode_media_payload(
-                pg.page, pg.image, pg.dpi, pg.page_width_pt,
-                pg.page_height_pt, pg.words)
-            spans.append({"kind": "media", "text": "",
-                          "media_ref": ref, "offset": off})
-            off += 1
+    for kind, text, ref, off, _page, payload in _encode_pages(pages, ""):
+        spans.append({"kind": kind, "text": text, "media_ref": ref,
+                      "offset": off})
+        if payload is not None:
+            media[ref] = payload
     return spans, media
 
 

@@ -122,6 +122,12 @@ PAGE_FILTERED = -3      # media page outside the page-range selection /
 PAGE_UNKNOWN_KIND = -4  # span kind neither 'text' nor 'media' (schema drift)
 
 
+def _num_partitions(df: DataFrame, num_partitions: int | None) -> int:
+    """``num_partitions``, or the session's shuffle partition count."""
+    return num_partitions or int(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+
+
 def build_page_work(docs: DataFrame, media: DataFrame | None,
                     cfg: ExtractConfig,
                     num_partitions: int | None = None) -> DataFrame:
@@ -140,9 +146,17 @@ def build_page_work(docs: DataFrame, media: DataFrame | None,
     ``num_partitions`` spread costs no extra exchange, and raster
     payloads attach LAST via one media_ref equi-join — payload bytes
     cross exactly ONE exchange end-to-end (they used to cross three).
-    Rows without a media_ref bypass that join through a union, so the
-    null-ref key never concentrates text-heavy corpora on one task.
+    Rows without a media_ref join on a salted ``_jref`` key that matches
+    nothing, so the null-ref key never concentrates text-heavy corpora on
+    one task.
+
+    ``num_partitions=None`` means the session's
+    ``spark.sql.shuffle.partitions``, read at build time: the page
+    exchanges are always numbered (REPARTITION_BY_NUM), which AQE never
+    coalesces, so stage 1 keeps its spread whatever the session's
+    coalescing setting.
     """
+    num_partitions = _num_partitions(docs, num_partitions)
     pages = parse_pages(cfg.pages)
     filtered = not is_all(pages)
 
@@ -184,12 +198,9 @@ def build_page_work(docs: DataFrame, media: DataFrame | None,
                           .select("doc_id",
                                   F.lit(PAGE_FILTERED).alias("page"),
                                   F.lit("").alias("glyph_blob")))
-        out = (text_pages.unionByName(media_presence)
-               .withColumn("payload", F.lit(None).cast("binary")))
-        if num_partitions:
-            out = out.repartition(num_partitions, F.col("doc_id"),
-                                  F.col("page"))
-        return out
+        return (text_pages.unionByName(media_presence)
+                .withColumn("payload", F.lit(None).cast("binary"))
+                .repartition(num_partitions, F.col("doc_id"), F.col("page")))
 
     media_refs = spans.filter(F.col("s.kind") == "media").select(
         "doc_id", F.col("s.media_ref").alias("media_ref"))
@@ -214,14 +225,14 @@ def build_page_work(docs: DataFrame, media: DataFrame | None,
         media_pages = media_refs.select(
             "doc_id", F.lit(PAGE_MALFORMED).alias("page"), "media_ref")
 
-    tp, mp = text_pages, media_pages
-    if num_partitions:
-        # pre-repartition BOTH join inputs to the target partitioning:
-        # the outer join then reuses it (no ENSURE_REQUIREMENTS exchange)
-        # and no separate repartition of the joined rows is needed —
-        # glyph blobs cross one exchange instead of two
-        tp = tp.repartition(num_partitions, F.col("doc_id"), F.col("page"))
-        mp = mp.repartition(num_partitions, F.col("doc_id"), F.col("page"))
+    # pre-repartition BOTH join inputs to the target partitioning: the
+    # outer join then reuses it (no ENSURE_REQUIREMENTS exchange) and no
+    # separate repartition of the joined rows is needed — glyph blobs
+    # cross one exchange instead of two
+    tp = text_pages.repartition(num_partitions, F.col("doc_id"),
+                                F.col("page"))
+    mp = media_pages.repartition(num_partitions, F.col("doc_id"),
+                                 F.col("page"))
     # SHUFFLE_HASH: a full-outer sort-merge pays two whole-partition sorts
     # (plus their codegen) for metadata-sized rows; the hash variant
     # builds the media side per partition instead (bounded: page-level
@@ -441,27 +452,27 @@ def extract(docs: DataFrame, media: DataFrame | None = None,
             num_partitions: int | None = None) -> DataFrame:
     """The full extraction plan (lazy). Returns the combined per-document
     DataFrame: extracted spans (as JSON, see :func:`with_spans`) plus
-    metrics columns."""
+    metrics columns. ``num_partitions=None`` means the session's
+    ``spark.sql.shuffle.partitions``, read when the plan is built."""
     # Explicit page-hash salting inside build_page_work: unique
     # (doc_id, page) keys spread a giant document across the cluster
     # instead of one task (rows carrying a media_ref distribute by the
-    # equally-unique ref hash instead). Run the session with
-    # spark.sql.adaptive.coalescePartitions.enabled=false so AQE's
-    # SIZE-based coalescing doesn't collapse these small-bytes /
-    # heavy-CPU rows onto a few cores (measured 3x regression).
+    # equally-unique ref hash instead). The page and stage-2 exchanges are
+    # numbered (num_partitions, or the session's shuffle partitions when
+    # None), so AQE's SIZE-based coalescing never collapses these
+    # small-bytes / heavy-CPU rows onto a few cores (measured 3x
+    # regression). Only a payload join too big to broadcast adds an
+    # exchange that session coalescing may still shrink.
+    num_partitions = _num_partitions(docs, num_partitions)
     work = build_page_work(docs, media, cfg, num_partitions)
     page_results = work.mapInPandas(_make_extract_pages(cfg),
                                     schema=PAGE_RESULT_SCHEMA)
     # one explicit hash shuffle co-locates each document's page rows, then
-    # stage 2 runs partition-wise (see _make_assemble_partition)
-    sel_parts = [F.col("doc_id")]
-    if num_partitions:
-        combined_repart = page_results.repartition(num_partitions, *sel_parts)
-    else:
-        combined_repart = page_results.repartition(*sel_parts)
-    # local (spillable, JVM-side) sort so each document is a contiguous
+    # stage 2 runs partition-wise (see _make_assemble_partition); the
+    # local (spillable, JVM-side) sort makes each document a contiguous
     # run — the streaming assemble's memory-bound contract; no exchange
-    combined_repart = combined_repart.sortWithinPartitions("doc_id")
+    combined_repart = (page_results.repartition(num_partitions, "doc_id")
+                       .sortWithinPartitions("doc_id"))
     combined = combined_repart.mapInPandas(_make_assemble_partition(cfg),
                                            schema=COMBINED_SCHEMA)
     # Completeness holds by construction: explode_outer + presence

@@ -5,11 +5,12 @@ request/response, PdfExtractController.java:40-44), but a corpus-scale
 deployment ingests documents continuously. The shapes:
 
 * :func:`stream_extraction` — ``readStream`` on the documents location →
-  ``foreachBatch`` running the same extraction plan per micro-batch →
-  append sink, with the stream checkpoint giving exactly-once per-batch
-  semantics on top of the pipeline's own per-document resume table.
-  foreachBatch is the right altitude for extraction itself: it is
-  per-document, with no cross-batch state.
+  ``foreachBatch`` running :func:`pipeline.run_extraction` per
+  micro-batch: the stream checkpoint skips committed batches, and the
+  run's resume anti-join against ``{out_dir}/combined`` drops documents
+  already written, so a replayed batch (lost checkpoint, failed commit)
+  writes no document twice. foreachBatch is the right altitude for
+  extraction itself: it is per-document, with no cross-batch state.
 * :func:`windowed_event_metrics` — watermark + event-time tumbling
   windows over an ingestion-event stream (late data dropped past the
   watermark); the aggregation expression is shared with the batch gate
@@ -55,7 +56,7 @@ from pyspark.sql.types import (ArrayType, BooleanType, IntegerType,
                                LongType, StringType, StructField, StructType)
 
 from .config import ExtractConfig
-from .pipeline import DOCUMENTS_SCHEMA, SPAN_STRUCT, extract
+from .pipeline import DOCUMENTS_SCHEMA, SPAN_STRUCT, run_extraction
 
 
 def stream_extraction(spark: SparkSession, documents_path: str,
@@ -68,15 +69,18 @@ def stream_extraction(spark: SparkSession, documents_path: str,
 
     ``media`` is a static (dimension-style) DataFrame joined into every
     micro-batch; a fully streaming media side would arrive pre-joined in
-    the documents table instead.
+    the documents table instead. Each micro-batch is one resumed
+    :func:`pipeline.run_extraction` into ``{out_dir}/combined`` with run
+    id ``stream-{batch_id}``.
     """
     docs_stream = (spark.readStream
                    .schema(DOCUMENTS_SCHEMA)
                    .parquet(documents_path))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        combined = extract(batch_df, media, cfg, num_partitions)
-        combined.write.mode("append").parquet(f"{out_dir}/combined")
+        run_extraction(spark, batch_df, media, cfg, out_dir,
+                       f"stream-{batch_id}", resume=True,
+                       num_partitions=num_partitions)
 
     writer = (docs_stream.writeStream
               .option("checkpointLocation", checkpoint_dir)
@@ -392,11 +396,6 @@ def stream_assemble_documents(span_events: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Custom stateful operator: cross-batch streaming exact dedup
 # ---------------------------------------------------------------------------
-
-DEDUP_IN_SCHEMA = StructType([
-    StructField("doc_id", StringType()),
-    StructField("text_hash", StringType()),
-])
 
 DEDUP_OUT_SCHEMA = StructType([
     StructField("text_hash", StringType()),

@@ -48,23 +48,60 @@ def _oracle_pairs():
 
 
 def test_registry_contract():
-    """Registry order, oracle coverage and the extraction exec-prefs set.
-    External correctness checks attest the first 50 registered gates by
-    position, so the 10 E2E/flagship gates must stay first; ``_COALESCE_OFF`` must name
-    exactly the builders that reach ``pipeline.extract``, or a misspelled
-    or forgotten name would run an extraction gate with coalescing on."""
-    from extractpdf4j_spark.entry_queries import (ORACLES, QUERIES,
-                                                  _COALESCE_OFF)
+    """Registry order and oracle coverage. External correctness checks
+    attest registered gates by position, so the whole order is pinned by
+    hash and the 10 E2E/flagship gates must stay first. ``QUERIES`` is a
+    dict built from ``GATES``, so a repeated builder would silently drop
+    a gate: the lengths must agree."""
+    import hashlib
+
+    from extractpdf4j_spark.entry_queries import GATES, ORACLES, QUERIES
+    assert len(GATES) == len(QUERIES) == 144
+    assert hashlib.sha256("\n".join(QUERIES).encode()).hexdigest() == (
+        "df9dc1c5eee1bb30174979161dafe07ccacb6430d44eee4ac2e06c98f3fd8bdd")
     gates = [f"q_extract_{s}_{kind}"
              for s in ("stream", "lattice", "ocr", "hybrid")
              for kind in ("spans", "metrics")]
     assert list(QUERIES)[:10] == gates + ["q_flagship_spans",
                                           "q_flagship_metrics"]
-    assert set(ORACLES) <= set(QUERIES)
-    assert set(QUERIES) - set(ORACLES) == {"q_extract_metrics",
-                                           "q_extract_spans"}
-    assert _COALESCE_OFF == {n for n in QUERIES
-                             if n.startswith(("q_extract_", "q_flagship_"))}
+    assert {g.build.__name__ for g in GATES if g.oracle is None} == {
+        "q_extract_metrics", "q_extract_spans"}
+    assert len(ORACLES) == 142 and set(ORACLES) <= set(QUERIES)
+
+
+def test_exec_prefs_follow_gate_name():
+    """Every gate sets the same three session confs, picked by its name:
+    the 12 builders that reach ``pipeline.extract`` (``q_extract_*``,
+    ``q_flagship_*``) run with coalescing off and 64-row Arrow batches,
+    every other gate with coalescing on and 4096-row batches. No Spark:
+    a stub per registered name is wrapped and called on a fake session
+    that records ``conf.set``."""
+    from types import SimpleNamespace
+
+    from extractpdf4j_spark.entry_queries import QUERIES, _with_exec_prefs
+
+    prefs = {}
+    for name in QUERIES:
+        confs = {}
+        session = SimpleNamespace(conf=SimpleNamespace(
+            set=lambda k, v, confs=confs: confs.__setitem__(k, v)))
+
+        def stub(spark, sf):
+            return (spark, sf)
+
+        stub.__name__ = name
+        assert _with_exec_prefs(stub)(session, "sf") == (session, "sf")
+        assert confs.pop(
+            "spark.sql.adaptive.coalescePartitions.parallelismFirst") == "false"
+        prefs[name] = (
+            confs.pop("spark.sql.adaptive.coalescePartitions.enabled"),
+            confs.pop("spark.sql.execution.arrow.maxRecordsPerBatch"))
+        assert not confs, f"{name}: unexpected confs {confs}"
+    extraction = {n for n, p in prefs.items() if p == ("false", "64")}
+    assert extraction == {n for n in QUERIES
+                          if n.startswith(("q_extract_", "q_flagship_"))}
+    assert len(extraction) == 12
+    assert sum(p == ("true", "4096") for p in prefs.values()) == 132
 
 
 @pytest.mark.parametrize("name,fn,sql", _oracle_pairs(),

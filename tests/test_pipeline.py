@@ -131,6 +131,36 @@ def test_page_work_plan_joins_pages_by_shuffle_hash(spark, corpus):
     assert "SortMergeJoin" not in final, final
 
 
+@pytest.mark.parametrize("mode", ["hybrid", "stream"])
+@pytest.mark.parametrize("num_partitions", [None, 4])
+def test_extract_plan_is_numbered_under_coalescing(spark, corpus, mode,
+                                                   num_partitions):
+    """With AQE coalescing on, extract() still runs every shuffle as a
+    numbered repartition and nothing is coalesced: size-based coalescing
+    would pack the small-bytes, heavy-CPU page rows onto few tasks.
+    ``num_partitions=None`` takes the session's shuffle partitions."""
+    docs, media, _, _ = corpus
+    keys = ("spark.sql.adaptive.coalescePartitions.enabled",
+            "spark.sql.adaptive.coalescePartitions.parallelismFirst")
+    prev = [spark.conf.get(k) for k in keys]
+    spark.conf.set(keys[0], "true")
+    spark.conf.set(keys[1], "false")
+    try:
+        combined = extract(docs, media, ExtractConfig(mode=mode),
+                           num_partitions=num_partitions)
+        combined.collect()
+    finally:
+        for k, v in zip(keys, prev):
+            spark.conf.set(k, v)
+    plan = combined._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]  # AQE: the plan that ran
+    assert "AQEShuffleRead coalesced" not in final, final
+    exchanges = [ln for ln in final.splitlines()
+                 if "Exchange " in ln and "BroadcastExchange" not in ln]
+    assert exchanges, final
+    assert all("REPARTITION_BY_NUM" in ln for ln in exchanges), final
+
+
 def test_resume_checkpoint(spark, corpus, tmp_path):
     """Kill-and-restart semantics: second run only processes missing
     documents; no duplicates, no missing."""
