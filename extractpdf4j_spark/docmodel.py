@@ -178,6 +178,12 @@ def encode_media_payload(page: int, image: np.ndarray, dpi: float,
                      page_width_pt, page_height_pt) + body
 
 
+def media_payload_page(payload: bytes) -> int | None:
+    """The page in a payload's header; None if the header is unreadable."""
+    ok = len(payload) >= _HDR.size and payload[:4] == _MAGIC
+    return _HDR.unpack_from(payload)[2] if ok else None
+
+
 def decode_media_payload(payload: bytes) -> PagePayload:
     """Inverse of ``encode_media_payload``; any malformed payload raises
     ValueError (stage 1 turns it into an 'error' status row)."""

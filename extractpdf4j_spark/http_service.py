@@ -38,6 +38,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from .config import ExtractConfig
 from .local import extract_document
+from .scoring import STATUS_ERROR, STATUS_OK
 from .table import Table, export_csv
 
 _CFG_FIELDS = ("mode", "pages", "strip_text", "min_score",
@@ -73,12 +74,7 @@ def _extract_json(body: bytes) -> tuple[int, str]:
     doc = json.loads(body)
     media = {ref: base64.b64decode(b64)
              for ref, b64 in (doc.get("media") or {}).items()}
-    cfg = _config_from(doc.get("config") or {})
-    _spans, status, _strategy, tables = extract_document(
-        doc["spans"], media, cfg)
-    if status != "ok":
-        return 200, status
-    return 200, tables_as_csv(tables)
+    return _respond(doc["spans"], media, _config_from(doc.get("config") or {}))
 
 
 def _extract_pdf(body: bytes) -> tuple[int, str]:
@@ -92,9 +88,17 @@ def _extract_pdf(body: bytes) -> tuple[int, str]:
         return 503, ("pypdfium2 is not installed; POST application/json "
                      "with the document span model instead")
     spans, media = decode_pages_to_document(backend.decode(body))
-    _spans, status, _strategy, tables = extract_document(
-        spans, media, ExtractConfig())
-    if status != "ok":
+    return _respond(spans, media, ExtractConfig())
+
+
+def _respond(spans: list, media: dict[str, bytes],
+             cfg: ExtractConfig) -> tuple[int, str]:
+    """One document's tables as CSV, or its status; status 'error' raises
+    so the handler answers 500 (PdfExtractController.java:52-55)."""
+    _spans, status, _strategy, tables = extract_document(spans, media, cfg)
+    if status == STATUS_ERROR:
+        raise ValueError("a page of the document could not be extracted")
+    if status != STATUS_OK:
         return 200, status
     return 200, tables_as_csv(tables)
 

@@ -1,9 +1,9 @@
 """Vectorized per-page extraction kernels (numpy/pandas, Arrow-batch hot path).
 
 :func:`page_extractor` is the one per-page strategy fan-out: the Spark
-stage-1 batch function, ``local.extract_document`` and the debug sink all
-run a page through it, so they build the OCR backend and call the kernels
-the same way.
+stage-1 batch function (which ``local.extract_document`` runs in-process)
+and the debug sink run a page through it, so they build the OCR backend
+and call the kernels the same way.
 """
 
 from __future__ import annotations

@@ -1,22 +1,69 @@
 """Single-document library API (no Spark required).
 
 The reference's library quickstart is one PDF in, tables out
-(``new HybridParser(path).pages("all").parse()``, README.md:82-95). The
-Spark engine's equivalent for a single interleaved document runs the same
-kernels in-process — useful for debugging, notebooks, and the service-style
-one-document call the reference's HTTP endpoint served
+(``new HybridParser(path).pages("all").parse()``, README.md:82-95). Here
+one interleaved document becomes page-work rows by ``build_page_work``'s
+rules and runs through the Spark pipeline's own stage functions
+in-process, so it gets the same status, strategy and spans as in a job —
+for debugging, notebooks and the one-document HTTP call
 (PdfExtractController.java:30-57).
 """
 
 from __future__ import annotations
 
-from .config import ExtractConfig
-from .docmodel import decode_media_payload, decode_text_span, serialize_tables
-from .kernels import page_extractor
+import json
+import re
+
+import pandas as pd
+
+from .config import ExtractConfig, MODE_STREAM
+from .docmodel import MEDIA, TEXT, media_payload_page
 from .ocr import OcrBackend
 from .pagerange import is_all, parse_pages
-from .scoring import STATUS_OK, score_cells_vectorized, select_strategy
+from .pipeline import (PAGE_FILTERED, PAGE_MALFORMED, PAGE_NO_CONTENT,
+                       PAGE_UNKNOWN_KIND, _make_assemble_partition,
+                       _make_extract_pages)
+from .scoring import STATUS_OK
 from .table import Table
+
+# build_page_work's header rule: regexp '^p=(\d+)', then try_cast to int
+_PAGE_HEADER = re.compile(r"p=([0-9]+)")
+
+
+def _page_work(spans: list, media_payloads: dict[str, bytes],
+               cfg: ExtractConfig) -> pd.DataFrame:
+    """One document's stage-1 input rows by ``build_page_work``'s rules;
+    a media span's page is read from its payload header, and a span
+    without a readable one counts as an unresolved ref."""
+    selected = parse_pages(cfg.pages)
+    filtered = not is_all(selected)
+    stream_only = cfg.strategies() == (MODE_STREAM,)
+    text, media = [], {}
+    for s in list(spans) or [None]:
+        if s is not None and s["kind"] == MEDIA:
+            pay = None if stream_only else media_payloads.get(s["media_ref"])
+            page = None if pay is None else media_payload_page(pay)
+            if page is None or filtered and page not in selected:
+                page, pay = (PAGE_FILTERED if stream_only or filtered
+                             else PAGE_MALFORMED), None
+            media.setdefault(page, []).append(pay)
+            continue
+        blob, page = "", PAGE_NO_CONTENT if s is None else PAGE_UNKNOWN_KIND
+        if s is not None and s["kind"] == TEXT:
+            m = _PAGE_HEADER.match(s["text"] or "")
+            page = int(m[1]) if m and int(m[1]) < 2**31 else PAGE_MALFORMED
+            blob = (s["text"] or "").partition("\n")[2]
+        text.append((page, None if filtered and page not in selected
+                     else blob))
+    # full outer join on page (a stream-only job's union of FILTERED media
+    # rows is the same rows: no text row is ever FILTERED)
+    rows = [(page, blob, pay) for page, blob in text
+            for pay in media.get(page, [None])]
+    text_pages = {page for page, _ in text}
+    rows += [(page, None, pay) for page, pays in media.items()
+             if page not in text_pages for pay in pays]
+    return pd.DataFrame([("", *r) for r in rows],
+                        columns=["doc_id", "page", "glyph_blob", "payload"])
 
 
 def extract_document(spans: list[dict],
@@ -24,40 +71,16 @@ def extract_document(spans: list[dict],
                      cfg: ExtractConfig = ExtractConfig(),
                      backend: OcrBackend | None = None):
     """Extract one interleaved document. Returns (output_spans, status,
-    strategy, tables) with the same semantics as the Spark pipeline's
-    per-document result: the same per-page fan-out
-    (kernels.page_extractor) and selection rule (scoring.select_strategy)."""
-    extract_page = page_extractor(cfg, backend)
-    media_payloads = media_payloads or {}
-
-    pages: dict[int, list] = {}
-    for s in spans:
-        if s["kind"] == "text":
-            g = decode_text_span(s["text"])
-            pages.setdefault(g.page, [None, None])[0] = g
-        elif s["kind"] == "media" and s["media_ref"] in media_payloads:
-            p = decode_media_payload(media_payloads[s["media_ref"]])
-            pages.setdefault(p.page, [None, None])[1] = p
-
-    selected = parse_pages(cfg.pages)
-    page_nos = sorted(pages)
-    if not is_all(selected):
-        page_nos = [p for p in page_nos if p in selected]
-
-    per: dict[str, list[tuple[int, Table]]] = {s: [] for s in cfg.strategies()}
-    headers_found = False
-    for page_no in page_nos:
-        g, payload = pages[page_no]
-        for strat, t, _, found in extract_page(g, payload):
-            headers_found = headers_found or found
-            if t.nrows > 0:
-                per[strat].append((page_no, t))
-
-    status, winner, _ = select_strategy(
-        cfg, {s: [score_cells_vectorized(t.cells) for _, t in v]
-              for s, v in per.items()}, headers_found)
-    if status != STATUS_OK:
-        return [], status, winner, []
-    tables = per[winner]
-    out = serialize_tables([(p, winner, t) for p, t in tables])
-    return out, status, winner, [t for _, t in tables]
+    strategy, tables): the Spark pipeline's per-document row, computed by
+    its stage-1 and stage-2 batch functions; ``tables`` are the winner's
+    stage-1 tables in output order."""
+    work = _page_work(spans, media_payloads or {}, cfg)
+    pages = next(_make_extract_pages(cfg, backend)(iter([work])))
+    doc = next(_make_assemble_partition(cfg)(iter([pages]))).iloc[0]
+    if doc.status != STATUS_OK:
+        return [], doc.status, doc.strategy, []
+    won = (pages[pages["strategy"] == doc.strategy]
+           .sort_values("page", kind="stable"))
+    tables = [Table(json.loads(c), list(cb), list(rb)) for c, cb, rb in
+              zip(won["cells_json"], won["col_bounds"], won["row_bounds"])]
+    return json.loads(doc.spans_json), doc.status, doc.strategy, tables

@@ -52,6 +52,7 @@ from pyspark.sql.types import (ArrayType, BinaryType, DoubleType, IntegerType,
 from .config import ExtractConfig, MODE_STREAM
 from .docmodel import decode_glyph_blob, decode_media_payload, serialize_tables
 from .kernels import page_extractor
+from .ocr import OcrBackend
 from .pagerange import is_all, parse_pages
 from .scoring import STATUS_OK, score_cells_vectorized, select_strategy
 from .table import Table
@@ -164,18 +165,20 @@ def build_page_work(docs: DataFrame, media: DataFrame | None,
 
     # try_cast: a malformed span header becomes the MALFORMED sentinel →
     # an 'error' status row, never a job-killing ANSI cast exception.
-    # Empty-span documents surface as kind NULL → NO_CONTENT; a span kind
-    # that is neither 'text' nor 'media' gets a presence sentinel so the
-    # document still reaches stage 2 (completeness invariant).
+    # Empty-span documents surface as a NULL span → NO_CONTENT; a span
+    # kind that is neither 'text' nor 'media', NULL included, gets a
+    # presence sentinel so the document still reaches stage 2.
+    is_text = F.col("s.kind").eqNullSafe("text")
+    is_media = F.col("s.kind").eqNullSafe("media")
     page_col = F.when(
         F.col("s").isNull(), F.lit(PAGE_NO_CONTENT)
     ).when(
-        F.col("s.kind") != "text", F.lit(PAGE_UNKNOWN_KIND)
+        ~is_text, F.lit(PAGE_UNKNOWN_KIND)
     ).otherwise(
         F.coalesce(F.regexp_extract(F.col("s.text"), r"^p=(\d+)", 1)
                    .try_cast("int"), F.lit(PAGE_MALFORMED)))
     blob_col = F.when(
-        (F.col("s.kind") == "text") & (F.instr(F.col("s.text"), "\n") > 0),
+        is_text & (F.instr(F.col("s.text"), "\n") > 0),
         F.expr("substring(s.text, instr(s.text, '\\n')+1, length(s.text))")
     ).otherwise(F.lit(""))
     if filtered:
@@ -183,8 +186,7 @@ def build_page_work(docs: DataFrame, media: DataFrame | None,
         # presence row but ship no glyph bytes through the shuffle
         blob_col = F.when(page_col.isin(pages), blob_col)
 
-    text_pages = (spans.filter(F.col("s").isNull()
-                               | (F.col("s.kind") != "media"))
+    text_pages = (spans.filter(~is_media)
                   .select("doc_id", page_col.alias("page"),
                           blob_col.alias("glyph_blob")))
 
@@ -194,7 +196,7 @@ def build_page_work(docs: DataFrame, media: DataFrame | None,
         # Media spans still emit a FILTERED presence sentinel so an
         # all-media document reaches stage 2 (and the resume checkpoint)
         # instead of silently vanishing from the output.
-        media_presence = (spans.filter(F.col("s.kind") == "media")
+        media_presence = (spans.filter(is_media)
                           .select("doc_id",
                                   F.lit(PAGE_FILTERED).alias("page"),
                                   F.lit("").alias("glyph_blob")))
@@ -202,7 +204,7 @@ def build_page_work(docs: DataFrame, media: DataFrame | None,
                 .withColumn("payload", F.lit(None).cast("binary"))
                 .repartition(num_partitions, F.col("doc_id"), F.col("page")))
 
-    media_refs = spans.filter(F.col("s.kind") == "media").select(
+    media_refs = spans.filter(is_media).select(
         "doc_id", F.col("s.media_ref").alias("media_ref"))
     if media is not None:
         # page resolution against a payload-pruned projection — the scan
@@ -266,56 +268,62 @@ def build_page_work(docs: DataFrame, media: DataFrame | None,
 # Stage 1: per-page strategy fan-out (Arrow-batched kernel)
 # ---------------------------------------------------------------------------
 
-def _make_extract_pages(cfg: ExtractConfig):
+def _decode_page(page: int, glyph_blob, payload):
+    """A work row's ``(glyphs, payload)``, None where absent; raises
+    ValueError on a malformed blob or payload."""
+    glyphs = (decode_glyph_blob(page, glyph_blob)
+              if isinstance(glyph_blob, str) and glyph_blob else None)
+    return glyphs, (decode_media_payload(payload)
+                    if payload is not None else None)
+
+
+def _extract_page_row(extract_page, t, rows: list) -> None:
+    """Stage 1 for one work row ``t`` (doc_id, page, glyph_blob, payload):
+    append a row per non-empty strategy table, then the page's marker."""
+    t0 = time.perf_counter()
+    doc_id = t.doc_id
+    # page arrives as float NaN when NULL (unresolved media ref with no
+    # media table) — route to the error marker
+    page = (int(t.page) if t.page is not None and t.page == t.page
+            else PAGE_MALFORMED)
+    ocr_fb = 0
+    headers_found = 0
+    errors = 0
+    # per-page isolation: a corrupt document must never kill the job —
+    # it becomes an 'error' status in metrics
+    try:
+        if page >= 0:
+            glyphs, payload = _decode_page(page, t.glyph_blob, t.payload)
+            for strat, table, n_ocr, found in extract_page(glyphs, payload):
+                ocr_fb += n_ocr
+                headers_found |= int(found)
+                if table.nrows > 0:
+                    # score here while the table is in hand — the
+                    # selection stage then never parses losers
+                    rows.append((doc_id, page, strat,
+                                 json.dumps(table.cells), table.col_bounds,
+                                 table.row_bounds,
+                                 score_cells_vectorized(table.cells),
+                                 0, 0, 0, 0))
+        elif page not in (PAGE_NO_CONTENT, PAGE_FILTERED, PAGE_UNKNOWN_KIND):
+            # presence sentinels get a bare marker; any other negative
+            # page is a malformed header
+            raise ValueError("malformed text span header")
+    except Exception:
+        errors = 1
+    wall = int((time.perf_counter() - t0) * 1000)
+    rows.append((doc_id, page, PAGE_MARKER, "", [], [], 0.0,
+                 ocr_fb, headers_found, errors, wall))
+
+
+def _make_extract_pages(cfg: ExtractConfig, backend: OcrBackend | None = None):
     def extract_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        extract_page = page_extractor(cfg)
+        extract_page = page_extractor(cfg, backend)
         cols = [f.name for f in PAGE_RESULT_SCHEMA.fields]
         for pdf in batches:
             rows: list[tuple] = []
             for t in pdf.itertuples(index=False):
-                t0 = time.perf_counter()
-                doc_id = t.doc_id
-                # page arrives as float NaN when NULL (unresolved media
-                # ref with no media table) — route to the error marker
-                page = (int(t.page)
-                        if t.page is not None and t.page == t.page else -1)
-                ocr_fb = 0
-                headers_found = 0
-                errors = 0
-                # per-page isolation: a corrupt document must never kill
-                # the job — it becomes an 'error' status in metrics
-                try:
-                    if page in (PAGE_NO_CONTENT, PAGE_FILTERED,
-                                PAGE_UNKNOWN_KIND):
-                        # presence-only sentinel rows: marker, no kernels
-                        wall = int((time.perf_counter() - t0) * 1000)
-                        rows.append((doc_id, page, PAGE_MARKER, "", [], [],
-                                     0.0, 0, 0, 0, wall))
-                        continue
-                    if page < 0:
-                        raise ValueError("malformed text span header")
-                    glyphs = (decode_glyph_blob(page, t.glyph_blob)
-                              if isinstance(t.glyph_blob, str) and t.glyph_blob
-                              else None)
-                    payload = (decode_media_payload(t.payload)
-                               if t.payload is not None else None)
-                    for strat, table, n_ocr, found in extract_page(glyphs,
-                                                                   payload):
-                        ocr_fb += n_ocr
-                        headers_found |= int(found)
-                        if table.nrows > 0:
-                            # score here while the table is in hand — the
-                            # selection stage then never parses losers
-                            rows.append((doc_id, page, strat,
-                                         json.dumps(table.cells),
-                                         table.col_bounds, table.row_bounds,
-                                         score_cells_vectorized(table.cells),
-                                         0, 0, 0, 0))
-                except Exception:
-                    errors = 1
-                wall = int((time.perf_counter() - t0) * 1000)
-                rows.append((doc_id, page, PAGE_MARKER, "", [], [], 0.0,
-                             ocr_fb, headers_found, errors, wall))
+                _extract_page_row(extract_page, t, rows)
             yield pd.DataFrame(rows, columns=cols)
 
     return extract_pages
@@ -384,10 +392,11 @@ def _make_assemble_partition(cfg: ExtractConfig):
 
 
 def _assemble_run(cfg: ExtractConfig, strategies, doc_id: str,
-                  arrs: dict, s: int, e: int, partition_id: int) -> dict:
+                  arrs: dict, s: int, e: int, partition_id: int) -> tuple:
     """Assemble one document from its contiguous row run [s, e) of the
     batch's column arrays: fold its page markers, select the strategy
-    (scoring.select_strategy) and serialize the winner's tables."""
+    (scoring.select_strategy) and serialize the winner's tables. Returns
+    the document's COMBINED_SCHEMA row."""
     strat = arrs["strategy"]
     ocr_fallbacks = 0
     headers_found = False
@@ -412,8 +421,8 @@ def _assemble_run(cfg: ExtractConfig, strategies, doc_id: str,
         cfg, {st: score[idx] for st, idx in per_idx.items()},
         headers_found, errors)
     if status != STATUS_OK:
-        return _one_row(doc_id, [], status, winner, 0, 0,
-                        ocr_fallbacks, best, wall_ms, partition_id)
+        return (doc_id, "[]", status, winner, 0, 0, ocr_fallbacks,
+                float(best), wall_ms, partition_id)
 
     page = arrs["page"]
     widx = sorted(per_idx[winner], key=lambda i: page[i])
@@ -423,24 +432,8 @@ def _assemble_run(cfg: ExtractConfig, strategies, doc_id: str,
               for i in widx]
     spans = serialize_tables([(p, winner, t) for p, t in tables])
     cells_parsed = sum(t.nrows * t.ncols for _, t in tables)
-    return _one_row(doc_id, spans, STATUS_OK, winner, len(tables),
-                    cells_parsed, ocr_fallbacks, best, wall_ms, partition_id)
-
-
-def _one_row(doc_id, spans, status, strategy, tables_found, cells_parsed,
-             ocr_fallbacks, score, wall_ms, partition_id) -> dict:
-    return {
-        "doc_id": doc_id,
-        "spans_json": json.dumps(spans),
-        "status": status,
-        "strategy": strategy,
-        "tables_found": tables_found,
-        "cells_parsed": cells_parsed,
-        "ocr_fallbacks": ocr_fallbacks,
-        "score": float(score),
-        "wall_ms": wall_ms,
-        "partition_id": partition_id,
-    }
+    return (doc_id, json.dumps(spans), STATUS_OK, winner, len(tables),
+            cells_parsed, ocr_fallbacks, float(best), wall_ms, partition_id)
 
 
 # ---------------------------------------------------------------------------

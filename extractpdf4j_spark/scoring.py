@@ -2,7 +2,7 @@
 
 Anchored to HybridParser.java:
 
-* ``score``       — 0.6*fill + 0.3*structure + 0.1*richness
+* ``score_cells_vectorized`` — 0.6*fill + 0.3*structure + 0.1*richness
                     (HybridParser.java:297-322); richness =
                     log(1+ncols)/log(4) so scores may slightly exceed 1.
 * ``pick_strategy`` — the EXACT argmax tie-break order
@@ -12,8 +12,8 @@ Anchored to HybridParser.java:
                     (HybridParser.java:235-264): required-headers gate,
                     per-strategy mean score (0.0 for no tables,
                     HybridParser.java:275-282), status, tie-break and the
-                    minScore gate. Spark stage 2 and
-                    ``local.extract_document`` both call it.
+                    minScore gate. Spark stage 2 calls it, also when
+                    ``local.extract_document`` runs stage 2 in-process.
 
 Blankness uses Java ``String.isBlank`` semantics = all-whitespace.
 """
@@ -26,7 +26,6 @@ from collections.abc import Mapping, Sequence
 import numpy as np
 
 from .config import ExtractConfig, MODE_LATTICE, MODE_OCRSTREAM, MODE_STREAM
-from .table import Table
 
 # Per-document status values (the metrics table's ``status`` column)
 STATUS_OK = "ok"
@@ -36,35 +35,9 @@ STATUS_BELOW_MIN_SCORE = "below_min_score"
 STATUS_ERROR = "error"
 
 
-def _is_blank(v: str | None) -> bool:
-    return v is None or v.strip() == ""
-
-
-def score(t: Table) -> float:
-    """Single-table score (HybridParser.java:297-322)."""
-    rows, cols = t.nrows, t.ncols
-    if rows == 0 or cols == 0:
-        return 0.0
-    total = rows * cols
-    non_empty = 0
-    multi_col_rows = 0
-    for r in range(rows):
-        row_ne = 0
-        for c in range(cols):
-            if not _is_blank(t.cell(r, c)):
-                non_empty += 1
-                row_ne += 1
-        if row_ne > 1:
-            multi_col_rows += 1
-    fill = non_empty / total
-    structure = multi_col_rows / rows
-    richness = math.log(1 + cols) / math.log(4)
-    return 0.6 * fill + 0.3 * structure + 0.1 * richness
-
-
 def score_cells_vectorized(cells: list[list[str]]) -> float:
-    """:func:`score` for a raw grid (list-of-lists). Plain comprehensions
-    beat np.vectorize by ~100x on the small grids this sees per call."""
+    """Single-table score (HybridParser.java:297-322) of a raw grid. Plain
+    comprehensions beat np.vectorize by ~100x on the small grids here."""
     if not cells or not cells[0]:
         return 0.0
     rows, cols = len(cells), len(cells[0])

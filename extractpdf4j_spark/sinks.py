@@ -120,8 +120,8 @@ DEBUG_SCHEMA = StructType([
 
 
 def _make_debug_pages(cfg):
-    from .docmodel import decode_glyph_blob, decode_media_payload
     from .kernels import page_extractor
+    from .pipeline import _decode_page
 
     cols = [f.name for f in DEBUG_SCHEMA.fields]
 
@@ -136,11 +136,8 @@ def _make_debug_pages(cfg):
                 if page < 0:
                     continue
                 try:
-                    glyphs = (decode_glyph_blob(page, t.glyph_blob)
-                              if isinstance(t.glyph_blob, str) and t.glyph_blob
-                              else None)
-                    payload = (decode_media_payload(t.payload)
-                               if t.payload is not None else None)
+                    glyphs, payload = _decode_page(page, t.glyph_blob,
+                                                   t.payload)
                     if payload is not None:
                         rows.append((doc_id, page, "", "raster",
                                      json.dumps({

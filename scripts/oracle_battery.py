@@ -12,10 +12,18 @@ mismatch.
 """
 
 import argparse
+import os
 import sys
 import time
 
 import duckdb
+
+# the package lives next to scripts/; Spark's Python workers inherit the
+# environment, so they import it through PYTHONPATH
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -51,9 +59,12 @@ def main():
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
-    spark = (SparkSession.builder.master("local[32]")
+    # one worker per core of this host; a 6 GB heap runs the sf0.01
+    # battery on a 4-core, 15 GB machine
+    cores = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
+    spark = (SparkSession.builder.master(f"local[{cores}]")
              .config("spark.sql.shuffle.partitions", str(args.partitions))
-             .config("spark.driver.memory", "24g")
+             .config("spark.driver.memory", "6g")
              .appName("oracle-battery").getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
 

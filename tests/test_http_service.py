@@ -68,6 +68,40 @@ def test_internal_error_is_500_with_reference_prefix(base_url):
         "An internal error occurred: ")
 
 
+def _failing_doc_bodies():
+    """A ruled page whose payload body is corrupt, and a text span whose
+    header is not ``p=<page>``: both extract to status 'error'."""
+    import base64
+    from extractpdf4j_spark.fixtures import FixtureBuilder
+    fb = FixtureBuilder(seed=7)
+    fb.grid_ruled("ruled")
+    doc, media = fb.documents[0], fb.media[0]
+    good = media["payload"]
+    corrupt = good[:60] + bytes(b ^ 0xFF for b in good[60:80]) + good[80:]
+    return [
+        json.dumps({"spans": doc["spans"],
+                    "media": {media["media_ref"]:
+                              base64.b64encode(corrupt).decode()}}),
+        json.dumps({"spans": [{"kind": "text", "text": "garbage",
+                               "media_ref": "", "offset": 0}]}),
+    ]
+
+
+@pytest.mark.parametrize("which", [0, 1],
+                         ids=["corrupt_payload", "malformed_header"])
+def test_error_status_document_is_500_with_reference_prefix(base_url,
+                                                             which):
+    """A document whose extraction ends in status 'error' is a failed
+    parse: 500 with the reference prefix (PdfExtractController.java:52-55),
+    not a 200 carrying the status."""
+    body = _failing_doc_bodies()[which].encode()
+    with pytest.raises(urllib.error.HTTPError) as ei:
+        _post(f"{base_url}/api/extract", body)
+    assert ei.value.code == 500
+    assert ei.value.read().decode().startswith(
+        "An internal error occurred: ")
+
+
 def test_pdf_body_without_backend_is_503(base_url):
     # sandbox has no pypdfium2: the raw-PDF route must degrade cleanly
     with pytest.raises(urllib.error.HTTPError) as ei:

@@ -374,6 +374,73 @@ def test_interleaved_multipage_doc(spark, build, cfg, status):
         == [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in want]
 
 
+_EMBEDDED = ExtractConfig(ocr_backend="embedded")
+# case -> config; test_local_matches_spark_on_edge_documents builds spans
+_PARITY_CFG = {
+    "missing_media_ref": _EMBEDDED,
+    "malformed_header": _EMBEDDED,
+    "corrupt_payload": _EMBEDDED,
+    "unknown_kind": _EMBEDDED,
+    "null_kind": _EMBEDDED,
+    "empty_spans": _EMBEDDED,
+    "two_text_spans_one_page": _EMBEDDED,
+    "page_outside_selection": ExtractConfig(pages="2",
+                                            ocr_backend="embedded"),
+}
+
+
+@pytest.fixture(scope="module")
+def parity_docs():
+    """Edge-case documents over one media table holding a ruled page and
+    a copy whose deflate body is corrupt (its header still names page 1)."""
+    fb = FixtureBuilder(seed=7)
+    fb.grid_ruled("ruled")
+    fb.stmt_text("two", n_rows=6, n_pages=2)
+    (ruled_text, ruled_media), two = (d["spans"] for d in fb.documents)
+    good = fb.media[0]["payload"]
+    corrupt = good[:60] + bytes(b ^ 0xFF for b in good[60:80]) + good[80:]
+    payloads = {"ruled/p1": good, "corrupt/p1": corrupt}
+    text = {"kind": "text", "media_ref": "", "offset": 0}
+    spans = {
+        "missing_media_ref": [dict(ruled_media, media_ref="nope")],
+        "malformed_header": [dict(text, text="garbage")],
+        "corrupt_payload": [ruled_text,
+                            dict(ruled_media, media_ref="corrupt/p1")],
+        "unknown_kind": [dict(text, kind="video", text="x")],
+        "null_kind": [dict(text, kind=None, text="x")],
+        "empty_spans": [],
+        "two_text_spans_one_page": [
+            two[0], dict(two[1], text="p=1" + two[1]["text"][3:])],
+        "page_outside_selection": [*two, ruled_media],
+    }
+    return spans, payloads
+
+
+@pytest.mark.parametrize("case", list(_PARITY_CFG))
+@pytest.mark.parametrize("num_partitions", [2, 8])
+def test_local_matches_spark_on_edge_documents(spark, parity_docs,
+                                               num_partitions, case):
+    """The single-document API returns the job's per-document row: same
+    status, strategy and (kind, text, media_ref, offset) sequence on
+    malformed, partial and repeated-page documents."""
+    from extractpdf4j_spark.local import extract_document
+    spans, payloads = parity_docs
+    cfg = _PARITY_CFG[case]
+    docs = spark.createDataFrame([(case, spans[case])],
+                                 schema=DOCUMENTS_SCHEMA)
+    media = spark.createDataFrame(
+        [(ref, ref.split("/")[0], 1, p) for ref, p in payloads.items()],
+        schema=MEDIA_SCHEMA)
+    (row,) = extract(docs, media, cfg, num_partitions).collect()
+    want, wstatus, wstrat, _ = extract_document(spans[case], payloads, cfg)
+    assert (row["status"], row["strategy"]) == (wstatus, wstrat)
+
+    def seq(sp):
+        return [(s["kind"], s["text"], s["media_ref"], s["offset"])
+                for s in sp]
+    assert seq(json.loads(row["spans_json"])) == seq(want)
+
+
 def test_big_doc_pages_spread_across_partitions(spark):
     """Axis-A skew duty: a 40-page document's pages distribute across
     stage-1 partitions instead of landing on one task."""

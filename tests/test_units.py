@@ -8,7 +8,7 @@ import numpy as np
 import pytest
 
 from extractpdf4j_spark.pagerange import parse_pages
-from extractpdf4j_spark.scoring import pick_strategy, score, score_cells_vectorized
+from extractpdf4j_spark.scoring import pick_strategy, score_cells_vectorized
 from extractpdf4j_spark.table import Table, export_csv
 from extractpdf4j_spark.textnorm import (edit_distance, is_likely_numeric,
                                          normalize_alpha, normalize_amount,
@@ -16,6 +16,7 @@ from extractpdf4j_spark.textnorm import (edit_distance, is_likely_numeric,
 from extractpdf4j_spark.kernels.stream import stream_extract_page
 from extractpdf4j_spark.kernels.ocrstream import (_locate_clamped,
                                                   _matches_required_core)
+from oracle import _score
 
 
 # ---- PageRangeTest.java:7-17 ----------------------------------------------
@@ -98,9 +99,25 @@ def test_score_prefers_filled_tables():
                    [0.0, 10.0, 20.0], [0.0, 10.0, 20.0])
     dense = Table([["1", "2"], ["3", "4"]],
                   [0.0, 10.0, 20.0], [0.0, 10.0, 20.0])
-    assert score(dense) > score(sparse)
-    assert score_cells_vectorized(dense.cells) == pytest.approx(score(dense))
-    assert score_cells_vectorized(sparse.cells) == pytest.approx(score(sparse))
+    assert score_cells_vectorized(dense.cells) > \
+        score_cells_vectorized(sparse.cells)
+    assert score_cells_vectorized(dense.cells) == pytest.approx(_score(dense))
+    assert score_cells_vectorized(sparse.cells) == \
+        pytest.approx(_score(sparse))
+
+
+@pytest.mark.parametrize("cells", [
+    [],
+    [[]],
+    [["a"]],
+    [[" ", "\t"], ["x", None]],
+    [["a", "b", "c"], ["", " d ", ""], [None, None, None]],
+    [["1", "2", "3", "4", "5"]] * 7,
+], ids=["empty", "no_cols", "one_cell", "blank_and_none", "mixed", "7x5"])
+def test_score_cells_vectorized_matches_reference(cells):
+    # Java String.isBlank semantics: whitespace-only and null are blank
+    t = Table(cells, [], [])
+    assert score_cells_vectorized(cells) == pytest.approx(_score(t))
 
 
 def test_tie_break_order():
