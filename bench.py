@@ -3,7 +3,9 @@
 
 Default mode (driver contract): runs the headline extraction job plus key
 operator queries at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1)
-on ``local[$SPARK_GRAFT_CPUS]`` (default 32) and prints ONE JSON line:
+on ``local[$SPARK_GRAFT_CPUS]`` (default: this host's CPU count) with a
+6 GB driver and prints two JSON lines, the full per-query dict, then the
+compact headline LAST:
 
     {"metric": "docs_per_sec_extraction", "value": N, "unit": "sec",
      "queries": {...}, "sf": ..., ...}
@@ -31,7 +33,7 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 
 
 def make_spark(cores: int, shuffle_partitions: int | None = None):
@@ -54,7 +56,9 @@ def make_spark(cores: int, shuffle_partitions: int | None = None):
             # (512) raised T32 ~15% — coarse batches pipeline worse across
             # the 2x-partition task set
             .config("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
-            .config("spark.driver.memory", "48g")
+            # sized like scripts/oracle_battery.py: a 6 GB heap runs the
+            # sf0.1 extraction and the query sweep on a 4-core, 15 GB host
+            .config("spark.driver.memory", "6g")
             .config("spark.ui.enabled", "false")
             .getOrCreate())
 

@@ -658,8 +658,8 @@ def scrub_contaminated(corpus: DataFrame, eval_df: DataFrame, n: int = 13,
     expensive path is bounded by the hit count while every clean
     document passes through as a pure whitespace-collapse projection
     (measured at 500k docs / 2% contamination: best-of-2 88 → 14 s,
-    6.2x — scripts/decontam_scale_probe.py; the host throttle makes
-    single samples noisy). The hit rows are localCheckpointed at their
+    6.2x on a 32-core, 48 GB host with a planted-contamination probe;
+    the host throttle makes single samples noisy). The hit rows are localCheckpointed at their
     three-consumer seam (clean/contaminated split + excision ranges),
     so the corpus-wide gram probe executes exactly once per call
     (``checkpoint_hits=False`` keeps the lazy lineage for callers that

@@ -989,7 +989,7 @@ def rp_topk(embeddings: DataFrame, query_id: int, k: int = 10,
     the shortlist is engine-reproducible; returns ``(id, cosine)``
     exact-reranked, ranked (cosine desc, id).
 
-    Operating regime (measured, scripts/rp_ann_scale_probe.py): the
+    Operating regime (measured with a planted-neighbour probe): the
     sketch's cosine distortion is ~1/sqrt(out_dim) (0.25 at 16), so
     the shortlist only recalls matches whose cosine MARGIN over the
     background exceeds it — near-duplicate retrieval (margin ~0.85:

@@ -1,16 +1,32 @@
 """The Spark extraction pipeline: interleaved documents → extracted spans.
 
-Dataflow (all DataFrame ops; the only Python is Arrow-batched kernels):
+Dataflow (all DataFrame ops; the only Python is Arrow-batched kernels).
+Each document takes one of two routes, by a native per-document key,
+``coalesce(size(spans), 0) <= LIGHT_SPANS``:
 
-    documents(doc_id, spans)                    media(media_ref, payload)
-        |  explode spans (native, codegen)          |
-        |  text spans → (doc_id, page, glyph_blob)  |
-        |  media spans → (doc_id, page, media_ref) ─┤ equi-join on media_ref
-        |                                           |
-        +── full-outer join on (doc_id, page) ──────+
+    documents(doc_id, spans)          media(media_ref, doc_id, page, payload)
+        |                                 |
+        |                   semi/anti join against the broadcast ids of
+        |                   the heavy documents (no exchange)
+        |                                 |
+    LIGHT (at most LIGHT_SPANS spans)     |
+        repartition(doc_id) ────── left join on doc_id ── repartition(doc_id)
+        |   (co-partitioned: no            + collect_list per doc_id
+        |    further exchange)
+        mapInPandas(extract_documents)  ← per document: page-work rows
+        |                                 (_make_page_work), stage-1 fan-out,
+        |                                 selection, span serialization
+        |
+    HEAVY (more spans)
+        |  explode spans (native, codegen)
+        |  text spans → (doc_id, page, glyph_blob)
+        |  media spans → (doc_id, page, media_ref), pages resolved against
+        |                the document's own media rows
+        +── full-outer join on (doc_id, page)
         |   [page-range filter — the reference's only pruning,
         |    PageRange.java:15 / BaseParser.java:126-139 — pushed to the
         |    scan as a native filter]
+        |   payload attached on (doc_id, media_ref)
         |
         repartition(hash(doc_id, page))     ← page-level units kill doc-size
         |                                     skew (a 500-page scan becomes
@@ -21,23 +37,29 @@ Dataflow (all DataFrame ops; the only Python is Arrow-batched kernels):
         repartition(doc_id) + mapInPandas   ← stage 2: per-doc selection
         |                                     (scoring.select_strategy), span
         |                                     re-serialization, metrics
-        write parquet (combined extracted+metrics, append by run)
+        |
+    unionByName → write parquet (combined extracted+metrics, append by run)
 
 Checkpoint/resume: each run appends per-document rows keyed by run_id and
 partition lineage; ``run_extraction(resume=True)`` anti-joins documents
 already present in the output against the input before stage 1
 (SURVEY.md §4 — resumable restarts per the north rule).
 
-Why two stages: the reference's hybrid selects ONE strategy per document
-from scores averaged over all its pages (HybridParser.java:235-264), so
-page-level extraction must regroup per document once. The regrouped rows
-are tiny (cell text + bounds), so the stage-2 shuffle is negligible next
-to stage 1's raster decode.
+Why two routes: the reference's hybrid selects ONE strategy per document
+from scores averaged over all its pages (HybridParser.java:235-264). A
+light document is small enough to extract in the task that receives it,
+so its pages are never regrouped: its tables go straight from the kernels
+into its output spans. A heavy document's pages are spread over the
+cluster (stage 1) and regrouped per document once (stage 2); only those
+pay a second exchange, a sort and a second Arrow crossing of every page
+result. Either way a media span resolves only against media rows with
+the document's own ``doc_id``.
 """
 
 from __future__ import annotations
 
 import json
+import re
 import time
 from collections.abc import Iterator
 
@@ -50,7 +72,8 @@ from pyspark.sql.types import (ArrayType, BinaryType, DoubleType, IntegerType,
                                LongType, StringType, StructField, StructType)
 
 from .config import ExtractConfig, MODE_STREAM
-from .docmodel import decode_glyph_blob, decode_media_payload, serialize_tables
+from .docmodel import (MEDIA, TEXT, decode_glyph_blob, decode_media_payload,
+                       serialize_tables)
 from .kernels import page_extractor
 from .ocr import OcrBackend
 from .pagerange import is_all, parse_pages
@@ -110,6 +133,11 @@ COMBINED_SCHEMA = StructType([
 
 PAGE_MARKER = "_page"
 
+# A document with at most this many spans takes the light route (see the
+# module docstring). Chosen by measurement on the benchmark's workloads;
+# see ROADMAP.md.
+LIGHT_SPANS = 16
+
 
 # ---------------------------------------------------------------------------
 # Stage 0: native span explode → page work units
@@ -121,6 +149,9 @@ PAGE_NO_CONTENT = -2    # document with an empty spans array
 PAGE_FILTERED = -3      # media page outside the page-range selection /
 #                         media content ignored by a stream-only job
 PAGE_UNKNOWN_KIND = -4  # span kind neither 'text' nor 'media' (schema drift)
+
+# build_page_work's header rule, '^p=(\d+)' then try_cast to int, in Python
+_PAGE_HEADER = re.compile(r"p=([0-9]+)")
 
 
 def _num_partitions(df: DataFrame, num_partitions: int | None) -> int:
@@ -134,22 +165,28 @@ def build_page_work(docs: DataFrame, media: DataFrame | None,
                     num_partitions: int | None = None) -> DataFrame:
     """Explode interleaved spans into per-page work rows
     (doc_id, page, glyph_blob, payload) using only native ops so Catalyst
-    prunes/pushes everything up to the kernel boundary.
+    prunes/pushes everything up to the kernel boundary. ``extract`` runs
+    it on the heavy documents only; :func:`_make_page_work` is the same
+    rules for one document in Python (the light route and ``local``).
 
     Completeness by construction: ``explode_outer`` keeps empty-span
     documents (page NO_CONTENT sentinel), and the page-range filter
     BLANKS unselected content instead of dropping rows — every input
     document reaches stage 2 exactly once with no side anti-join plan.
 
+    Ownership: a media span resolves (page and payload) only against
+    media rows with the document's own ``doc_id``; any other row with the
+    same ``media_ref`` is invisible to it.
+
     Shuffle budget (the 100 TB concern — payload bytes dominate): page
     resolution joins a payload-PRUNED projection of the media table, the
     (doc_id, page) outer join pre-repartitions both sides so the explicit
     ``num_partitions`` spread costs no extra exchange, and raster
-    payloads attach LAST via one media_ref equi-join — payload bytes
-    cross exactly ONE exchange end-to-end (they used to cross three).
-    Rows without a media_ref join on a salted ``_jref`` key that matches
-    nothing, so the null-ref key never concentrates text-heavy corpora on
-    one task.
+    payloads attach LAST via one (doc_id, media_ref) equi-join — payload
+    bytes cross exactly ONE exchange end-to-end (they used to cross
+    three). Rows without a media_ref join on a salted ``_jref`` key that
+    matches nothing, so the null-ref key never concentrates text-heavy
+    documents on one task.
 
     ``num_partitions=None`` means the session's
     ``spark.sql.shuffle.partitions``, read at build time: the page
@@ -190,42 +227,43 @@ def build_page_work(docs: DataFrame, media: DataFrame | None,
                   .select("doc_id", page_col.alias("page"),
                           blob_col.alias("glyph_blob")))
 
-    if cfg.strategies() == (MODE_STREAM,):
+    stream_only = cfg.strategies() == (MODE_STREAM,)
+    if stream_only or media is None:
         # stream-only jobs never touch rasters: skip the payload join
         # entirely (Catalyst can't know the UDF ignores the column).
-        # Media spans still emit a FILTERED presence sentinel so an
-        # all-media document reaches stage 2 (and the resume checkpoint)
-        # instead of silently vanishing from the output.
+        # Without a media table every media span is unresolved, and a
+        # page join on that constant page would fold into a join on
+        # doc_id alone, putting a document's pages on one task. Media
+        # spans still emit a presence sentinel (FILTERED, resp. MALFORMED
+        # → 'error') so an all-media document reaches stage 2 (and the
+        # resume checkpoint) instead of silently vanishing from the output.
         media_presence = (spans.filter(is_media)
                           .select("doc_id",
-                                  F.lit(PAGE_FILTERED).alias("page"),
+                                  F.lit(PAGE_FILTERED if stream_only
+                                        else PAGE_MALFORMED).alias("page"),
                                   F.lit("").alias("glyph_blob")))
         return (text_pages.unionByName(media_presence)
                 .withColumn("payload", F.lit(None).cast("binary"))
                 .repartition(num_partitions, F.col("doc_id"), F.col("page")))
 
+    # page resolution against a payload-pruned projection — the scan
+    # reads only (doc_id, media_ref, page), never raster bytes
     media_refs = spans.filter(is_media).select(
         "doc_id", F.col("s.media_ref").alias("media_ref"))
-    if media is not None:
-        # page resolution against a payload-pruned projection — the scan
-        # reads only (media_ref, page), never raster bytes
-        m_meta = media.select("media_ref", "page")
-        if filtered:
-            # partition/predicate pruning on the media table: unselected
-            # pages are never read or shuffled (meta AND payload scans)
-            m_meta = m_meta.filter(F.col("page").isin(pages))
-        media_pages = (media_refs.join(m_meta, "media_ref", "left")
-                       .select("doc_id",
-                               # unresolved ref: 'error' under pages=all,
-                               # indistinguishable from pruned otherwise
-                               F.coalesce(F.col("page"),
-                                          F.lit(PAGE_FILTERED if filtered
-                                                else PAGE_MALFORMED))
-                               .alias("page"),
-                               "media_ref"))
-    else:
-        media_pages = media_refs.select(
-            "doc_id", F.lit(PAGE_MALFORMED).alias("page"), "media_ref")
+    m_meta = media.select("doc_id", "media_ref", "page")
+    if filtered:
+        # partition/predicate pruning on the media table: unselected
+        # pages are never read or shuffled (meta AND payload scans)
+        m_meta = m_meta.filter(F.col("page").isin(pages))
+    media_pages = (media_refs.join(m_meta, ["doc_id", "media_ref"], "left")
+                   .select("doc_id",
+                           # unresolved ref: 'error' under pages=all,
+                           # indistinguishable from pruned otherwise
+                           F.coalesce(F.col("page"),
+                                      F.lit(PAGE_FILTERED if filtered
+                                            else PAGE_MALFORMED))
+                           .alias("page"),
+                           "media_ref"))
 
     # pre-repartition BOTH join inputs to the target partitioning: the
     # outer join then reuses it (no ENSURE_REQUIREMENTS exchange) and no
@@ -244,14 +282,10 @@ def build_page_work(docs: DataFrame, media: DataFrame | None,
     work = tp.join(mp.hint("SHUFFLE_HASH"), ["doc_id", "page"],
                    "full_outer")
 
-    if media is None:
-        return (work.drop("media_ref")
-                .withColumn("payload", F.lit(None).cast("binary")))
-
-    m_pay = media.select(F.col("media_ref").alias("_jref"), "payload")
     if filtered:
-        m_pay = (media.filter(F.col("page").isin(pages))
-                 .select(F.col("media_ref").alias("_jref"), "payload"))
+        media = media.filter(F.col("page").isin(pages))
+    m_pay = media.select("doc_id", F.col("media_ref").alias("_jref"),
+                         "payload")
     # Null-ref rows (text-only pages) would all hash to ONE partition in
     # the payload join — salt them with a '\x00'-prefixed bucket (real
     # refs never start with a NUL byte) so they spread while matching
@@ -260,8 +294,67 @@ def build_page_work(docs: DataFrame, media: DataFrame | None,
                     F.pmod(F.hash("doc_id", "page"), F.lit(64)).cast("string"))
     work = (work.withColumn("_jref", F.coalesce(F.col("media_ref"), salt))
             .drop("media_ref"))
-    return (work.join(m_pay, "_jref", "left")
+    return (work.join(m_pay, ["doc_id", "_jref"], "left")
             .select("doc_id", "page", "glyph_blob", "payload"))
+
+
+def _make_page_work(cfg: ExtractConfig):
+    """``page_work_rows(spans, media)``: one document's stage-1 work rows
+    ``(page, glyph_blob, payload)`` by :func:`build_page_work`'s rules.
+
+    ``media`` maps a media_ref to the document's OWN media rows for it, as
+    ``(page, payload)`` pairs (the job reads the page from the row;
+    ``local`` reads it from the payload header); ``None`` means the job
+    has no media table. A stream-only job never reads it.
+    Row order: text rows in span order, each joined to the media rows of
+    its page, then the media rows of pages without text, then presence
+    rows."""
+    selected = parse_pages(cfg.pages)
+    filtered = not is_all(selected)
+    stream_only = cfg.strategies() == (MODE_STREAM,)
+    # an unresolved ref is 'error' under pages=all, indistinguishable from
+    # pruned otherwise
+    unresolved = PAGE_FILTERED if filtered else PAGE_MALFORMED
+
+    def page_work_rows(spans, media) -> list[tuple]:
+        text, media_pages, presence = [], {}, []
+        for s in (list(spans) if spans is not None else []) or [None]:
+            kind = None if s is None else s["kind"]
+            if kind == MEDIA:
+                if stream_only or media is None:
+                    presence.append((PAGE_FILTERED if stream_only
+                                     else PAGE_MALFORMED, "", None))
+                    continue
+                ref = s["media_ref"]
+                own = [(p, pay) for p, pay in
+                       (media.get(ref, ()) if ref is not None else ())
+                       if not filtered or p in selected]
+                # every resolved page of the span gets every payload of its
+                # ref (the page join, then the payload join)
+                pays = [pay for _, pay in own] or [None]
+                for p, _ in own or [(None, None)]:
+                    media_pages.setdefault(
+                        unresolved if p is None else p, []).append(pays)
+                continue
+            blob, page = "", (PAGE_NO_CONTENT if s is None
+                              else PAGE_UNKNOWN_KIND)
+            if kind == TEXT:
+                m = _PAGE_HEADER.match(s["text"] or "")
+                page = (int(m[1]) if m and int(m[1]) < 2**31
+                        else PAGE_MALFORMED)
+                blob = (s["text"] or "").partition("\n")[2]
+            text.append((page, None if filtered and page not in selected
+                         else blob))
+        # full outer join on page, then the payload attach
+        rows = [(page, blob, pay) for page, blob in text
+                for pays in media_pages.get(page, [[None]]) for pay in pays]
+        text_pages = {page for page, _ in text}
+        rows += [(page, None, pay) for page, per_span in media_pages.items()
+                 if page not in text_pages
+                 for pays in per_span for pay in pays]
+        return rows + presence
+
+    return page_work_rows
 
 
 # ---------------------------------------------------------------------------
@@ -277,15 +370,12 @@ def _decode_page(page: int, glyph_blob, payload):
                     if payload is not None else None)
 
 
-def _extract_page_row(extract_page, t, rows: list) -> None:
-    """Stage 1 for one work row ``t`` (doc_id, page, glyph_blob, payload):
-    append a row per non-empty strategy table, then the page's marker."""
+def _extract_page(extract_page, page: int, glyph_blob, payload):
+    """Stage 1 for one work row: ``(tables, marker)``, the page's non-empty
+    strategy tables as ``(strategy, table, score)`` and its marker
+    ``(ocr_fallbacks, headers_found, errors, wall_ms)``."""
     t0 = time.perf_counter()
-    doc_id = t.doc_id
-    # page arrives as float NaN when NULL (unresolved media ref with no
-    # media table) — route to the error marker
-    page = (int(t.page) if t.page is not None and t.page == t.page
-            else PAGE_MALFORMED)
+    tables = []
     ocr_fb = 0
     headers_found = 0
     errors = 0
@@ -293,18 +383,15 @@ def _extract_page_row(extract_page, t, rows: list) -> None:
     # it becomes an 'error' status in metrics
     try:
         if page >= 0:
-            glyphs, payload = _decode_page(page, t.glyph_blob, t.payload)
-            for strat, table, n_ocr, found in extract_page(glyphs, payload):
+            glyphs, pay = _decode_page(page, glyph_blob, payload)
+            for strat, table, n_ocr, found in extract_page(glyphs, pay):
                 ocr_fb += n_ocr
                 headers_found |= int(found)
                 if table.nrows > 0:
                     # score here while the table is in hand — the
-                    # selection stage then never parses losers
-                    rows.append((doc_id, page, strat,
-                                 json.dumps(table.cells), table.col_bounds,
-                                 table.row_bounds,
-                                 score_cells_vectorized(table.cells),
-                                 0, 0, 0, 0))
+                    # selection never parses losers
+                    tables.append((strat, table,
+                                   score_cells_vectorized(table.cells)))
         elif page not in (PAGE_NO_CONTENT, PAGE_FILTERED, PAGE_UNKNOWN_KIND):
             # presence sentinels get a bare marker; any other negative
             # page is a malformed header
@@ -312,8 +399,22 @@ def _extract_page_row(extract_page, t, rows: list) -> None:
     except Exception:
         errors = 1
     wall = int((time.perf_counter() - t0) * 1000)
-    rows.append((doc_id, page, PAGE_MARKER, "", [], [], 0.0,
-                 ocr_fb, headers_found, errors, wall))
+    return tables, (ocr_fb, headers_found, errors, wall)
+
+
+def _extract_page_row(extract_page, t, rows: list) -> None:
+    """Stage 1 for one work row ``t`` (doc_id, page, glyph_blob, payload):
+    append a row per non-empty strategy table, then the page's marker."""
+    # page arrives as float NaN when NULL (unresolved media ref with no
+    # media table) — route to the error marker
+    page = (int(t.page) if t.page is not None and t.page == t.page
+            else PAGE_MALFORMED)
+    tables, marker = _extract_page(extract_page, page, t.glyph_blob,
+                                   t.payload)
+    rows.extend((t.doc_id, page, strat, json.dumps(table.cells),
+                 table.col_bounds, table.row_bounds, score, 0, 0, 0, 0)
+                for strat, table, score in tables)
+    rows.append((t.doc_id, page, PAGE_MARKER, "", [], [], 0.0, *marker))
 
 
 def _make_extract_pages(cfg: ExtractConfig, backend: OcrBackend | None = None):
@@ -348,8 +449,7 @@ def _make_assemble_partition(cfg: ExtractConfig):
     cols = [f.name for f in COMBINED_SCHEMA.fields]
 
     def assemble_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tc = TaskContext.get()
-        partition_id = tc.partitionId() if tc is not None else -1
+        partition_id = _partition_id()
 
         def flush(pdf: pd.DataFrame) -> pd.DataFrame:
             # column arrays once per batch; per-document work then runs on
@@ -394,16 +494,13 @@ def _make_assemble_partition(cfg: ExtractConfig):
 def _assemble_run(cfg: ExtractConfig, strategies, doc_id: str,
                   arrs: dict, s: int, e: int, partition_id: int) -> tuple:
     """Assemble one document from its contiguous row run [s, e) of the
-    batch's column arrays: fold its page markers, select the strategy
-    (scoring.select_strategy) and serialize the winner's tables. Returns
-    the document's COMBINED_SCHEMA row."""
+    batch's column arrays: fold its page markers, then :func:`_doc_row`.
+    Only the winner's tables are JSON-parsed."""
     strat = arrs["strategy"]
     ocr_fallbacks = 0
     headers_found = False
     errors = 0
     wall_ms = 0
-    # per-strategy row indices; scores were computed in stage 1, so
-    # losers are never JSON-parsed here
     per_idx: dict[str, list[int]] = {st: [] for st in strategies}
     for i in range(s, e):
         st = strat[i]
@@ -416,24 +513,108 @@ def _assemble_run(cfg: ExtractConfig, strategies, doc_id: str,
         elif st in per_idx:
             per_idx[st].append(i)
 
-    score = arrs["score"]
-    status, winner, best = select_strategy(
-        cfg, {st: score[idx] for st, idx in per_idx.items()},
-        headers_found, errors)
+    score, page = arrs["score"], arrs["page"]
+
+    def winner_tables(winner: str) -> list[tuple[int, Table]]:
+        return [(int(page[i]), Table(json.loads(arrs["cells_json"][i]),
+                                     list(arrs["col_bounds"][i]),
+                                     list(arrs["row_bounds"][i])))
+                for i in sorted(per_idx[winner], key=lambda i: page[i])]
+
+    return _doc_row(cfg, doc_id,
+                    {st: score[idx] for st, idx in per_idx.items()},
+                    winner_tables, (ocr_fallbacks, headers_found, errors,
+                                    wall_ms), partition_id)
+
+
+def _doc_row(cfg: ExtractConfig, doc_id: str, page_scores: dict,
+             winner_tables, marker: tuple, partition_id: int) -> tuple:
+    """One document's COMBINED_SCHEMA row: select the strategy
+    (scoring.select_strategy) from each strategy's page-table scores and
+    serialize the winner's tables, ``winner_tables(winner)`` as
+    ``[(page, Table)]`` in page order. ``marker`` is the document's summed
+    ``(ocr_fallbacks, headers_found, errors, wall_ms)``."""
+    ocr_fallbacks, headers_found, errors, wall_ms = marker
+    status, winner, best = select_strategy(cfg, page_scores,
+                                           bool(headers_found), errors)
     if status != STATUS_OK:
         return (doc_id, "[]", status, winner, 0, 0, ocr_fallbacks,
                 float(best), wall_ms, partition_id)
-
-    page = arrs["page"]
-    widx = sorted(per_idx[winner], key=lambda i: page[i])
-    tables = [(int(page[i]), Table(json.loads(arrs["cells_json"][i]),
-                                   list(arrs["col_bounds"][i]),
-                                   list(arrs["row_bounds"][i])))
-              for i in widx]
+    tables = winner_tables(winner)
     spans = serialize_tables([(p, winner, t) for p, t in tables])
     cells_parsed = sum(t.nrows * t.ncols for _, t in tables)
     return (doc_id, json.dumps(spans), STATUS_OK, winner, len(tables),
             cells_parsed, ocr_fallbacks, float(best), wall_ms, partition_id)
+
+
+# ---------------------------------------------------------------------------
+# Light route: page work, stage 1 and selection in one task per document
+# ---------------------------------------------------------------------------
+
+_OWN_MEDIA = ArrayType(StructType([
+    StructField("media_ref", StringType()),
+    StructField("page", IntegerType()),
+    StructField("payload", BinaryType()),
+]))
+
+
+def _make_extract_documents(cfg: ExtractConfig, has_media: bool):
+    """The light route's batch function: one row per document
+    ``(doc_id, spans, media)`` in, where ``media`` lists the document's
+    own media rows (NULL when it has none); its COMBINED_SCHEMA row out.
+    Each document's pages run through stage 1's per-page function and its
+    tables go straight to the selection, never through JSON. Memory: the
+    Arrow batch, each document bounded by LIGHT_SPANS pages."""
+    strategies = cfg.strategies()
+    cols = [f.name for f in COMBINED_SCHEMA.fields]
+    page_work_rows = _make_page_work(cfg)
+
+    def extract_documents(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        extract_page = page_extractor(cfg)
+        pid = _partition_id()
+        for pdf in batches:
+            out = []
+            for doc_id, spans, media in zip(pdf["doc_id"], pdf["spans"],
+                                            pdf["media"]):
+                own = {} if has_media else None
+                for m in media if media is not None else ():
+                    own.setdefault(m["media_ref"], []).append(
+                        (m["page"], m["payload"]))
+                out.append(_extract_document(
+                    cfg, strategies, extract_page, doc_id,
+                    page_work_rows(spans, own), pid))
+            yield pd.DataFrame(out, columns=cols)
+
+    return extract_documents
+
+
+def _extract_document(cfg: ExtractConfig, strategies, extract_page,
+                      doc_id: str, work: list[tuple],
+                      partition_id: int) -> tuple:
+    """One document's COMBINED_SCHEMA row from its work rows
+    ``(page, glyph_blob, payload)``."""
+    found: dict[str, list] = {st: [] for st in strategies}
+    marker = [0, 0, 0, 0]
+    for page, glyph_blob, payload in work:
+        tables, page_marker = _extract_page(extract_page, page, glyph_blob,
+                                            payload)
+        for st, table, score in tables:
+            if st in found:
+                found[st].append((page, score, table))
+        marker = [m + v for m, v in zip(marker, page_marker)]
+
+    def winner_tables(winner: str) -> list[tuple[int, Table]]:
+        return [(p, t) for p, _, t in sorted(found[winner],
+                                             key=lambda r: r[0])]
+
+    return _doc_row(cfg, doc_id,
+                    {st: [sc for _, sc, _ in v] for st, v in found.items()},
+                    winner_tables, tuple(marker), partition_id)
+
+
+def _partition_id() -> int:
+    tc = TaskContext.get()
+    return tc.partitionId() if tc is not None else -1
 
 
 # ---------------------------------------------------------------------------
@@ -446,33 +627,85 @@ def extract(docs: DataFrame, media: DataFrame | None = None,
     """The full extraction plan (lazy). Returns the combined per-document
     DataFrame: extracted spans (as JSON, see :func:`with_spans`) plus
     metrics columns. ``num_partitions=None`` means the session's
-    ``spark.sql.shuffle.partitions``, read when the plan is built."""
-    # Explicit page-hash salting inside build_page_work: unique
-    # (doc_id, page) keys spread a giant document across the cluster
-    # instead of one task (rows carrying a media_ref distribute by the
-    # equally-unique ref hash instead). The page and stage-2 exchanges are
-    # numbered (num_partitions, or the session's shuffle partitions when
-    # None), so AQE's SIZE-based coalescing never collapses these
-    # small-bytes / heavy-CPU rows onto a few cores (measured 3x
-    # regression). Only a payload join too big to broadcast adds an
-    # exchange that session coalescing may still shrink.
+    ``spark.sql.shuffle.partitions``, read when the plan is built.
+
+    Routing: a document with at most ``LIGHT_SPANS`` spans (NULL spans
+    count as 0) is light. Light documents and their own media rows are
+    hashed by ``doc_id`` into ``num_partitions`` partitions and joined
+    co-partitioned, and one task extracts and assembles each document:
+    memory is the Arrow batch plus at most ``LIGHT_SPANS`` pages per
+    document. Heavy documents take ``build_page_work``'s page-level
+    spread, stage 1 and the stage-2 regroup, whose streaming assemble
+    keeps memory at a batch plus the largest document.
+
+    Payload bytes cross exactly one exchange on either route: the media
+    table is split by a semi- and an anti-join against the BROADCAST ids
+    of the heavy documents, so the split itself moves no payload. Heavy
+    documents are rare by construction (at most ``total spans /
+    (LIGHT_SPANS + 1)``); on a corpus where they are not, every executor
+    receives all their ids (a few tens of bytes each) — broadcast is
+    forced, so a very large heavy share costs driver and executor memory
+    rather than a second payload exchange.
+
+    Every exchange is numbered (REPARTITION_BY_NUM), so AQE's SIZE-based
+    coalescing never collapses these small-bytes / heavy-CPU rows onto a
+    few cores (measured 3x regression). Only a heavy payload join too big
+    to broadcast adds an exchange that session coalescing may still
+    shrink. ``partition_id`` is the stage-2 hash partition of
+    ``doc_id``, ``pmod(hash(doc_id), num_partitions)``, on both routes."""
     num_partitions = _num_partitions(docs, num_partitions)
-    work = build_page_work(docs, media, cfg, num_partitions)
+    docs = docs.select("doc_id", "spans")
+    light = F.coalesce(F.size("spans"), F.lit(0)) <= LIGHT_SPANS
+    heavy_docs = docs.filter(~light)
+    light_media = heavy_media = None
+    if media is not None and cfg.strategies() != (MODE_STREAM,):
+        heavy_ids = F.broadcast(heavy_docs.select("doc_id"))
+        heavy_media = media.join(heavy_ids, "doc_id", "left_semi")
+        light_media = media.join(heavy_ids, "doc_id", "left_anti")
+        pages = parse_pages(cfg.pages)
+        if not is_all(pages):
+            # unselected pages are never shuffled
+            light_media = light_media.filter(F.col("page").isin(pages))
+
+    light_docs = docs.filter(light).repartition(num_partitions, "doc_id")
+    if light_media is None:
+        light_docs = light_docs.withColumn("media",
+                                           F.lit(None).cast(_OWN_MEDIA))
+    else:
+        own = (light_media.repartition(num_partitions, "doc_id")
+               .groupBy("doc_id")
+               .agg(F.collect_list(F.struct("media_ref", "page", "payload"))
+                    .alias("media")))
+        # both sides hashed on doc_id alone: the join adds no exchange.
+        # SHUFFLE_MERGE keeps AQE from turning a small media side into a
+        # broadcast, which would move payload bytes a second time
+        light_docs = light_docs.join(own.hint("SHUFFLE_MERGE"), "doc_id",
+                                     "left")
+    light_out = light_docs.mapInPandas(
+        _make_extract_documents(cfg, media is not None),
+        schema=COMBINED_SCHEMA)
+
+    work = build_page_work(heavy_docs, heavy_media, cfg, num_partitions)
     page_results = work.mapInPandas(_make_extract_pages(cfg),
                                     schema=PAGE_RESULT_SCHEMA)
     # one explicit hash shuffle co-locates each document's page rows, then
     # stage 2 runs partition-wise (see _make_assemble_partition); the
     # local (spillable, JVM-side) sort makes each document a contiguous
     # run — the streaming assemble's memory-bound contract; no exchange
-    combined_repart = (page_results.repartition(num_partitions, "doc_id")
-                       .sortWithinPartitions("doc_id"))
-    combined = combined_repart.mapInPandas(_make_assemble_partition(cfg),
-                                           schema=COMBINED_SCHEMA)
+    heavy_out = (page_results.repartition(num_partitions, "doc_id")
+                 .sortWithinPartitions("doc_id")
+                 .mapInPandas(_make_assemble_partition(cfg),
+                              schema=COMBINED_SCHEMA))
     # Completeness holds by construction: explode_outer + presence
-    # sentinels mean every input document reaches stage 2 exactly once
+    # sentinels mean every input document is assembled exactly once
     # (BaseParser.finalizeResults "no tables" parity, and resume
     # termination) — no side anti-join plan, no extra scan of docs.
-    return combined
+    # A union numbers its second child's tasks from num_partitions, so
+    # the hash partition is computed here rather than read from the task.
+    return (light_out.unionByName(heavy_out)
+            .withColumn("partition_id",
+                        F.pmod(F.hash("doc_id"),
+                               F.lit(num_partitions)).cast("int")))
 
 
 def with_spans(combined: DataFrame) -> DataFrame:

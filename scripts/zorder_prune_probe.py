@@ -14,6 +14,7 @@ Expected shape (the reason the operator exists):
 Run:  PYTHONPATH=/root/repo python scripts/zorder_prune_probe.py [N]
 """
 
+import os
 import shutil
 import sys
 import time
@@ -26,7 +27,8 @@ FILES = 64
 DOM = 4096
 BASE = "/tmp/zorder_probe"
 
-spark = (SparkSession.builder.master("local[32]")
+CORES = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+spark = (SparkSession.builder.master(f"local[{CORES}]")
          .config("spark.sql.shuffle.partitions", "32")
          .config("spark.ui.enabled", "false").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")

@@ -131,6 +131,59 @@ def test_page_work_plan_joins_pages_by_shuffle_hash(spark, corpus):
     assert "SortMergeJoin" not in final, final
 
 
+def _executed_tree(df):
+    """The plan that ran (AQE's final plan) as nested ``(name, description,
+    output columns, children)``, with query stages and reused exchanges
+    opened."""
+    def walk(node):
+        name = node.nodeName()
+        if "QueryStage" in name:
+            return walk(node.plan())
+        if name == "ReusedExchange":
+            return walk(node.child())
+        kids, out = node.children(), node.output()
+        return (name, node.simpleString(100),
+                [out.apply(i).name() for i in range(out.size())],
+                [walk(kids.apply(i)) for i in range(kids.size())])
+    return walk(df._jdf.queryExecution().executedPlan().executedPlan())
+
+
+def _nodes(tree, path=()):
+    """(node, names of its ancestors) of every node, root first."""
+    yield tree, path
+    for child in tree[3]:
+        yield from _nodes(child, path + (tree[0],))
+
+
+def _exchanges(tree):
+    return [n for n, _ in _nodes(tree) if "Exchange" in n[0]]
+
+
+def _payload_exchanges(tree):
+    return [n for n in _exchanges(tree) if "payload" in n[2]]
+
+
+def _mixed_corpus(spark, corpus):
+    """The standard corpus plus a 9-page document of text and raster
+    pages: 18 spans, so it takes the heavy route."""
+    import random
+    from extractpdf4j_spark.fixtures import (STMT_COL_X, blank_page,
+                                             layout_text_rows, statement_rows)
+    from extractpdf4j_spark.pipeline import LIGHT_SPANS
+    docs, media, _, _ = corpus
+    rng = random.Random(3)
+    fb = FixtureBuilder(seed=3)
+    fb.add_doc("heavy-1", [
+        {"runs": layout_text_rows(statement_rows(rng, 4), STMT_COL_X),
+         "image": blank_page()} for _ in range(9)])
+    assert len(fb.documents[0]["spans"]) > LIGHT_SPANS
+    heavy_docs, heavy_media = fb.to_pandas()
+    return (docs.unionByName(spark.createDataFrame(
+                heavy_docs, schema=DOCUMENTS_SCHEMA)),
+            media.unionByName(spark.createDataFrame(
+                heavy_media, schema=MEDIA_SCHEMA)))
+
+
 @pytest.mark.parametrize("mode", ["hybrid", "stream"])
 @pytest.mark.parametrize("num_partitions", [None, 4])
 def test_extract_plan_is_numbered_under_coalescing(spark, corpus, mode,
@@ -138,8 +191,13 @@ def test_extract_plan_is_numbered_under_coalescing(spark, corpus, mode,
     """With AQE coalescing on, extract() still runs every shuffle as a
     numbered repartition and nothing is coalesced: size-based coalescing
     would pack the small-bytes, heavy-CPU page rows onto few tasks.
-    ``num_partitions=None`` takes the session's shuffle partitions."""
-    docs, media, _, _ = corpus
+    ``num_partitions=None`` takes the session's shuffle partitions.
+
+    Over a corpus with light and heavy documents: the light route's
+    MapInPandas reads only numbered exchanges and broadcasts, no exchange
+    sits between it and the output, and payload bytes cross exactly one
+    exchange on each route."""
+    docs, media = _mixed_corpus(spark, corpus)
     keys = ("spark.sql.adaptive.coalescePartitions.enabled",
             "spark.sql.adaptive.coalescePartitions.parallelismFirst")
     prev = [spark.conf.get(k) for k in keys]
@@ -148,7 +206,7 @@ def test_extract_plan_is_numbered_under_coalescing(spark, corpus, mode,
     try:
         combined = extract(docs, media, ExtractConfig(mode=mode),
                            num_partitions=num_partitions)
-        combined.collect()
+        assert combined.count() == docs.count()
     finally:
         for k, v in zip(keys, prev):
             spark.conf.set(k, v)
@@ -159,6 +217,20 @@ def test_extract_plan_is_numbered_under_coalescing(spark, corpus, mode,
                  if "Exchange " in ln and "BroadcastExchange" not in ln]
     assert exchanges, final
     assert all("REPARTITION_BY_NUM" in ln for ln in exchanges), final
+
+    tree = _executed_tree(combined)
+    (light, above), = [(n, path) for n, path in _nodes(tree)
+                       if n[0] == "MapInPandas"
+                       and "extract_documents" in n[1]]
+    (heavy,) = [n for n, _ in _nodes(tree) if n[0] == "MapInPandas"
+                and "assemble_partition" in n[1]]
+    assert not [name for name in above if "Exchange" in name], final
+    assert _exchanges(light), final
+    assert all(n[0] == "BroadcastExchange" or "REPARTITION_BY_NUM" in n[1]
+               for n in _exchanges(light)), final
+    if mode == "hybrid":    # stream-only jobs never read payloads
+        assert len(_payload_exchanges(light)) == 1, final
+        assert len(_payload_exchanges(heavy)) == 1, final
 
 
 def test_resume_checkpoint(spark, corpus, tmp_path):
@@ -330,7 +402,7 @@ def _mix_doc(fb):
     ])
 
 
-@pytest.mark.parametrize("build,cfg,status", [
+_MULTIPAGE_CASES = [
     (_mix_doc, ExtractConfig(), "ok"),
     (_mix_doc, ExtractConfig(min_score=0.99), "below_min_score"),
     (_mix_doc, ExtractConfig(mode="ocrstream",
@@ -342,8 +414,13 @@ def _mix_doc(fb):
     # plain left-to-right sum could round differently
     (lambda fb: fb.stmt_text("stmt-9p", n_rows=6, n_pages=9), ExtractConfig(),
      "ok"),
-], ids=["default", "below_min_score", "headers_missing", "no_tables",
-        "stmt_text_9p"])
+]
+_MULTIPAGE_IDS = ["default", "below_min_score", "headers_missing",
+                  "no_tables", "stmt_text_9p"]
+
+
+@pytest.mark.parametrize("build,cfg,status", _MULTIPAGE_CASES,
+                         ids=_MULTIPAGE_IDS)
 def test_interleaved_multipage_doc(spark, build, cfg, status):
     """Multi-page documents (an interleaved digital + scanned one among
     them): winner selection is per-document across all pages' tables, and
@@ -389,6 +466,13 @@ _PARITY_CFG = {
 }
 
 
+def _owned_media(doc_id, payloads):
+    """MEDIA_SCHEMA rows of ``payloads`` (ref -> bytes, all on page 1),
+    owned by ``doc_id``: a media span resolves only against its own
+    document's media rows."""
+    return [(ref, doc_id, 1, p) for ref, p in payloads.items()]
+
+
 @pytest.fixture(scope="module")
 def parity_docs():
     """Edge-case documents over one media table holding a ruled page and
@@ -428,9 +512,8 @@ def test_local_matches_spark_on_edge_documents(spark, parity_docs,
     cfg = _PARITY_CFG[case]
     docs = spark.createDataFrame([(case, spans[case])],
                                  schema=DOCUMENTS_SCHEMA)
-    media = spark.createDataFrame(
-        [(ref, ref.split("/")[0], 1, p) for ref, p in payloads.items()],
-        schema=MEDIA_SCHEMA)
+    media = spark.createDataFrame(_owned_media(case, payloads),
+                                  schema=MEDIA_SCHEMA)
     (row,) = extract(docs, media, cfg, num_partitions).collect()
     want, wstatus, wstrat, _ = extract_document(spans[case], payloads, cfg)
     assert (row["status"], row["strategy"]) == (wstatus, wstrat)
@@ -441,33 +524,44 @@ def test_local_matches_spark_on_edge_documents(spark, parity_docs,
     assert seq(json.loads(row["spans_json"])) == seq(want)
 
 
-def test_big_doc_pages_spread_across_partitions(spark):
-    """Axis-A skew duty: a 40-page document's pages distribute across
-    stage-1 partitions instead of landing on one task."""
-    from pyspark.sql import functions as F
-    from extractpdf4j_spark.pipeline import build_page_work
+def test_big_doc_pages_spread_across_partitions(spark, monkeypatch):
+    """Axis-A skew duty: extract() routes a 40-page document heavy, and
+    the page work it builds for stage 1 spreads that document's pages
+    across partitions instead of landing on one task."""
+    from extractpdf4j_spark import pipeline
     fb = FixtureBuilder(seed=5)
     fb.skew_big("big-1", n_pages=40)
     for i in range(10):
         fb.stmt_text(f"small-{i}", n_rows=3)
-    docs_pdf, media_pdf = fb.to_pandas()
+    docs_pdf, _ = fb.to_pandas()
     docs = spark.createDataFrame(docs_pdf, schema=DOCUMENTS_SCHEMA)
-    work = build_page_work(docs, None, ExtractConfig()) \
-        .repartition(8, F.col("doc_id"), F.col("page"))
-    parts = (work.filter(F.col("doc_id") == "big-1")
-             .select(F.spark_partition_id().alias("p"))
+    built = []
+    build_page_work = pipeline.build_page_work
+
+    def spy(*args, **kwargs):
+        built.append(build_page_work(*args, **kwargs))
+        return built[-1]
+
+    monkeypatch.setattr(pipeline, "build_page_work", spy)
+    combined = extract(docs, None, ExtractConfig(), num_partitions=8)
+    (work,) = built     # the frame that feeds stage 1
+    assert {r["doc_id"] for r in work.select("doc_id").distinct()
+            .collect()} == {"big-1"}      # the 1-pagers went light
+    parts = (work.select(F.spark_partition_id().alias("p"))
              .distinct().count())
     assert parts >= 5  # 40 pages hash over 8 partitions
+    assert combined.count() == 11
 
 
 def test_stage2_streaming_carryover_across_arrow_batches(spark):
     """The streaming assemble holds back the trailing document of each
-    Arrow batch; with a 2-row batch size every multi-page document is
-    split across batches, so this pins the carryover contract: every doc
+    Arrow batch; with a 2-row batch size every heavy document is split
+    across batches, so this pins the carryover contract: every doc
     exactly once, same statuses as with the default batch size."""
+    from extractpdf4j_spark.pipeline import LIGHT_SPANS
     fb = FixtureBuilder(seed=11)
-    for i in range(6):
-        fb.stmt_text(f"multi-{i}", n_rows=4, n_pages=3)
+    for i in range(6):     # heavy: one text span per page
+        fb.stmt_text(f"multi-{i}", n_rows=4, n_pages=LIGHT_SPANS + 1)
     docs_pdf, media_pdf = fb.to_pandas()
     docs = spark.createDataFrame(docs_pdf, schema=DOCUMENTS_SCHEMA)
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
@@ -509,3 +603,172 @@ def test_extraction_deterministic_across_partition_counts(spark):
         snapshots.append(sorted(tuple(r) for r in metrics.collect()))
     assert snapshots[0] == snapshots[2], "span output varies with partitioning"
     assert snapshots[1] == snapshots[3], "metrics vary with partitioning"
+
+
+def test_heavy_doc_spanning_arrow_batches_matches_local(spark):
+    """A heavy document whose stage-1 rows outnumber one Arrow batch (the
+    stage-2 assemble carries it over from one batch into the next) gets
+    the single-document API's row: memory stays a batch plus the largest
+    document without changing the output."""
+    from extractpdf4j_spark.local import extract_document
+    from extractpdf4j_spark.pipeline import (LIGHT_SPANS, PAGE_RESULT_SCHEMA,
+                                             _make_extract_pages,
+                                             build_page_work)
+    fb = FixtureBuilder(seed=13)
+    fb.stmt_text("long", n_rows=4, n_pages=40)
+    fb.stmt_text("short", n_rows=4)
+    docs_pdf, _ = fb.to_pandas()
+    assert len(docs_pdf["spans"][0]) > LIGHT_SPANS
+    docs = spark.createDataFrame(docs_pdf, schema=DOCUMENTS_SCHEMA)
+    cfg = ExtractConfig()
+    batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    stage1 = (build_page_work(docs.filter(F.col("doc_id") == "long"), None,
+                              cfg)
+              .mapInPandas(_make_extract_pages(cfg),
+                           schema=PAGE_RESULT_SCHEMA))
+    assert stage1.count() > batch
+    rows = {r["doc_id"]: r for r in
+            extract(docs, None, cfg, num_partitions=2).collect()}
+    assert set(rows) == {"long", "short"}
+    want, status, strategy, _ = extract_document(list(docs_pdf["spans"][0]),
+                                                 {}, cfg)
+    assert (rows["long"]["status"], rows["long"]["strategy"]) == \
+        (status, strategy) == ("ok", "stream")
+    assert json.loads(rows["long"]["spans_json"]) == want
+
+
+# LIGHT_SPANS values that send every document down one route
+_ROUTES = {"heavy": -1, "light": 10**6}
+
+
+def _rows_by_route(monkeypatch, build):
+    """{route: sorted (doc_id, status, strategy, spans_json)} of the frame
+    ``build()`` returns under each route."""
+    from extractpdf4j_spark import pipeline
+    out = {}
+    for route, light_spans in _ROUTES.items():
+        monkeypatch.setattr(pipeline, "LIGHT_SPANS", light_spans)
+        out[route] = sorted((r["doc_id"], r["status"], r["strategy"],
+                             r["spans_json"]) for r in build().collect())
+    return out
+
+
+def _parity_groups(spark, parity_docs):
+    """(cfg, docs, media, cases): the parity cases grouped by config, each
+    document with its own media rows."""
+    spans, payloads = parity_docs
+    groups = {}
+    for case, cfg in _PARITY_CFG.items():
+        groups.setdefault(repr(cfg), (cfg, []))[1].append(case)
+    for cfg, cases in groups.values():
+        docs = spark.createDataFrame([(c, spans[c]) for c in cases],
+                                     schema=DOCUMENTS_SCHEMA)
+        media = spark.createDataFrame(
+            [m for c in cases for m in _owned_media(c, payloads)],
+            schema=MEDIA_SCHEMA)
+        yield cfg, docs, media, cases
+
+
+# the page sentinel each edge document must carry exactly once
+_SENTINEL_CASES = {"malformed_header": -1, "empty_spans": -2,
+                   "page_outside_selection": -3, "unknown_kind": -4,
+                   "null_kind": -4}
+
+
+def test_page_work_rows_match_build_page_work(spark, parity_docs):
+    """The light route's Python page-work builder gives the same rows as
+    the heavy route's native one on every edge document, and each page
+    sentinel (malformed, no-content, filtered, unknown kind, NULL kind)
+    appears exactly once in its document's rows."""
+    from extractpdf4j_spark.pipeline import _make_page_work, build_page_work
+    spans, payloads = parity_docs
+    seen = set()
+    for cfg, docs, media, cases in _parity_groups(spark, parity_docs):
+        native = sorted((
+            (r["doc_id"], r["page"], r["glyph_blob"],
+             None if r["payload"] is None else bytes(r["payload"]))
+            for r in build_page_work(docs, media, cfg).collect()),
+            key=repr)
+        own = {ref: [(1, p)] for ref, p in payloads.items()}
+        rows = sorted(((c, *r) for c in cases
+                       for r in _make_page_work(cfg)(spans[c], own)),
+                      key=repr)
+        assert rows == native
+        for case in set(cases) & set(_SENTINEL_CASES):
+            pages = [r[1] for r in rows if r[0] == case]
+            assert pages.count(_SENTINEL_CASES[case]) == 1, (case, pages)
+            seen.add(case)
+    assert seen == set(_SENTINEL_CASES)
+
+
+@pytest.mark.parametrize("num_partitions", [2, 8])
+def test_routes_agree_on_edge_documents(spark, parity_docs, monkeypatch,
+                                        num_partitions):
+    """Light and heavy routes give identical (doc_id, status, strategy,
+    spans_json) rows on every edge document, each exactly once."""
+    for cfg, docs, media, cases in _parity_groups(spark, parity_docs):
+        got = _rows_by_route(monkeypatch, lambda: extract(
+            docs, media, cfg, num_partitions))
+        assert got["light"] == got["heavy"]
+        assert sorted(r[0] for r in got["light"]) == sorted(cases)
+
+
+@pytest.mark.parametrize("build,cfg,status", _MULTIPAGE_CASES,
+                         ids=_MULTIPAGE_IDS)
+def test_routes_agree_on_multipage_docs(spark, monkeypatch, build, cfg,
+                                        status):
+    fb = FixtureBuilder(seed=99)
+    build(fb)
+    docs_pdf, media_pdf = fb.to_pandas()
+    docs = spark.createDataFrame(docs_pdf, schema=DOCUMENTS_SCHEMA)
+    media = spark.createDataFrame(media_pdf, schema=MEDIA_SCHEMA)
+    got = _rows_by_route(monkeypatch, lambda: extract(docs, media, cfg, 4))
+    assert got["light"] == got["heavy"]
+    assert [r[1] for r in got["light"]] == [status]
+
+
+@pytest.mark.parametrize("route", list(_ROUTES))
+@pytest.mark.parametrize("num_partitions", [2, 8])
+def test_media_of_another_document_never_resolves(spark, monkeypatch, route,
+                                                  num_partitions):
+    """A media span resolves only against media rows with its own
+    document's doc_id. A span naming another document's media_ref, or a
+    media row whose doc_id names no document, comes back 'error' on
+    either route: never silently 'ok', never missing."""
+    from extractpdf4j_spark import pipeline
+    monkeypatch.setattr(pipeline, "LIGHT_SPANS", _ROUTES[route])
+    fb = FixtureBuilder(seed=7)
+    fb.grid_ruled("owner")
+    fb.grid_ruled("stray")
+    _, media_pdf = fb.to_pandas()
+    owner_media, stray_media = (d["spans"][1] for d in fb.documents)
+    docs = spark.createDataFrame(
+        [("owner", fb.documents[0]["spans"]),
+         ("thief", [owner_media]),            # another document's media
+         ("stray", [stray_media])],           # its media row names 'elsewhere'
+        schema=DOCUMENTS_SCHEMA)
+    media_pdf.loc[media_pdf["doc_id"] == "stray", "doc_id"] = "elsewhere"
+    media = spark.createDataFrame(media_pdf, schema=MEDIA_SCHEMA)
+    out = {r["doc_id"]: r["status"] for r in
+           extract(docs, media, ExtractConfig(), num_partitions).collect()}
+    assert out == {"owner": "ok", "thief": "error", "stray": "error"}
+
+
+def test_partition_id_is_the_doc_id_hash_partition(spark):
+    """partition_id is the stage-2 hash partition of doc_id, the partition
+    ``repartition(n, "doc_id")`` puts the document in, for light and heavy
+    documents alike."""
+    fb = FixtureBuilder(seed=21)
+    for i in range(3):
+        fb.stmt_text(f"heavy-{i}", n_rows=3, n_pages=40)
+    for i in range(12):
+        fb.stmt_text(f"light-{i}", n_rows=3)
+    docs_pdf, _ = fb.to_pandas()
+    docs = spark.createDataFrame(docs_pdf, schema=DOCUMENTS_SCHEMA)
+    n = 4
+    want = {r["doc_id"]: r["p"] for r in
+            docs.select("doc_id").repartition(n, "doc_id")
+            .select("doc_id", F.spark_partition_id().alias("p")).collect()}
+    got = {r["doc_id"]: r["partition_id"] for r in
+           extract(docs, None, ExtractConfig(), num_partitions=n).collect()}
+    assert got == want
