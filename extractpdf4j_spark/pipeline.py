@@ -6,13 +6,13 @@ Each document takes one of two routes, by a native per-document key,
 
     documents(doc_id, spans)          media(media_ref, doc_id, page, payload)
         |                                 |
-        |                   semi/anti join against the broadcast ids of
-        |                   the heavy documents (no exchange)
+        |  heavy ids collected ──────► filter on the heavy ids
+        |  (one driver job)               (no exchange)
         |                                 |
     LIGHT (at most LIGHT_SPANS spans)     |
-        repartition(doc_id) ────── left join on doc_id ── repartition(doc_id)
-        |   (co-partitioned: no            + collect_list per doc_id
-        |    further exchange)
+        repartition(doc_id) ─── sort-merge left join ── repartition(doc_id)
+        |   on doc_id alone (co-partitioned: no further exchange; rows
+        |   arrive sorted by doc_id, one per own media row)
         mapInPandas(extract_documents)  ← per document: page-work rows
         |                                 (_make_page_work), stage-1 fan-out,
         |                                 selection, span serialization
@@ -60,7 +60,9 @@ from __future__ import annotations
 
 import json
 import re
+import sys
 import time
+import zipimport
 from collections.abc import Iterator
 
 import numpy as np
@@ -134,9 +136,10 @@ COMBINED_SCHEMA = StructType([
 PAGE_MARKER = "_page"
 
 # A document with at most this many spans takes the light route (see the
-# module docstring). Chosen by measurement on the benchmark's workloads;
-# see ROADMAP.md.
-LIGHT_SPANS = 16
+# module docstring): the largest light document of the benchmark's
+# workloads, whose documents have at most 6 spans or at least 44 (see
+# ROADMAP.md).
+LIGHT_SPANS = 6
 
 
 # ---------------------------------------------------------------------------
@@ -419,6 +422,7 @@ def _extract_page_row(extract_page, t, rows: list) -> None:
 
 def _make_extract_pages(cfg: ExtractConfig, backend: OcrBackend | None = None):
     def extract_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _forget_zip_importers()
         extract_page = page_extractor(cfg, backend)
         cols = [f.name for f in PAGE_RESULT_SCHEMA.fields]
         for pdf in batches:
@@ -449,6 +453,7 @@ def _make_assemble_partition(cfg: ExtractConfig):
     cols = [f.name for f in COMBINED_SCHEMA.fields]
 
     def assemble_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _forget_zip_importers()
         partition_id = _partition_id()
 
         def flush(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -457,38 +462,51 @@ def _make_assemble_partition(cfg: ExtractConfig):
             # contract) — a pandas frame+mask per document dominated the
             # stage at a few rows per document
             doc = pdf["doc_id"].to_numpy()
-            change = np.empty(len(doc), dtype=bool)
-            change[0] = True
-            change[1:] = doc[1:] != doc[:-1]
-            starts = np.flatnonzero(change)
-            ends = np.append(starts[1:], len(doc))
             arrs = {c: pdf[c].to_numpy() for c in
                     ("strategy", "score", "page", "cells_json", "col_bounds",
                      "row_bounds", "ocr_fallbacks", "headers_found",
                      "errors", "wall_ms")}
-            out = [_assemble_run(cfg, strategies, doc[s], arrs,
-                                 int(s), int(e), partition_id)
-                   for s, e in zip(starts, ends)]
+            out = [_assemble_run(cfg, strategies, doc[s], arrs, s, e,
+                                 partition_id)
+                   for s, e in _doc_runs(doc)]
             return pd.DataFrame(out, columns=cols)
 
-        pending: pd.DataFrame | None = None
-        for pdf in batches:
-            if pending is not None:
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-                pending = None
-            if not len(pdf):
-                continue
-            # sorted input → the last doc_id's rows are the batch tail
-            # and may continue in the next batch; hold them back
-            tail = pdf["doc_id"] == pdf["doc_id"].iloc[-1]
-            pending = pdf[tail]
-            head = pdf[~tail]
-            if len(head):
-                yield flush(head)
-        if pending is not None and len(pending):
-            yield flush(pending)
+        for pdf in _whole_documents(batches):
+            yield flush(pdf)
 
     return assemble_partition
+
+
+def _whole_documents(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Re-cut Arrow batches of rows sorted by doc_id so that no document
+    spans two frames: each batch is yielded without its trailing
+    document, which is carried into the next. Memory: a batch plus the
+    largest document."""
+    pending: pd.DataFrame | None = None
+    for pdf in batches:
+        if pending is not None:
+            pdf = pd.concat([pending, pdf], ignore_index=True)
+            pending = None
+        if not len(pdf):
+            continue
+        # sorted input → the last doc_id's rows are the batch tail and may
+        # continue in the next batch; hold them back
+        tail = pdf["doc_id"] == pdf["doc_id"].iloc[-1]
+        pending = pdf[tail]
+        head = pdf[~tail]
+        if len(head):
+            yield head
+    if pending is not None and len(pending):
+        yield pending
+
+
+def _doc_runs(doc: np.ndarray) -> list[tuple[int, int]]:
+    """``[start, end)`` of each contiguous doc_id run of a sorted frame."""
+    change = np.empty(len(doc), dtype=bool)
+    change[0] = True
+    change[1:] = doc[1:] != doc[:-1]
+    starts = np.flatnonzero(change)
+    return list(zip(starts.tolist(), np.append(starts[1:], len(doc)).tolist()))
 
 
 def _assemble_run(cfg: ExtractConfig, strategies, doc_id: str,
@@ -551,48 +569,48 @@ def _doc_row(cfg: ExtractConfig, doc_id: str, page_scores: dict,
 # Light route: page work, stage 1 and selection in one task per document
 # ---------------------------------------------------------------------------
 
-_OWN_MEDIA = ArrayType(StructType([
-    StructField("media_ref", StringType()),
-    StructField("page", IntegerType()),
-    StructField("payload", BinaryType()),
-]))
-
-
 def _make_extract_documents(cfg: ExtractConfig, has_media: bool):
-    """The light route's batch function: one row per document
-    ``(doc_id, spans, media)`` in, where ``media`` lists the document's
-    own media rows (NULL when it has none); its COMBINED_SCHEMA row out.
-    Each document's pages run through stage 1's per-page function and its
-    tables go straight to the selection, never through JSON. Memory: the
-    Arrow batch, each document bounded by LIGHT_SPANS pages."""
+    """The light route's batch function. Rows come sorted by doc_id, one
+    per (document, own media row) pair: ``(doc_id, spans, media_ref,
+    page, payload)``, the media columns NULL for a document without media
+    rows. Out: each document's COMBINED_SCHEMA row. Its pages run through
+    stage 1's per-page function and its tables go straight to the
+    selection, never through JSON. ``has_media=False``: the job has no
+    media table. A doc_id names one document (the resume checkpoint keys
+    on it too): its spans are read from its first row. Memory: an Arrow
+    batch (at most one payload per row) plus the largest document."""
     strategies = cfg.strategies()
     cols = [f.name for f in COMBINED_SCHEMA.fields]
     page_work_rows = _make_page_work(cfg)
 
     def extract_documents(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _forget_zip_importers()
         extract_page = page_extractor(cfg)
-        pid = _partition_id()
-        for pdf in batches:
+        for pdf in _whole_documents(batches):
+            doc, spans = pdf["doc_id"].to_numpy(), pdf["spans"].to_numpy()
+            refs, pages = pdf["media_ref"].to_numpy(), pdf["page"].to_numpy()
+            payloads = pdf["payload"].to_numpy()
             out = []
-            for doc_id, spans, media in zip(pdf["doc_id"], pdf["spans"],
-                                            pdf["media"]):
+            for s, e in _doc_runs(doc):
                 own = {} if has_media else None
-                for m in media if media is not None else ():
-                    own.setdefault(m["media_ref"], []).append(
-                        (m["page"], m["payload"]))
+                for i in range(s, e):
+                    if refs[i] is not None:
+                        p = pages[i]
+                        own.setdefault(refs[i], []).append(
+                            (None if p is None or p != p else int(p),
+                             payloads[i]))
                 out.append(_extract_document(
-                    cfg, strategies, extract_page, doc_id,
-                    page_work_rows(spans, own), pid))
+                    cfg, strategies, extract_page, doc[s],
+                    page_work_rows(spans[s], own)))
             yield pd.DataFrame(out, columns=cols)
 
     return extract_documents
 
 
 def _extract_document(cfg: ExtractConfig, strategies, extract_page,
-                      doc_id: str, work: list[tuple],
-                      partition_id: int) -> tuple:
+                      doc_id: str, work: list[tuple]) -> tuple:
     """One document's COMBINED_SCHEMA row from its work rows
-    ``(page, glyph_blob, payload)``."""
+    ``(page, glyph_blob, payload)``; ``extract`` sets its partition_id."""
     found: dict[str, list] = {st: [] for st in strategies}
     marker = [0, 0, 0, 0]
     for page, glyph_blob, payload in work:
@@ -609,7 +627,25 @@ def _extract_document(cfg: ExtractConfig, strategies, extract_page,
 
     return _doc_row(cfg, doc_id,
                     {st: [sc for _, sc, _ in v] for st, v in found.items()},
-                    winner_tables, tuple(marker), partition_id)
+                    winner_tables, tuple(marker), -1)
+
+
+def _forget_zip_importers() -> None:
+    """Drop the zip importers this Python worker has cached.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the start
+    of every task, and up to Python 3.11 that makes every cached
+    ``zipimporter`` re-read its archive's whole central directory, at
+    once. A worker holds one per package directory imported from
+    ``pyspark.zip``, the py4j zip and the Spark jar on its path (16 after
+    one extraction task): about 0.3-0.5 s per task at ``local[4]``, more
+    than a light partition's extraction. Called at the start of each
+    batch function, so the next task on this worker re-reads none; an
+    import that needs one rebuilds it from zipimport's own directory
+    cache."""
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del sys.path_importer_cache[path]
 
 
 def _partition_id() -> int:
@@ -624,28 +660,33 @@ def _partition_id() -> int:
 def extract(docs: DataFrame, media: DataFrame | None = None,
             cfg: ExtractConfig = ExtractConfig(),
             num_partitions: int | None = None) -> DataFrame:
-    """The full extraction plan (lazy). Returns the combined per-document
+    """The full extraction plan (lazy but for one job that collects the
+    heavy documents' ids, see below). Returns the combined per-document
     DataFrame: extracted spans (as JSON, see :func:`with_spans`) plus
     metrics columns. ``num_partitions=None`` means the session's
     ``spark.sql.shuffle.partitions``, read when the plan is built.
 
     Routing: a document with at most ``LIGHT_SPANS`` spans (NULL spans
     count as 0) is light. Light documents and their own media rows are
-    hashed by ``doc_id`` into ``num_partitions`` partitions and joined
-    co-partitioned, and one task extracts and assembles each document:
-    memory is the Arrow batch plus at most ``LIGHT_SPANS`` pages per
-    document. Heavy documents take ``build_page_work``'s page-level
-    spread, stage 1 and the stage-2 regroup, whose streaming assemble
-    keeps memory at a batch plus the largest document.
+    each hashed by ``doc_id`` into ``num_partitions`` partitions and
+    sort-merge joined on ``doc_id`` alone, co-partitioned, so the join
+    adds no exchange and hands the rows over sorted by ``doc_id``. One
+    task then extracts and assembles each document: memory is an Arrow
+    batch, one payload per row, plus the largest document (at most
+    ``LIGHT_SPANS`` spans, which each of its media rows carries once).
+    Heavy documents take ``build_page_work``'s page-level spread, stage 1
+    and the stage-2 regroup, whose streaming assemble keeps memory at a
+    batch plus the largest document.
 
-    Payload bytes cross exactly one exchange on either route: the media
-    table is split by a semi- and an anti-join against the BROADCAST ids
-    of the heavy documents, so the split itself moves no payload. Heavy
-    documents are rare by construction (at most ``total spans /
-    (LIGHT_SPANS + 1)``); on a corpus where they are not, every executor
-    receives all their ids (a few tens of bytes each) — broadcast is
-    forced, so a very large heavy share costs driver and executor memory
-    rather than a second payload exchange.
+    The heavy documents' ids are collected to the driver when the plan
+    is built (one job over ``docs``), and the media table is split by a
+    filter on them, so the split moves no payload and reads ``docs`` no
+    further: payload bytes cross exactly one exchange on either route,
+    and without heavy documents the plan has no heavy route at all.
+    Heavy documents are rare by construction (at most ``total spans /
+    (LIGHT_SPANS + 1)``); on a corpus where they are not, the driver
+    holds all their ids (a few tens of bytes each) and ships them in the
+    plan.
 
     Every exchange is numbered (REPARTITION_BY_NUM), so AQE's SIZE-based
     coalescing never collapses these small-bytes / heavy-CPU rows onto a
@@ -657,11 +698,13 @@ def extract(docs: DataFrame, media: DataFrame | None = None,
     docs = docs.select("doc_id", "spans")
     light = F.coalesce(F.size("spans"), F.lit(0)) <= LIGHT_SPANS
     heavy_docs = docs.filter(~light)
+    heavy = [r["doc_id"] for r in heavy_docs.select("doc_id").collect()]
+    heavy_ids = sorted(set(heavy) - {None})
     light_media = heavy_media = None
     if media is not None and cfg.strategies() != (MODE_STREAM,):
-        heavy_ids = F.broadcast(heavy_docs.select("doc_id"))
-        heavy_media = media.join(heavy_ids, "doc_id", "left_semi")
-        light_media = media.join(heavy_ids, "doc_id", "left_anti")
+        is_heavy = F.col("doc_id").isin(heavy_ids)
+        heavy_media = media.filter(is_heavy)
+        light_media = media.filter(~is_heavy)
         pages = parse_pages(cfg.pages)
         if not is_all(pages):
             # unselected pages are never shuffled
@@ -669,22 +712,30 @@ def extract(docs: DataFrame, media: DataFrame | None = None,
 
     light_docs = docs.filter(light).repartition(num_partitions, "doc_id")
     if light_media is None:
-        light_docs = light_docs.withColumn("media",
-                                           F.lit(None).cast(_OWN_MEDIA))
+        light_docs = light_docs.select(
+            "doc_id", "spans", F.lit(None).cast("string").alias("media_ref"),
+            F.lit(None).cast("int").alias("page"),
+            F.lit(None).cast("binary").alias("payload"))
     else:
-        own = (light_media.repartition(num_partitions, "doc_id")
-               .groupBy("doc_id")
-               .agg(F.collect_list(F.struct("media_ref", "page", "payload"))
-                    .alias("media")))
+        own = (light_media.select("doc_id", "media_ref", "page", "payload")
+               .repartition(num_partitions, "doc_id"))
         # both sides hashed on doc_id alone: the join adds no exchange.
         # SHUFFLE_MERGE keeps AQE from turning a small media side into a
         # broadcast, which would move payload bytes a second time
         light_docs = light_docs.join(own.hint("SHUFFLE_MERGE"), "doc_id",
                                      "left")
-    light_out = light_docs.mapInPandas(
-        _make_extract_documents(cfg, media is not None),
-        schema=COMBINED_SCHEMA)
+    # the sort-merge join's output is already sorted (the planner drops
+    # this sort then); the media-less plan sorts here
+    light_out = (light_docs.sortWithinPartitions("doc_id")
+                 .mapInPandas(_make_extract_documents(cfg, media is not None),
+                              schema=COMBINED_SCHEMA))
 
+    # A union numbers its second child's tasks from num_partitions, so
+    # the hash partition is computed here rather than read from the task.
+    partition_id = F.pmod(F.hash("doc_id"),
+                          F.lit(num_partitions)).cast("int")
+    if not heavy:
+        return light_out.withColumn("partition_id", partition_id)
     work = build_page_work(heavy_docs, heavy_media, cfg, num_partitions)
     page_results = work.mapInPandas(_make_extract_pages(cfg),
                                     schema=PAGE_RESULT_SCHEMA)
@@ -699,13 +750,9 @@ def extract(docs: DataFrame, media: DataFrame | None = None,
     # Completeness holds by construction: explode_outer + presence
     # sentinels mean every input document is assembled exactly once
     # (BaseParser.finalizeResults "no tables" parity, and resume
-    # termination) — no side anti-join plan, no extra scan of docs.
-    # A union numbers its second child's tasks from num_partitions, so
-    # the hash partition is computed here rather than read from the task.
+    # termination) — no side anti-join plan.
     return (light_out.unionByName(heavy_out)
-            .withColumn("partition_id",
-                        F.pmod(F.hash("doc_id"),
-                               F.lit(num_partitions)).cast("int")))
+            .withColumn("partition_id", partition_id))
 
 
 def with_spans(combined: DataFrame) -> DataFrame:

@@ -195,8 +195,8 @@ def test_extract_plan_is_numbered_under_coalescing(spark, corpus, mode,
 
     Over a corpus with light and heavy documents: the light route's
     MapInPandas reads only numbered exchanges and broadcasts, no exchange
-    sits between it and the output, and payload bytes cross exactly one
-    exchange on each route."""
+    sits between it and the output, payload bytes cross exactly one
+    exchange on each route and splitting the media reads no documents."""
     docs, media = _mixed_corpus(spark, corpus)
     keys = ("spark.sql.adaptive.coalescePartitions.enabled",
             "spark.sql.adaptive.coalescePartitions.parallelismFirst")
@@ -206,11 +206,14 @@ def test_extract_plan_is_numbered_under_coalescing(spark, corpus, mode,
     try:
         combined = extract(docs, media, ExtractConfig(mode=mode),
                            num_partitions=num_partitions)
-        assert combined.count() == docs.count()
+        # collect() runs combined's own plan; count() would run a
+        # separate aggregate and leave this one at AQE's initial plan
+        assert len(combined.collect()) == docs.count()
     finally:
         for k, v in zip(keys, prev):
             spark.conf.set(k, v)
     plan = combined._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan, plan
     final = plan.split("== Initial Plan ==")[0]  # AQE: the plan that ran
     assert "AQEShuffleRead coalesced" not in final, final
     exchanges = [ln for ln in final.splitlines()
@@ -231,6 +234,11 @@ def test_extract_plan_is_numbered_under_coalescing(spark, corpus, mode,
     if mode == "hybrid":    # stream-only jobs never read payloads
         assert len(_payload_exchanges(light)) == 1, final
         assert len(_payload_exchanges(heavy)) == 1, final
+    # the media split reads no documents: no documents scan sits under a
+    # broadcast
+    assert not [n for n, path in _nodes(tree)
+                if n[0] == "InMemoryTableScan" and "spans" in n[2]
+                and "BroadcastExchange" in path], final
 
 
 def test_resume_checkpoint(spark, corpus, tmp_path):
@@ -772,3 +780,33 @@ def test_partition_id_is_the_doc_id_hash_partition(spark):
     got = {r["doc_id"]: r["partition_id"] for r in
            extract(docs, None, ExtractConfig(), num_partitions=n).collect()}
     assert got == want
+
+
+def test_forget_zip_importers_keeps_zip_imports_working(tmp_path,
+                                                        monkeypatch):
+    """The batch functions' first step drops every cached zipimporter
+    (PySpark's per-task ``importlib.invalidate_caches()`` would re-read
+    each one's archive directory); a module in a zip on ``sys.path``
+    still imports afterwards."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+    from extractpdf4j_spark.pipeline import _forget_zip_importers
+    archive = tmp_path / "lib.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zipped_pkg/__init__.py", "")
+        z.writestr("zipped_pkg/mod.py", "VALUE = 7\n")
+    monkeypatch.syspath_prepend(str(archive))
+    for name in ("zipped_pkg", "zipped_pkg.mod"):
+        monkeypatch.delitem(sys.modules, name, raising=False)
+    assert importlib.import_module("zipped_pkg").__name__ == "zipped_pkg"
+    assert any(isinstance(f, zipimport.zipimporter)
+               for f in sys.path_importer_cache.values())
+    _forget_zip_importers()
+    assert not any(isinstance(f, zipimport.zipimporter)
+                   for f in sys.path_importer_cache.values())
+    importlib.invalidate_caches()
+    assert importlib.import_module("zipped_pkg.mod").VALUE == 7
+    for name in ("zipped_pkg", "zipped_pkg.mod"):
+        sys.modules.pop(name, None)
