@@ -48,9 +48,6 @@ def make_spark(cores: int, shuffle_partitions: int | None = None):
             .appName(f"extractpdf4j-bench-{cores}")
             .config("spark.sql.shuffle.partitions", str(sp))
             .config("spark.sql.adaptive.enabled", "true")
-            # size-based coalescing collapses small-bytes/heavy-CPU page
-            # rows onto few cores — keep AQE (skew joins) but not that
-            .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
             # 64-row batches measured best at local[32]: larger batches
             # (512) raised T32 ~15% — coarse batches pipeline worse across

@@ -8846,24 +8846,22 @@ GATES = (
 def _with_exec_prefs(fn):
     """Set the gate's exec prefs on the session, then build.
 
-    Extraction gates (``q_extract_*``, ``q_flagship_*``) run with AQE
-    partition coalescing off and 64-row Arrow batches: their stage-1 rows
-    are small-bytes/heavy-CPU, so size-based coalescing of a hashed
-    payload join packs them onto few cores (measured 3x regression), and
-    64 rows is the raster-kernel batch. Every other gate is
-    data-proportional operator work, where coalescing and 4096-row
-    batches cut scheduling and per-batch overhead (sf0.1 local[32] A/B,
-    e.g. q_bm25 6.53→1.77 s, q_ann_scale 2.62→0.93 s). parallelismFirst
-    off keeps coalescing size-based. Every gate sets all three confs, so
-    none inherits another's; every caller executes the frame at once."""
+    Every gate runs with AQE partition coalescing on, size-based
+    (parallelismFirst off): for data-proportional operator work it cuts
+    scheduling and per-batch overhead (sf0.1 local[32] A/B, e.g. q_bm25
+    6.53→1.77 s, q_ann_scale 2.62→0.93 s), and ``pipeline.extract``
+    feeds its Python stages only from exchanges AQE does not coalesce.
+    Extraction gates (``q_extract_*``, ``q_flagship_*``) take 64-row
+    Arrow batches, the raster-kernel batch; every other gate 4096-row
+    ones. Every gate sets all three confs, so none inherits another's;
+    every caller executes the frame at once."""
     extraction = fn.__name__.startswith(("q_extract_", "q_flagship_"))
-    enabled = "false" if extraction else "true"
     batch = "64" if extraction else "4096"
 
     @functools.wraps(fn)
     def wrapped(spark: SparkSession, sf: str) -> DataFrame:
         spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.enabled", enabled)
+            "spark.sql.adaptive.coalescePartitions.enabled", "true")
         spark.conf.set(
             "spark.sql.adaptive.coalescePartitions.parallelismFirst",
             "false")

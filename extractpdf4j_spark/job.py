@@ -87,7 +87,6 @@ def main(argv: list[str] | None = None) -> int:
     spark = (SparkSession.builder
              .appName("extractpdf4j-spark")
              .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")
              .config("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
              .getOrCreate())

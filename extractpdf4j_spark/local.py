@@ -3,7 +3,7 @@
 The reference's library quickstart is one PDF in, tables out
 (``new HybridParser(path).pages("all").parse()``, README.md:82-95). Here
 one interleaved document becomes page-work rows by the job's own
-page-work builder (``pipeline._make_page_work``, the light route's) and
+page-work builder (``pipeline._make_page_work``, both routes') and
 runs through the Spark pipeline's stage-1 and stage-2 batch functions
 in-process, so it gets the same status, strategy and spans as in a job —
 for debugging, notebooks and the one-document HTTP call

@@ -206,9 +206,11 @@ def _encode_pages(pages: list[PageDecode], ref_prefix: str):
 
 
 def _make_decode_pdfs(backend_factory):
+    from .pipeline import _forget_zip_importers
     cols = [f.name for f in DECODED_SCHEMA.fields]
 
     def decode_pdfs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _forget_zip_importers()
         backend = backend_factory()
         for pdf in batches:
             rows: list[tuple] = []

@@ -1,6 +1,7 @@
 """The Spark extraction pipeline: interleaved documents → extracted spans.
 
-Dataflow (all DataFrame ops; the only Python is Arrow-batched kernels).
+Dataflow (DataFrame ops; the Python runs in Arrow-batched mapInPandas
+stages).
 Each document takes one of two routes, by a native per-document key,
 ``coalesce(size(spans), 0) <= LIGHT_SPANS``:
 
@@ -18,19 +19,21 @@ Each document takes one of two routes, by a native per-document key,
         |                                 selection, span serialization
         |
     HEAVY (more spans)
-        |  explode spans (native, codegen)
-        |  text spans → (doc_id, page, glyph_blob)
-        |  media spans → (doc_id, page, media_ref), pages resolved against
-        |                the document's own media rows
-        +── full-outer join on (doc_id, page)
+        repartition(doc_id) ─── left join ── own media rows' (media_ref,
+        |   on doc_id (co-partitioned)       page) set per doc_id,
+        |                                    repartition(doc_id) (no payload)
+        mapInPandas(page_work)              ← one row per document →
+        |                                     page-work rows (_make_page_work),
+        |                                     media_ref in the payload slot
         |   [page-range filter — the reference's only pruning,
         |    PageRange.java:15 / BaseParser.java:126-139 — pushed to the
-        |    scan as a native filter]
-        |   payload attached on (doc_id, media_ref)
-        |
-        repartition(hash(doc_id, page))     ← page-level units kill doc-size
-        |                                     skew (a 500-page scan becomes
+        |    media scan as a native filter]
+        repartition(hash(doc_id, page,      ← page-level units kill doc-size
+        |            media_ref))              skew (a 500-page scan becomes
         |                                     500 independent tasks' worth)
+        |   payload attached on (doc_id, page, media_ref): left join,
+        |   broadcast when small, else the payload side takes the
+        |   numbered side's partition count
         mapInPandas(extract_pages)          ← stage 1: per-page strategy
         |                                     fan-out (kernels.page_extractor),
         |                                     vectorized numpy kernels
@@ -52,8 +55,9 @@ so its pages are never regrouped: its tables go straight from the kernels
 into its output spans. A heavy document's pages are spread over the
 cluster (stage 1) and regrouped per document once (stage 2); only those
 pay a second exchange, a sort and a second Arrow crossing of every page
-result. Either way a media span resolves only against media rows with
-the document's own ``doc_id``.
+result. Both routes build a document's page work with the same function,
+``_make_page_work``, and either way a media span resolves only against
+media rows with the document's own ``doc_id``.
 """
 
 from __future__ import annotations
@@ -143,7 +147,7 @@ LIGHT_SPANS = 6
 
 
 # ---------------------------------------------------------------------------
-# Stage 0: native span explode → page work units
+# Stage 0: documents → page work units
 # ---------------------------------------------------------------------------
 
 # Page sentinels routed through stage 1 (never kernel-executed):
@@ -153,7 +157,7 @@ PAGE_FILTERED = -3      # media page outside the page-range selection /
 #                         media content ignored by a stream-only job
 PAGE_UNKNOWN_KIND = -4  # span kind neither 'text' nor 'media' (schema drift)
 
-# build_page_work's header rule, '^p=(\d+)' then try_cast to int, in Python
+# a text span's page header, 'p=<page>' at its start
 _PAGE_HEADER = re.compile(r"p=([0-9]+)")
 
 
@@ -166,157 +170,103 @@ def _num_partitions(df: DataFrame, num_partitions: int | None) -> int:
 def build_page_work(docs: DataFrame, media: DataFrame | None,
                     cfg: ExtractConfig,
                     num_partitions: int | None = None) -> DataFrame:
-    """Explode interleaved spans into per-page work rows
-    (doc_id, page, glyph_blob, payload) using only native ops so Catalyst
-    prunes/pushes everything up to the kernel boundary. ``extract`` runs
-    it on the heavy documents only; :func:`_make_page_work` is the same
-    rules for one document in Python (the light route and ``local``).
+    """Per-page work rows (doc_id, page, glyph_blob, payload) for stage 1,
+    by :func:`_make_page_work`'s rules, the same the light route and
+    ``local`` use. ``extract`` runs it on the heavy documents only.
 
-    Completeness by construction: ``explode_outer`` keeps empty-span
-    documents (page NO_CONTENT sentinel), and the page-range filter
-    BLANKS unselected content instead of dropping rows — every input
-    document reaches stage 2 exactly once with no side anti-join plan.
-
-    Ownership: a media span resolves (page and payload) only against
-    media rows with the document's own ``doc_id``; any other row with the
-    same ``media_ref`` is invisible to it.
-
-    Shuffle budget (the 100 TB concern — payload bytes dominate): page
-    resolution joins a payload-PRUNED projection of the media table, the
-    (doc_id, page) outer join pre-repartitions both sides so the explicit
-    ``num_partitions`` spread costs no extra exchange, and raster
-    payloads attach LAST via one (doc_id, media_ref) equi-join — payload
-    bytes cross exactly ONE exchange end-to-end (they used to cross
-    three). Rows without a media_ref join on a salted ``_jref`` key that
-    matches nothing, so the null-ref key never concentrates text-heavy
-    documents on one task.
+    The documents are hashed by ``doc_id`` and joined, co-partitioned, to
+    a set of their own media rows' ``(media_ref, page)`` (no payload), so
+    each document arrives as one row; one ``mapInPandas`` turns it into
+    work rows with the media_ref in the payload slot. The work rows are
+    hashed by ``(doc_id, page, media_ref)``, which spreads a big
+    document's pages over the cluster, and the payloads attach last by a
+    left join on those three keys: payload bytes cross exactly ONE
+    exchange (a broadcast when small; otherwise the planner shuffles the
+    payload side to the work rows' partition count, an exchange AQE does
+    not coalesce because its sibling is numbered).
 
     ``num_partitions=None`` means the session's
-    ``spark.sql.shuffle.partitions``, read at build time: the page
-    exchanges are always numbered (REPARTITION_BY_NUM), which AQE never
-    coalesces, so stage 1 keeps its spread whatever the session's
-    coalescing setting.
-    """
+    ``spark.sql.shuffle.partitions``, read at build time."""
     num_partitions = _num_partitions(docs, num_partitions)
-    pages = parse_pages(cfg.pages)
-    filtered = not is_all(pages)
-
-    spans = docs.select("doc_id", F.explode_outer("spans").alias("s"))
-
-    # try_cast: a malformed span header becomes the MALFORMED sentinel →
-    # an 'error' status row, never a job-killing ANSI cast exception.
-    # Empty-span documents surface as a NULL span → NO_CONTENT; a span
-    # kind that is neither 'text' nor 'media', NULL included, gets a
-    # presence sentinel so the document still reaches stage 2.
-    is_text = F.col("s.kind").eqNullSafe("text")
-    is_media = F.col("s.kind").eqNullSafe("media")
-    page_col = F.when(
-        F.col("s").isNull(), F.lit(PAGE_NO_CONTENT)
-    ).when(
-        ~is_text, F.lit(PAGE_UNKNOWN_KIND)
-    ).otherwise(
-        F.coalesce(F.regexp_extract(F.col("s.text"), r"^p=(\d+)", 1)
-                   .try_cast("int"), F.lit(PAGE_MALFORMED)))
-    blob_col = F.when(
-        is_text & (F.instr(F.col("s.text"), "\n") > 0),
-        F.expr("substring(s.text, instr(s.text, '\\n')+1, length(s.text))")
-    ).otherwise(F.lit(""))
-    if filtered:
-        # reference pruning (PageRange, op 3): unselected pages keep their
-        # presence row but ship no glyph bytes through the shuffle
-        blob_col = F.when(page_col.isin(pages), blob_col)
-
-    text_pages = (spans.filter(~is_media)
-                  .select("doc_id", page_col.alias("page"),
-                          blob_col.alias("glyph_blob")))
-
-    stream_only = cfg.strategies() == (MODE_STREAM,)
-    if stream_only or media is None:
-        # stream-only jobs never touch rasters: skip the payload join
-        # entirely (Catalyst can't know the UDF ignores the column).
-        # Without a media table every media span is unresolved, and a
-        # page join on that constant page would fold into a join on
-        # doc_id alone, putting a document's pages on one task. Media
-        # spans still emit a presence sentinel (FILTERED, resp. MALFORMED
-        # → 'error') so an all-media document reaches stage 2 (and the
-        # resume checkpoint) instead of silently vanishing from the output.
-        media_presence = (spans.filter(is_media)
-                          .select("doc_id",
-                                  F.lit(PAGE_FILTERED if stream_only
-                                        else PAGE_MALFORMED).alias("page"),
-                                  F.lit("").alias("glyph_blob")))
-        return (text_pages.unionByName(media_presence)
-                .withColumn("payload", F.lit(None).cast("binary"))
-                .repartition(num_partitions, F.col("doc_id"), F.col("page")))
-
-    # page resolution against a payload-pruned projection — the scan
-    # reads only (doc_id, media_ref, page), never raster bytes
-    media_refs = spans.filter(is_media).select(
-        "doc_id", F.col("s.media_ref").alias("media_ref"))
-    m_meta = media.select("doc_id", "media_ref", "page")
-    if filtered:
-        # partition/predicate pruning on the media table: unselected
-        # pages are never read or shuffled (meta AND payload scans)
-        m_meta = m_meta.filter(F.col("page").isin(pages))
-    media_pages = (media_refs.join(m_meta, ["doc_id", "media_ref"], "left")
-                   .select("doc_id",
-                           # unresolved ref: 'error' under pages=all,
-                           # indistinguishable from pruned otherwise
-                           F.coalesce(F.col("page"),
-                                      F.lit(PAGE_FILTERED if filtered
-                                            else PAGE_MALFORMED))
-                           .alias("page"),
-                           "media_ref"))
-
-    # pre-repartition BOTH join inputs to the target partitioning: the
-    # outer join then reuses it (no ENSURE_REQUIREMENTS exchange) and no
-    # separate repartition of the joined rows is needed — glyph blobs
-    # cross one exchange instead of two
-    tp = text_pages.repartition(num_partitions, F.col("doc_id"),
-                                F.col("page"))
-    mp = media_pages.repartition(num_partitions, F.col("doc_id"),
-                                 F.col("page"))
-    # SHUFFLE_HASH: a full-outer sort-merge pays two whole-partition sorts
-    # (plus their codegen) for metadata-sized rows; the hash variant
-    # builds the media side per partition instead (bounded: page-level
-    # keys, metadata-only columns, partition count scales with the
-    # corpus). Measured 0.91 -> 0.61 s steady / 2.64 -> 0.75 s first-call
-    # on the sf0.1 page-work plan; output rows identical.
-    work = tp.join(mp.hint("SHUFFLE_HASH"), ["doc_id", "page"],
-                   "full_outer")
-
-    if filtered:
-        media = media.filter(F.col("page").isin(pages))
-    m_pay = media.select("doc_id", F.col("media_ref").alias("_jref"),
-                         "payload")
-    # Null-ref rows (text-only pages) would all hash to ONE partition in
-    # the payload join — salt them with a '\x00'-prefixed bucket (real
-    # refs never start with a NUL byte) so they spread while matching
-    # nothing; the left join then leaves payload NULL for them.
-    salt = F.concat(F.lit("\x00"),
-                    F.pmod(F.hash("doc_id", "page"), F.lit(64)).cast("string"))
-    work = (work.withColumn("_jref", F.coalesce(F.col("media_ref"), salt))
-            .drop("media_ref"))
-    return (work.join(m_pay, ["doc_id", "_jref"], "left")
+    docs = docs.select("doc_id", "spans").repartition(num_partitions,
+                                                      "doc_id")
+    if cfg.strategies() == (MODE_STREAM,):
+        media = None    # stream-only jobs never read rasters
+    if media is not None:
+        pages = parse_pages(cfg.pages)
+        if not is_all(pages):
+            # unselected pages are never read or shuffled
+            media = media.filter(F.col("page").isin(pages))
+        # a set: duplicate media rows each get a work row by the payload
+        # join, as on the light route
+        own = (media.select("doc_id", "media_ref", "page")
+               .repartition(num_partitions, "doc_id")
+               .groupBy("doc_id")
+               .agg(F.collect_set(F.struct("media_ref", "page"))
+                    .alias("own")))
+        docs = docs.join(own, "doc_id", "left")
+    work = (docs.mapInPandas(_make_ref_page_work(cfg, media is not None),
+                             schema="doc_id string, page int, "
+                                    "glyph_blob string, media_ref string")
+            .repartition(num_partitions, "doc_id", "page", "media_ref"))
+    if media is None:
+        return work.select("doc_id", "page", "glyph_blob",
+                           F.lit(None).cast("binary").alias("payload"))
+    return (work.join(media.select("doc_id", "page", "media_ref", "payload"),
+                      ["doc_id", "page", "media_ref"], "left")
             .select("doc_id", "page", "glyph_blob", "payload"))
+
+
+def _make_ref_page_work(cfg: ExtractConfig, has_media: bool):
+    """``build_page_work``'s batch function: rows ``(doc_id, spans[,
+    own])``, one per document, ``own`` the document's media rows'
+    ``(media_ref, page)`` structs (NULL without any); out ``(doc_id,
+    page, glyph_blob, media_ref)``, the media_ref in the payload slot.
+    ``has_media=False``: the job has no media table (or never reads
+    it)."""
+    page_work_rows = _make_page_work(cfg)
+    cols = ["doc_id", "page", "glyph_blob", "media_ref"]
+
+    def page_work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _forget_zip_importers()
+        for pdf in batches:
+            owns = pdf["own"] if has_media else [None] * len(pdf)
+            rows = []
+            for doc_id, spans, own in zip(pdf["doc_id"], pdf["spans"], owns):
+                media = {} if has_media else None
+                for m in own if own is not None else ():
+                    media.setdefault(m["media_ref"], []).append(
+                        (m["page"], m["media_ref"]))
+                rows.extend((doc_id, *r) for r in page_work_rows(spans, media))
+            yield pd.DataFrame(rows, columns=cols)
+
+    return page_work
 
 
 def _make_page_work(cfg: ExtractConfig):
     """``page_work_rows(spans, media)``: one document's stage-1 work rows
-    ``(page, glyph_blob, payload)`` by :func:`build_page_work`'s rules.
+    ``(page, glyph_blob, payload)``.
 
     ``media`` maps a media_ref to the document's OWN media rows for it, as
     ``(page, payload)`` pairs (the job reads the page from the row;
     ``local`` reads it from the payload header); ``None`` means the job
     has no media table. A stream-only job never reads it.
+
+    Rules: a text span's page is its ``p=<page>`` header (MALFORMED when
+    it has none), its glyph blob the text after the header's line (None
+    on a page outside the selection). A media span gives one page per own
+    media row on a selected page, with that row's payload; one without
+    any gets the unresolved page ('error' under pages=all, FILTERED
+    otherwise). Text and media rows of the same page pair up, as a
+    full-outer join on the page would. Empty spans, unknown kinds and
+    media spans of a job without media (or a stream-only job) give one
+    presence row each, so every document reaches stage 2.
     Row order: text rows in span order, each joined to the media rows of
     its page, then the media rows of pages without text, then presence
     rows."""
     selected = parse_pages(cfg.pages)
     filtered = not is_all(selected)
     stream_only = cfg.strategies() == (MODE_STREAM,)
-    # an unresolved ref is 'error' under pages=all, indistinguishable from
-    # pruned otherwise
     unresolved = PAGE_FILTERED if filtered else PAGE_MALFORMED
 
     def page_work_rows(spans, media) -> list[tuple]:
@@ -331,13 +281,9 @@ def _make_page_work(cfg: ExtractConfig):
                 ref = s["media_ref"]
                 own = [(p, pay) for p, pay in
                        (media.get(ref, ()) if ref is not None else ())
-                       if not filtered or p in selected]
-                # every resolved page of the span gets every payload of its
-                # ref (the page join, then the payload join)
-                pays = [pay for _, pay in own] or [None]
-                for p, _ in own or [(None, None)]:
-                    media_pages.setdefault(
-                        unresolved if p is None else p, []).append(pays)
+                       if p is not None and (not filtered or p in selected)]
+                for p, pay in own or [(unresolved, None)]:
+                    media_pages.setdefault(p, []).append(pay)
                 continue
             blob, page = "", (PAGE_NO_CONTENT if s is None
                               else PAGE_UNKNOWN_KIND)
@@ -348,13 +294,11 @@ def _make_page_work(cfg: ExtractConfig):
                 blob = (s["text"] or "").partition("\n")[2]
             text.append((page, None if filtered and page not in selected
                          else blob))
-        # full outer join on page, then the payload attach
         rows = [(page, blob, pay) for page, blob in text
-                for pays in media_pages.get(page, [[None]]) for pay in pays]
+                for pay in media_pages.get(page, [None])]
         text_pages = {page for page, _ in text}
-        rows += [(page, None, pay) for page, per_span in media_pages.items()
-                 if page not in text_pages
-                 for pays in per_span for pay in pays]
+        rows += [(page, None, pay) for page, pays in media_pages.items()
+                 if page not in text_pages for pay in pays]
         return rows + presence
 
     return page_work_rows
@@ -688,12 +632,13 @@ def extract(docs: DataFrame, media: DataFrame | None = None,
     holds all their ids (a few tens of bytes each) and ships them in the
     plan.
 
-    Every exchange is numbered (REPARTITION_BY_NUM), so AQE's SIZE-based
+    Every exchange that feeds a Python stage is numbered
+    (REPARTITION_BY_NUM) or joined to a numbered one, so AQE's SIZE-based
     coalescing never collapses these small-bytes / heavy-CPU rows onto a
-    few cores (measured 3x regression). Only a heavy payload join too big
-    to broadcast adds an exchange that session coalescing may still
-    shrink. ``partition_id`` is the stage-2 hash partition of
-    ``doc_id``, ``pmod(hash(doc_id), num_partitions)``, on both routes."""
+    few cores (measured 3x regression), whatever the session's
+    coalescing setting. ``partition_id`` is the stage-2 hash partition
+    of ``doc_id``, ``pmod(hash(doc_id), num_partitions)``, on both
+    routes."""
     num_partitions = _num_partitions(docs, num_partitions)
     docs = docs.select("doc_id", "spans")
     light = F.coalesce(F.size("spans"), F.lit(0)) <= LIGHT_SPANS
@@ -747,8 +692,8 @@ def extract(docs: DataFrame, media: DataFrame | None = None,
                  .sortWithinPartitions("doc_id")
                  .mapInPandas(_make_assemble_partition(cfg),
                               schema=COMBINED_SCHEMA))
-    # Completeness holds by construction: explode_outer + presence
-    # sentinels mean every input document is assembled exactly once
+    # Completeness holds by construction: every document gives at least
+    # one work row (presence sentinels) and is assembled exactly once
     # (BaseParser.finalizeResults "no tables" parity, and resume
     # termination) — no side anti-join plan.
     return (light_out.unionByName(heavy_out)

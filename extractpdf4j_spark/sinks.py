@@ -121,11 +121,12 @@ DEBUG_SCHEMA = StructType([
 
 def _make_debug_pages(cfg):
     from .kernels import page_extractor
-    from .pipeline import _decode_page
+    from .pipeline import _decode_page, _forget_zip_importers
 
     cols = [f.name for f in DEBUG_SCHEMA.fields]
 
     def debug_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _forget_zip_importers()
         extract_page = page_extractor(cfg)
         for pdf in batches:
             rows: list[tuple] = []

@@ -122,8 +122,6 @@ def main() -> int:
 
     spark = (SparkSession.builder.master("local[4]")
              .config("spark.sql.shuffle.partitions", "4")
-             .config("spark.sql.adaptive.coalescePartitions.enabled",
-                     "false")
              .config("spark.ui.enabled", "false").getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
 

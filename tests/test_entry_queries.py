@@ -70,17 +70,17 @@ def test_registry_contract():
 
 
 def test_exec_prefs_follow_gate_name():
-    """Every gate sets the same three session confs, picked by its name:
+    """Every gate sets the same three session confs: size-based AQE
+    partition coalescing on, and an Arrow batch size picked by its name:
     the 12 builders that reach ``pipeline.extract`` (``q_extract_*``,
-    ``q_flagship_*``) run with coalescing off and 64-row Arrow batches,
-    every other gate with coalescing on and 4096-row batches. No Spark:
-    a stub per registered name is wrapped and called on a fake session
-    that records ``conf.set``."""
+    ``q_flagship_*``) take 64-row batches, every other gate 4096-row
+    ones. No Spark: a stub per registered name is wrapped and called on a
+    fake session that records ``conf.set``."""
     from types import SimpleNamespace
 
     from extractpdf4j_spark.entry_queries import QUERIES, _with_exec_prefs
 
-    prefs = {}
+    batches = {}
     for name in QUERIES:
         confs = {}
         session = SimpleNamespace(conf=SimpleNamespace(
@@ -93,15 +93,16 @@ def test_exec_prefs_follow_gate_name():
         assert _with_exec_prefs(stub)(session, "sf") == (session, "sf")
         assert confs.pop(
             "spark.sql.adaptive.coalescePartitions.parallelismFirst") == "false"
-        prefs[name] = (
-            confs.pop("spark.sql.adaptive.coalescePartitions.enabled"),
-            confs.pop("spark.sql.execution.arrow.maxRecordsPerBatch"))
+        assert confs.pop(
+            "spark.sql.adaptive.coalescePartitions.enabled") == "true"
+        batches[name] = confs.pop(
+            "spark.sql.execution.arrow.maxRecordsPerBatch")
         assert not confs, f"{name}: unexpected confs {confs}"
-    extraction = {n for n, p in prefs.items() if p == ("false", "64")}
+    extraction = {n for n, b in batches.items() if b == "64"}
     assert extraction == {n for n in QUERIES
                           if n.startswith(("q_extract_", "q_flagship_"))}
     assert len(extraction) == 12
-    assert sum(p == ("true", "4096") for p in prefs.values()) == 132
+    assert sum(b == "4096" for b in batches.values()) == 132
 
 
 @pytest.mark.parametrize("name,fn,sql", _oracle_pairs(),

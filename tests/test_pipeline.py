@@ -2,6 +2,7 @@
 checkpoint/resume, and span-sequence equality against the hybrid oracle."""
 
 import json
+from typing import NamedTuple
 
 import pytest
 
@@ -116,25 +117,25 @@ def test_min_score_gate(spark, corpus):
     assert json.loads(row["spans_json"]) == []
 
 
-def test_page_work_plan_joins_pages_by_shuffle_hash(spark, corpus):
-    """The (doc_id, page) full-outer page join runs as the hinted
-    ShuffledHashJoin, and the executed plan holds no sort-merge join
-    (the sorts of metadata rows it replaced were the cost)."""
-    from extractpdf4j_spark.pipeline import build_page_work
-    docs, media, _, _ = corpus
-    work = build_page_work(docs, media, ExtractConfig(), num_partitions=4)
-    work.collect()
-    plan = work._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]  # AQE: the plan that ran
-    assert any("ShuffledHashJoin" in ln and "FullOuter" in ln
-               for ln in final.splitlines()), final
-    assert "SortMergeJoin" not in final, final
+class _Node(NamedTuple):
+    name: str
+    desc: str
+    cols: list      # output column names
+    parts: int      # output partition count
+    rows: int | None    # numOutputRows (shuffleRecordsWritten), if metered
+    kids: list
 
 
 def _executed_tree(df):
-    """The plan that ran (AQE's final plan) as nested ``(name, description,
-    output columns, children)``, with query stages and reused exchanges
-    opened."""
+    """The plan that ran (AQE's final plan) as nested :class:`_Node`, with
+    query stages and reused exchanges opened."""
+    def rows(node):
+        for metric in ("numOutputRows", "shuffleRecordsWritten"):
+            m = node.metrics().get(metric)
+            if m.isDefined():
+                return m.get().value()
+        return None
+
     def walk(node):
         name = node.nodeName()
         if "QueryStage" in name:
@@ -142,25 +143,34 @@ def _executed_tree(df):
         if name == "ReusedExchange":
             return walk(node.child())
         kids, out = node.children(), node.output()
-        return (name, node.simpleString(100),
-                [out.apply(i).name() for i in range(out.size())],
-                [walk(kids.apply(i)) for i in range(kids.size())])
+        return _Node(name, node.simpleString(100),
+                     [out.apply(i).name() for i in range(out.size())],
+                     node.outputPartitioning().numPartitions(), rows(node),
+                     [walk(kids.apply(i)) for i in range(kids.size())])
     return walk(df._jdf.queryExecution().executedPlan().executedPlan())
 
 
 def _nodes(tree, path=()):
     """(node, names of its ancestors) of every node, root first."""
     yield tree, path
-    for child in tree[3]:
-        yield from _nodes(child, path + (tree[0],))
+    for child in tree.kids:
+        yield from _nodes(child, path + (tree.name,))
 
 
 def _exchanges(tree):
-    return [n for n, _ in _nodes(tree) if "Exchange" in n[0]]
+    return [n for n, _ in _nodes(tree) if "Exchange" in n.name]
 
 
 def _payload_exchanges(tree):
-    return [n for n in _exchanges(tree) if "payload" in n[2]]
+    return [n for n in _exchanges(tree) if "payload" in n.cols]
+
+
+def _map_in_pandas(tree, fn):
+    """(node, ancestors) of the MapInPandas running the batch function
+    named ``fn``."""
+    (found,) = [(n, path) for n, path in _nodes(tree)
+                if n.name == "MapInPandas" and f" {fn}(" in n.desc]
+    return found
 
 
 def _mixed_corpus(spark, corpus):
@@ -185,59 +195,84 @@ def _mixed_corpus(spark, corpus):
 
 
 @pytest.mark.parametrize("mode", ["hybrid", "stream"])
-@pytest.mark.parametrize("num_partitions", [None, 4])
+# (num_partitions, spark.sql.autoBroadcastJoinThreshold); None keeps the
+# session's threshold, -1 forces the heavy payload join to shuffle
+@pytest.mark.parametrize("num_partitions,broadcast", [
+    pytest.param(None, None, id="None"),
+    pytest.param(4, None, id="4"),
+    pytest.param(None, "-1", id="None-nobroadcast"),
+    pytest.param(4, "-1", id="4-nobroadcast")])
 def test_extract_plan_is_numbered_under_coalescing(spark, corpus, mode,
-                                                   num_partitions):
-    """With AQE coalescing on, extract() still runs every shuffle as a
-    numbered repartition and nothing is coalesced: size-based coalescing
-    would pack the small-bytes, heavy-CPU page rows onto few tasks.
-    ``num_partitions=None`` takes the session's shuffle partitions.
+                                                   num_partitions, broadcast):
+    """With AQE coalescing on, extract() runs every shuffle that feeds a
+    Python stage with ``num_partitions`` partitions and nothing is
+    coalesced: size-based coalescing would pack the small-bytes,
+    heavy-CPU page rows onto few tasks. ``num_partitions=None`` takes the
+    session's shuffle partitions.
 
-    Over a corpus with light and heavy documents: the light route's
-    MapInPandas reads only numbered exchanges and broadcasts, no exchange
-    sits between it and the output, payload bytes cross exactly one
-    exchange on each route and splitting the media reads no documents."""
+    Over a corpus with light and heavy documents: every exchange is a
+    numbered repartition or a broadcast, except the payload side of the
+    heavy payload join when it is too big to broadcast, which takes the
+    numbered side's partition count. Stage 1 reads ``num_partitions``
+    partitions; the light route's MapInPandas reads only numbered
+    exchanges and broadcasts and no exchange sits between it and the
+    output; the heavy page-work MapInPandas reads one row per heavy
+    document and no payload; payload bytes cross exactly one exchange on
+    each route, and splitting the media reads no documents."""
     docs, media = _mixed_corpus(spark, corpus)
-    keys = ("spark.sql.adaptive.coalescePartitions.enabled",
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst")
-    prev = [spark.conf.get(k) for k in keys]
-    spark.conf.set(keys[0], "true")
-    spark.conf.set(keys[1], "false")
+    confs = {"spark.sql.adaptive.coalescePartitions.enabled": "true",
+             "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false"}
+    if broadcast is not None:
+        confs["spark.sql.autoBroadcastJoinThreshold"] = broadcast
+    prev = {k: spark.conf.get(k) for k in confs}
+    n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
         combined = extract(docs, media, ExtractConfig(mode=mode),
                            num_partitions=num_partitions)
         # collect() runs combined's own plan; count() would run a
         # separate aggregate and leave this one at AQE's initial plan
         assert len(combined.collect()) == docs.count()
     finally:
-        for k, v in zip(keys, prev):
+        for k, v in prev.items():
             spark.conf.set(k, v)
     plan = combined._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in plan, plan
     final = plan.split("== Initial Plan ==")[0]  # AQE: the plan that ran
     assert "AQEShuffleRead coalesced" not in final, final
-    exchanges = [ln for ln in final.splitlines()
-                 if "Exchange " in ln and "BroadcastExchange" not in ln]
-    assert exchanges, final
-    assert all("REPARTITION_BY_NUM" in ln for ln in exchanges), final
 
     tree = _executed_tree(combined)
-    (light, above), = [(n, path) for n, path in _nodes(tree)
-                       if n[0] == "MapInPandas"
-                       and "extract_documents" in n[1]]
-    (heavy,) = [n for n, _ in _nodes(tree) if n[0] == "MapInPandas"
-                and "assemble_partition" in n[1]]
+    light, above = _map_in_pandas(tree, "extract_documents")
+    stage1, _ = _map_in_pandas(tree, "extract_pages")
+    page_work, _ = _map_in_pandas(tree, "page_work")
+    heavy, _ = _map_in_pandas(tree, "assemble_partition")
+    exchanges = [x for x in _exchanges(tree) if x.name != "BroadcastExchange"]
+    assert exchanges, final
+    # the one unnumbered exchange: the payload side of a heavy payload
+    # join that does not broadcast
+    unnumbered = [x for x in exchanges if "REPARTITION_BY_NUM" not in x.desc]
+    assert len(unnumbered) == (mode == "hybrid" and broadcast == "-1"), final
+    assert all(x in _payload_exchanges(stage1) and x.parts == n
+               for x in unnumbered), final
+    assert stage1.kids[0].parts == n, final
+    assert not [x for x, _ in _nodes(page_work) if "payload" in x.cols], final
+    # the first metered node under it: the join to the media refs, or the
+    # documents' exchange
+    (fed,) = [x.rows for x, _ in _nodes(page_work.kids[0])
+              if x.rows is not None][:1]
+    assert fed == 1, final      # heavy-1, the one heavy document
     assert not [name for name in above if "Exchange" in name], final
     assert _exchanges(light), final
-    assert all(n[0] == "BroadcastExchange" or "REPARTITION_BY_NUM" in n[1]
-               for n in _exchanges(light)), final
+    assert all(x.name == "BroadcastExchange" or "REPARTITION_BY_NUM" in x.desc
+               for x in _exchanges(light)), final
     if mode == "hybrid":    # stream-only jobs never read payloads
         assert len(_payload_exchanges(light)) == 1, final
         assert len(_payload_exchanges(heavy)) == 1, final
     # the media split reads no documents: no documents scan sits under a
     # broadcast
-    assert not [n for n, path in _nodes(tree)
-                if n[0] == "InMemoryTableScan" and "spans" in n[2]
+    assert not [x for x, path in _nodes(tree)
+                if x.name == "InMemoryTableScan" and "spans" in x.cols
                 and "BroadcastExchange" in path], final
 
 
@@ -683,30 +718,57 @@ _SENTINEL_CASES = {"malformed_header": -1, "empty_spans": -2,
                    "null_kind": -4}
 
 
-def test_page_work_rows_match_build_page_work(spark, parity_docs):
-    """The light route's Python page-work builder gives the same rows as
-    the heavy route's native one on every edge document, and each page
-    sentinel (malformed, no-content, filtered, unknown kind, NULL kind)
-    appears exactly once in its document's rows."""
+def test_page_work_rows_match_build_page_work(spark, parity_docs,
+                                             monkeypatch):
+    """``build_page_work``'s rows, whose payloads attach by a join on
+    (doc_id, page, media_ref), equal the rows the light route gets from
+    ``_make_page_work`` with each media row's own payload, on every edge
+    document; each page sentinel (malformed, no-content, filtered,
+    unknown kind, NULL kind) appears exactly once in its document's rows.
+
+    One media row gives one page: a span whose media_ref has own rows on
+    pages 1 and 2 gets two work rows, each page with its row's payload,
+    and both routes return the same row for it."""
     from extractpdf4j_spark.pipeline import _make_page_work, build_page_work
     spans, payloads = parity_docs
-    seen = set()
-    for cfg, docs, media, cases in _parity_groups(spark, parity_docs):
-        native = sorted((
+
+    def both(cfg, docs, media, own, cases):
+        got = sorted((
             (r["doc_id"], r["page"], r["glyph_blob"],
              None if r["payload"] is None else bytes(r["payload"]))
             for r in build_page_work(docs, media, cfg).collect()),
             key=repr)
-        own = {ref: [(1, p)] for ref, p in payloads.items()}
         rows = sorted(((c, *r) for c in cases
                        for r in _make_page_work(cfg)(spans[c], own)),
                       key=repr)
-        assert rows == native
+        assert rows == got
+        return rows
+
+    seen = set()
+    own = {ref: [(1, p)] for ref, p in payloads.items()}
+    for cfg, docs, media, cases in _parity_groups(spark, parity_docs):
+        rows = both(cfg, docs, media, own, cases)
         for case in set(cases) & set(_SENTINEL_CASES):
             pages = [r[1] for r in rows if r[0] == case]
             assert pages.count(_SENTINEL_CASES[case]) == 1, (case, pages)
             seen.add(case)
     assert seen == set(_SENTINEL_CASES)
+
+    case = "ref_on_two_pages"
+    spans = {case: [dict(spans["corrupt_payload"][1], media_ref="ruled/p1")]}
+    good, corrupt = payloads["ruled/p1"], payloads["corrupt/p1"]
+    docs = spark.createDataFrame([(case, spans[case])],
+                                 schema=DOCUMENTS_SCHEMA)
+    media = spark.createDataFrame([("ruled/p1", case, 1, good),
+                                   ("ruled/p1", case, 2, corrupt)],
+                                  schema=MEDIA_SCHEMA)
+    rows = both(_EMBEDDED, docs, media,
+                {"ruled/p1": [(1, good), (2, corrupt)]}, [case])
+    assert rows == [(case, 1, None, good), (case, 2, None, corrupt)]
+    got = _rows_by_route(monkeypatch, lambda: extract(docs, media, _EMBEDDED,
+                                                      2))
+    assert got["light"] == got["heavy"]
+    assert [r[0] for r in got["light"]] == [case]
 
 
 @pytest.mark.parametrize("num_partitions", [2, 8])
@@ -810,3 +872,39 @@ def test_forget_zip_importers_keeps_zip_imports_working(tmp_path,
     assert importlib.import_module("zipped_pkg.mod").VALUE == 7
     for name in ("zipped_pkg", "zipped_pkg.mod"):
         sys.modules.pop(name, None)
+
+
+def _batch_function(name):
+    from extractpdf4j_spark import pipeline
+    from extractpdf4j_spark.pdfio import _make_decode_pdfs
+    from extractpdf4j_spark.sinks import _make_debug_pages
+    cfg = ExtractConfig()
+    return {
+        "page_work": lambda: pipeline._make_ref_page_work(cfg, True),
+        "extract_pages": lambda: pipeline._make_extract_pages(cfg),
+        "assemble_partition": lambda: pipeline._make_assemble_partition(cfg),
+        "extract_documents": lambda: pipeline._make_extract_documents(cfg,
+                                                                      True),
+        "debug_pages": lambda: _make_debug_pages(cfg),
+        "decode_pdfs": lambda: _make_decode_pdfs(lambda: None),
+    }[name]()
+
+
+@pytest.mark.parametrize("name", ["page_work", "extract_pages",
+                                  "assemble_partition", "extract_documents",
+                                  "debug_pages", "decode_pdfs"])
+def test_batch_functions_forget_zip_importers(tmp_path, monkeypatch, name):
+    """Every Python stage of the extraction job (page work, stage 1,
+    stage 2, the light route, the ``--debug-out`` sink and the
+    ``--pdf-input`` decode) drops the worker's cached zipimporters before
+    its first batch."""
+    import sys
+    import zipfile
+    import zipimport
+    archive = tmp_path / "planted.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("planted.py", "")
+    monkeypatch.setitem(sys.path_importer_cache, str(archive),
+                        zipimport.zipimporter(str(archive)))
+    assert list(_batch_function(name)(iter([]))) == []
+    assert str(archive) not in sys.path_importer_cache
