@@ -37,7 +37,11 @@ The engine's input is the BASELINE.json ``input_hint`` shape:
                text      the words' UTF-8 bytes, concatenated
 
   Decode is one ``zlib.decompress`` plus ``np.frombuffer`` slices and
-  never deserializes Python objects. A payload with a bad magic,
+  never deserializes Python objects. It yields a :class:`PagePayload`
+  that holds what the kernels read: a bilevel page's pixels unpack
+  straight to its 0/1 black mask (one ``unpackbits`` of the inverted
+  packed bytes), and the uint8 page and the pandas word frame are built
+  only when something asks for them. A payload with a bad magic,
   undecodable deflate, a body length the header does not imply, or text
   offsets that decrease or miss the declared byte count raises
   ``ValueError``, which stage 1 records as an 'error' status row.
@@ -127,27 +131,44 @@ def decode_glyph_blob(page: int, blob: str | None) -> GlyphRuns:
 # ---------------------------------------------------------------------------
 
 class PagePayload:
-    """One page's raster + OCR word layer.
+    """One page's raster + OCR word layer, holding what the kernels read.
 
-    ``words`` (the OCR_WORD_COLS frame) is constructed lazily from
-    ``word_arrays`` — building a pandas frame per payload was a measured
-    decode hot spot, and pages without words never need one."""
+    * A bilevel page (header flag ``bilevel``) keeps only its 0/1 uint8
+      **black** mask ``mask`` (1 where the pixel is 0); a grayscale page
+      keeps its uint8 raster and ``mask`` is None. ``shape`` is ``(h, w)``
+      either way.
+    * ``image`` is the uint8 grayscale raster (0/255 on a bilevel page),
+      built on first use. Only a pixel-reading OCR backend, the debug sink
+      and tests ask for it; lattice reads a bilevel page's ``mask``.
+    * ``word_arrays`` holds the OCR word columns (int32 arrays, ``text``
+      a list of str). ``words``, the OCR_WORD_COLS frame, is built from
+      them on first use: a pandas frame per page cost more than the
+      kernels' own work on it."""
 
-    def __init__(self, page: int, image: np.ndarray, dpi: float,
-                 page_width_pt: float, page_height_pt: float,
-                 word_arrays: dict):
+    def __init__(self, page: int, shape: tuple[int, int], bilevel: bool,
+                 pixels: np.ndarray, dpi: float, page_width_pt: float,
+                 page_height_pt: float, word_arrays: dict):
         self.page = page
-        self.image = image                  # uint8 grayscale raster
+        self.shape = shape
+        self.bilevel = bilevel
+        self.mask = pixels if bilevel else None
+        self._image = None if bilevel else pixels
         self.dpi = dpi                      # pixels = points*dpi/72
         self.page_width_pt = page_width_pt
         self.page_height_pt = page_height_pt
+        self.word_arrays = word_arrays
         self._words = None
-        self._word_arrays = word_arrays
+
+    @property
+    def image(self) -> np.ndarray:
+        if self._image is None:
+            self._image = (self.mask ^ np.uint8(1)) * np.uint8(255)
+        return self._image
 
     @property
     def words(self) -> pd.DataFrame:
         if self._words is None:
-            self._words = pd.DataFrame(self._word_arrays, copy=False)
+            self._words = pd.DataFrame(self.word_arrays, copy=False)
         return self._words
 
 
@@ -209,9 +230,10 @@ def decode_media_payload(payload: bytes) -> PagePayload:
     word_arrays = dict(zip(_INT_COLS, cols))
     word_arrays["text"] = [text[a:b].decode() for a, b in zip(starts, ends)]
     pixels = np.frombuffer(body, np.uint8, npx)
-    image = (np.unpackbits(pixels, count=h * w).reshape(h, w) * np.uint8(255)
-             if bilevel else pixels.reshape(h, w))
-    return PagePayload(page, image, dpi, pw, ph,
+    # a set bit is a white pixel, so the inverted bits are the black mask
+    pixels = (np.unpackbits(np.invert(pixels), count=h * w).reshape(h, w)
+              if bilevel else pixels.reshape(h, w))
+    return PagePayload(page, (h, w), bool(bilevel), pixels, dpi, pw, ph,
                        {c: word_arrays[c] for c in OCR_WORD_COLS})
 
 

@@ -182,21 +182,22 @@ def _win15_axis1_u8(z: np.ndarray) -> np.ndarray:
     return out
 
 
-def _bilevel_mask01(gray: np.ndarray,
+def _bilevel_mask01(gray: np.ndarray | None,
                     z: np.ndarray | None = None) -> np.ndarray:
     """``binarize_for_lines(gray) > 0`` as a 0/1 uint8 mask, for BILEVEL
     input only — bit-identical to the generic path, ~3x faster at 32
     cores (u8 shift-add window counts, axis-0 pass strip-tiled so every
     temporary stays cache-resident). ``z``, when given, must be
-    ``(gray == 0)`` as uint8; callers that already hold it skip a pass.
+    ``(gray == 0)`` as uint8, and ``gray`` is then not read (it may be
+    None): a decoded bilevel page holds only ``z``.
 
     Derivation: with pixels ∈ {0,255} the window sum is 255·cnt255, and
     the integer compare (g+10)·450 <= 2s+225 of ``_binarize_region_rows``
     reduces to ``g==0 and cnt255>=9`` ⟺ ``g==0 and cnt0<=216``
     (cnt0+cnt255=225 under replicate borders)."""
-    h, w = gray.shape
     if z is None:
         z = (gray == 0).view(np.uint8)
+    h, w = z.shape
     out = np.empty((h, w), dtype=np.uint8)
     s1 = _win15_axis1_u8(z)
     for y0 in range(0, h, 128):
@@ -327,10 +328,27 @@ def detect_line_positions(gray: np.ndarray, k: int) -> tuple[np.ndarray, np.ndar
     268-291) on ``binarize_for_lines(gray)`` for both axes — pinned by
     tests against the literal oracle.
 
-    The mask comes from one of three places, picked by the input:
-    grayscale pages use ``binarize_for_lines``; bilevel pages use the
-    plain black-pixel mask ``z = (gray == 0)`` when a bound proves it
-    exact, and ``_bilevel_mask01`` otherwise.
+    This entry point takes a raw uint8 page and sniffs it: a bilevel one
+    (every pixel 0 or 255) goes to :func:`bilevel_line_positions` with
+    its black mask ``gray == 0``; a grayscale one uses
+    ``binarize_for_lines``. The lattice kernel calls
+    ``bilevel_line_positions`` itself for a payload whose header says
+    bilevel, so a decoded bilevel page is never expanded or rescanned."""
+    if _is_bilevel(gray):
+        return bilevel_line_positions((gray == 0).view(np.uint8), k)
+    h, w = gray.shape
+    acc = np.uint16 if max(h, w) < 65536 else np.int64
+    m01 = (binarize_for_lines(gray) > 0).view(np.uint8)
+    return _open_lines(m01, m01.sum(axis=1, dtype=acc),
+                       m01.sum(axis=0, dtype=acc), k)
+
+
+def bilevel_line_positions(z: np.ndarray, k: int
+                           ) -> tuple[np.ndarray, np.ndarray]:
+    """``detect_line_positions`` of a bilevel page, from its 0/1 uint8
+    black mask ``z`` (1 where the pixel is 0). The adaptive mask is the
+    plain black-pixel mask ``z`` when a bound proves it exact, and
+    ``_bilevel_mask01`` otherwise.
 
     Bilevel bound: ``_bilevel_mask01`` clears a black pixel only when
     its 15x15 window holds >= 217 black pixels, so the mask is ``z``
@@ -343,21 +361,17 @@ def detect_line_positions(gray: np.ndarray, k: int) -> tuple[np.ndarray, np.ndar
     every window count, and the same holds for columns. If either axis's
     windowed bound is <= 216 everywhere, ``z`` is the mask and the
     adaptive window is skipped; otherwise the exact ``_bilevel_mask01``
-    runs (reusing ``z``). Ruled or blank pages pass the bound; pages
-    with rendered glyphs or dense rules usually fail it and pay the full
+    runs on ``z``. Ruled or blank pages pass the bound; pages with
+    rendered glyphs or dense rules usually fail it and pay the full
     window."""
-    h, w = gray.shape
+    h, w = z.shape
     acc = np.uint16 if max(h, w) < 65536 else np.int64
-    if _is_bilevel(gray):
-        z = (gray == 0).view(np.uint8)
-        row_cov = z.sum(axis=1, dtype=acc)
-        col_cov = z.sum(axis=0, dtype=acc)
-        if h and w and (_win15_bound_le216(row_cov, z[:, 0], z[:, -1])
-                        or _win15_bound_le216(col_cov, z[0, :], z[-1, :])):
-            return _open_lines(z, row_cov, col_cov, k)
-        m01 = _bilevel_mask01(gray, z)
-    else:
-        m01 = (binarize_for_lines(gray) > 0).view(np.uint8)
+    row_cov = z.sum(axis=1, dtype=acc)
+    col_cov = z.sum(axis=0, dtype=acc)
+    if h and w and (_win15_bound_le216(row_cov, z[:, 0], z[:, -1])
+                    or _win15_bound_le216(col_cov, z[0, :], z[-1, :])):
+        return _open_lines(z, row_cov, col_cov, k)
+    m01 = _bilevel_mask01(None, z)
     return _open_lines(m01, m01.sum(axis=1, dtype=acc),
                        m01.sum(axis=0, dtype=acc), k)
 

@@ -26,6 +26,11 @@ Re-expresses LatticeParser.java over a page's raster payload + glyph runs:
     minCellW x minCellH (20x10) is cropped, upscaled 2x, gaussian-
     binarized 35/15, inverted when mean<128, OCR'd; the OCR text REPLACES
     the cell                                — LatticeParser.java:189-231
+
+Steps 1-3 on a bilevel payload (the header flag) read its 0/1 black mask
+through ``imageops.bilevel_line_positions``; the uint8 raster is built
+only for a grayscale page or for step 9's crops when the OCR backend
+reads pixels.
 """
 
 from __future__ import annotations
@@ -43,19 +48,35 @@ OCR_FILL_GATE = 0.25  # LatticeParser.java:192
 
 
 def detect_grid(gray: np.ndarray) -> tuple[list[int], list[int]]:
-    """Steps 1-5: ruling-line positions (rowsY, colsX) incl. border close.
+    """Steps 1-5 on a raw uint8 page: ruling-line positions (rowsY,
+    colsX) incl. border close.
 
     Uses imageops.detect_line_positions (one mask per page, candidate
     lines opened once) — exact semantics of the reference's binarize +
     full-image erode/dilate + projection, verified against the literal
     oracle."""
-    scale = max(1, gray.shape[1] // 1000)
+    return _grid(gray.shape, imageops.detect_line_positions, gray)
+
+
+def _payload_grid(payload: PagePayload) -> tuple[list[int], list[int]]:
+    """``detect_grid(payload.image)`` without building the image when the
+    header says bilevel: the black mask goes straight to
+    ``imageops.bilevel_line_positions``."""
+    if payload.bilevel:
+        return _grid(payload.shape, imageops.bilevel_line_positions,
+                     payload.mask)
+    return detect_grid(payload.image)
+
+
+def _grid(shape: tuple[int, int], line_positions, arr: np.ndarray
+          ) -> tuple[list[int], list[int]]:
+    h, w = shape
+    scale = max(1, w // 1000)
     k = max(10 * scale, 10)
-    rows_pos, cols_pos = imageops.detect_line_positions(gray, k)
+    rows_pos, cols_pos = line_positions(arr, k)
     rows_y = imageops.dedupe_positions(rows_pos, DEDUPE_TOL)
     cols_x = imageops.dedupe_positions(cols_pos, DEDUPE_TOL)
 
-    h, w = gray.shape
     if not rows_y or rows_y[0] > BORDER_TOL:
         rows_y.insert(0, 0)
     if rows_y[-1] < h - BORDER_TOL:
@@ -83,11 +104,12 @@ def lattice_extract_page(payload: PagePayload | None, glyphs: GlyphRuns | None,
 
     Without a raster payload there are no ruling lines to detect, so the
     result is the empty table (the reference would rasterize the page
-    first; pure-text documents route to the stream strategy)."""
+    first; pure-text documents route to the stream strategy). A bilevel
+    payload's grid is read off its black mask; the uint8 page is built
+    only for a backend that reads the cell crops' pixels."""
     if payload is None:
         return Table([], [], []), 0
-    gray = payload.image
-    rows_y, cols_x = detect_grid(gray)
+    rows_y, cols_x = _payload_grid(payload)
     nrows, ncols = max(0, len(rows_y) - 1), max(0, len(cols_x) - 1)
     if nrows == 0 or ncols == 0:
         return Table([], [], []), 0
@@ -120,7 +142,7 @@ def lattice_extract_page(payload: PagePayload | None, glyphs: GlyphRuns | None,
                     continue
                 if backend.reads_pixels:
                     # crop prep exists to help a pixel-reading OCR engine
-                    roi = gray[y:y + h, x:x + w]
+                    roi = payload.image[y:y + h, x:x + w]
                     up = imageops.resize2x(roi)
                     binimg = imageops.adaptive_threshold(up, 35, 15,
                                                          method="gaussian",

@@ -25,10 +25,11 @@ Re-expresses OcrStreamParser.java over a page raster payload:
 9.  row bounds from ALL lines: (minTop+maxBot)/2 — OcrStreamParser.java:204-209
 
 Internal representation: a page's words are ~tens of rows, so the hot
-path runs on plain Python lists extracted ONCE from the word table
-(per-line pandas frames cost more in object construction than the whole
-page's matching work — measured 2x kernel time at bench scale). Tests
-call the same ``_*_core`` functions the kernel runs.
+path runs on plain Python lists, the backend's ``word_columns`` (pandas
+frames cost more in object construction and column reads than the whole
+page's matching work — per line they measured 2x kernel time at bench
+scale, and one frame per page was still the kernel's largest cost).
+Tests call the same ``_*_core`` functions the kernel runs.
 """
 
 from __future__ import annotations
@@ -218,38 +219,30 @@ def ocrstream_extract_page(payload: PagePayload | None, backend: OcrBackend,
         return Table([], [], []), False
 
     # rule removal / rebinarization exist to help a pixel-reading OCR
-    # engine; every downstream use of `cleaned` is shape-preserving, so a
-    # pixel-free backend sees identical output without the image work
-    if backend.reads_pixels:
-        cleaned = preprocess_page(payload.image)
-    else:
-        cleaned = payload.image
-    words = backend.words(payload, cleaned, psm)
-    if len(words) == 0:
-        return Table([], [], []), False
+    # engine; a pixel-free backend gets no image, so the uint8 page is
+    # never built for it (the page width comes from the header)
+    cleaned = preprocess_page(payload.image) if backend.reads_pixels else None
+    words = backend.word_columns(payload, cleaned, psm)
     # blank filter strips a COPY; cells keep the backend's original text
-    # (same as the previous frame-based path, which masked rows by the
-    # stripped values but left the text column untouched)
     text = [str(t) for t in words["text"]]
     keep = [i for i, t in enumerate(text) if t.strip() != ""]
     if not keep:
         return Table([], [], []), False
+    cols = [words[c] for c in ("left", "top", "width", "height", "block",
+                               "par", "line")]
     if len(keep) != len(text):
-        words = words.iloc[keep]
+        cols = [[v[i] for i in keep] for v in cols]
         text = [text[i] for i in keep]
-
-    lines = _group_lines_lists(
-        words["left"].tolist(), words["top"].tolist(),
-        words["width"].tolist(), words["height"].tolist(), text,
-        words["block"].tolist(), words["par"].tolist(),
-        words["line"].tolist())
+    left, top, width, height, block, par, line = cols
+    lines = _group_lines_lists(left, top, width, height, text,
+                               block, par, line)
 
     headers_found = False
     if required_headers:
         headers_found = any(
             _matches_required_core(ln.norm, required_headers) for ln in lines)
 
-    page_width = cleaned.shape[1]
+    page_width = payload.shape[1]
     col_bounds = _header_anchored_bounds_core(lines, page_width)
     if col_bounds is None:
         seps = _infer_separators_core(lines, page_width)

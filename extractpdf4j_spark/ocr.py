@@ -9,7 +9,7 @@ implementations:
 
 * :class:`EmbeddedWordsBackend` — the deterministic stand-in: media
   payloads carry the word layer a real OCR pass would produce (generated
-  by the fixture module); ``words`` filters blanks exactly like
+  by the fixture module); its words filter blanks exactly like
   Ocr.java:228-229, and ``cell_text`` returns the words whose boxes fall
   inside the requested ROI (what Tesseract would read off the crop).
   This keeps the whole extraction dataflow real — only the
@@ -17,6 +17,16 @@ implementations:
 
 * :class:`PytesseractBackend` — the production path, import-gated; raises
   a clearly-marked NotImplementedError when pytesseract is absent.
+
+Words come out of the seam two ways. ``words`` returns the TSV-style
+OCR_WORD_COLS frame (what Tesseract's DATAFRAME output gives; the test
+oracle and the debug sink read it). ``word_columns`` returns the same
+columns as a dict of lists, which is what the ocrstream kernel reads: a
+page holds tens of words, where building and indexing a pandas frame
+costs more than the kernel's own work. The base ``word_columns``
+converts ``words()``, so a backend need only implement ``words``;
+:class:`EmbeddedWordsBackend` overrides both to read the payload's word
+arrays and never builds a frame.
 
 The engine runs one configured PSM (``ExtractConfig.tess_psm``); the
 reference's PSM sweep is not reproduced, since only its tests call it.
@@ -46,8 +56,16 @@ class OcrBackend:
 
     reads_pixels = True
 
-    def words(self, payload: PagePayload, image: np.ndarray, psm: int) -> pd.DataFrame:
+    def words(self, payload: PagePayload, image: np.ndarray | None,
+              psm: int) -> pd.DataFrame:
         raise NotImplementedError
+
+    def word_columns(self, payload: PagePayload, image: np.ndarray | None,
+                     psm: int) -> dict[str, list]:
+        """``words()`` as OCR_WORD_COLS lists. ``image`` is None when
+        ``reads_pixels`` is False."""
+        w = self.words(payload, image, psm)
+        return {c: w[c].tolist() for c in OCR_WORD_COLS}
 
     def cell_text(self, payload: PagePayload, cell_img: np.ndarray | None,
                   bbox: tuple[int, int, int, int]) -> str:
@@ -59,27 +77,16 @@ class EmbeddedWordsBackend(OcrBackend):
 
     reads_pixels = False
 
-    def words(self, payload: PagePayload, image: np.ndarray, psm: int) -> pd.DataFrame:
-        w = payload.words
-        if len(w) == 0:
-            return w
-        # Ocr.java:228-229 drops rows with empty/blank trimmed text;
-        # OcrStreamParser.java:149 filters blanks again post-hoc.
-        # (list-comp strip instead of two .str passes — the per-page word
-        # table is tens of rows, where accessor overhead dominates)
-        stripped = [str(t).strip() for t in w["text"].tolist()]
-        keep = [i for i, s in enumerate(stripped) if s != ""]
-        cols: dict = {}
-        for c in w.columns:
-            if c == "text":
-                cols[c] = (stripped if len(keep) == len(stripped)
-                           else [stripped[i] for i in keep])
-            else:
-                v = w[c].to_numpy()
-                cols[c] = v if len(keep) == len(stripped) else v[keep]
-        return pd.DataFrame(cols, copy=False)
+    def words(self, payload: PagePayload, image: np.ndarray | None,
+              psm: int) -> pd.DataFrame:
+        return pd.DataFrame(_nonblank_words(payload), copy=False)
 
-    def cell_text(self, payload: PagePayload, cell_img: np.ndarray,
+    def word_columns(self, payload: PagePayload, image: np.ndarray | None,
+                     psm: int) -> dict[str, list]:
+        return {c: (v if c == "text" else v.tolist())
+                for c, v in _nonblank_words(payload).items()}
+
+    def cell_text(self, payload: PagePayload, cell_img: np.ndarray | None,
                   bbox: tuple[int, int, int, int]) -> str:
         """Words whose box centers fall inside bbox=(x, y, w, h) in page
         raster coordinates, reading order (top then left), joined by a
@@ -91,19 +98,19 @@ class EmbeddedWordsBackend(OcrBackend):
         numpy masking."""
         arrs = getattr(payload, "_ocr_sorted", _UNSET)
         if arrs is _UNSET:
-            w = payload.words
-            if len(w) == 0:
+            w = payload.word_arrays
+            if len(w["text"]) == 0:
                 arrs = None   # cached below: no-words pages resolve once
             else:
-                left = w["left"].to_numpy(np.float64)
-                top = w["top"].to_numpy(np.float64)
-                cx = left + w["width"].to_numpy(np.float64) / 2.0
-                cy = top + w["height"].to_numpy(np.float64) / 2.0
+                left = w["left"].astype(np.float64)
+                top = w["top"].astype(np.float64)
+                cx = left + w["width"].astype(np.float64) / 2.0
+                cy = top + w["height"].astype(np.float64) / 2.0
                 order = np.lexsort((left, top))  # stable (top, left)
                 texts = np.array([str(t).strip() for t in w["text"]],
                                  dtype=object)[order]
                 arrs = (cx[order], cy[order], texts)
-            payload._ocr_sorted = arrs  # PagePayload is a mutable dataclass
+            payload._ocr_sorted = arrs
         if arrs is None:
             return ""
         cx, cy, texts = arrs
@@ -112,6 +119,20 @@ class EmbeddedWordsBackend(OcrBackend):
         if not inside.any():
             return ""
         return " ".join(t for t in texts[inside] if t)
+
+
+def _nonblank_words(payload: PagePayload) -> dict:
+    """The payload's word arrays with texts trimmed and blank ones
+    dropped: Ocr.java:228-229 drops rows with empty/blank trimmed text,
+    and OcrStreamParser.java:149 filters blanks again post-hoc. Integer
+    columns stay int32 arrays; ``text`` is a list."""
+    arrs = payload.word_arrays
+    stripped = [str(t).strip() for t in arrs["text"]]
+    keep = [i for i, t in enumerate(stripped) if t != ""]
+    if len(keep) == len(stripped):
+        return {**arrs, "text": stripped}
+    return {c: ([stripped[i] for i in keep] if c == "text" else v[keep])
+            for c, v in arrs.items()}
 
 
 class PytesseractBackend(OcrBackend):

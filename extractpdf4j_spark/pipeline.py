@@ -72,7 +72,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (ArrayType, BinaryType, DoubleType, IntegerType,
                                LongType, StringType, StructField, StructType)
@@ -398,7 +397,6 @@ def _make_assemble_partition(cfg: ExtractConfig):
 
     def assemble_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         _forget_zip_importers()
-        partition_id = _partition_id()
 
         def flush(pdf: pd.DataFrame) -> pd.DataFrame:
             # column arrays once per batch; per-document work then runs on
@@ -410,8 +408,7 @@ def _make_assemble_partition(cfg: ExtractConfig):
                     ("strategy", "score", "page", "cells_json", "col_bounds",
                      "row_bounds", "ocr_fallbacks", "headers_found",
                      "errors", "wall_ms")}
-            out = [_assemble_run(cfg, strategies, doc[s], arrs, s, e,
-                                 partition_id)
+            out = [_assemble_run(cfg, strategies, doc[s], arrs, s, e)
                    for s, e in _doc_runs(doc)]
             return pd.DataFrame(out, columns=cols)
 
@@ -454,7 +451,7 @@ def _doc_runs(doc: np.ndarray) -> list[tuple[int, int]]:
 
 
 def _assemble_run(cfg: ExtractConfig, strategies, doc_id: str,
-                  arrs: dict, s: int, e: int, partition_id: int) -> tuple:
+                  arrs: dict, s: int, e: int) -> tuple:
     """Assemble one document from its contiguous row run [s, e) of the
     batch's column arrays: fold its page markers, then :func:`_doc_row`.
     Only the winner's tables are JSON-parsed."""
@@ -486,27 +483,28 @@ def _assemble_run(cfg: ExtractConfig, strategies, doc_id: str,
     return _doc_row(cfg, doc_id,
                     {st: score[idx] for st, idx in per_idx.items()},
                     winner_tables, (ocr_fallbacks, headers_found, errors,
-                                    wall_ms), partition_id)
+                                    wall_ms))
 
 
 def _doc_row(cfg: ExtractConfig, doc_id: str, page_scores: dict,
-             winner_tables, marker: tuple, partition_id: int) -> tuple:
+             winner_tables, marker: tuple) -> tuple:
     """One document's COMBINED_SCHEMA row: select the strategy
     (scoring.select_strategy) from each strategy's page-table scores and
     serialize the winner's tables, ``winner_tables(winner)`` as
     ``[(page, Table)]`` in page order. ``marker`` is the document's summed
-    ``(ocr_fallbacks, headers_found, errors, wall_ms)``."""
+    ``(ocr_fallbacks, headers_found, errors, wall_ms)``. The row's
+    ``partition_id`` is -1; ``extract`` sets it on both routes."""
     ocr_fallbacks, headers_found, errors, wall_ms = marker
     status, winner, best = select_strategy(cfg, page_scores,
                                            bool(headers_found), errors)
     if status != STATUS_OK:
         return (doc_id, "[]", status, winner, 0, 0, ocr_fallbacks,
-                float(best), wall_ms, partition_id)
+                float(best), wall_ms, -1)
     tables = winner_tables(winner)
     spans = serialize_tables([(p, winner, t) for p, t in tables])
     cells_parsed = sum(t.nrows * t.ncols for _, t in tables)
     return (doc_id, json.dumps(spans), STATUS_OK, winner, len(tables),
-            cells_parsed, ocr_fallbacks, float(best), wall_ms, partition_id)
+            cells_parsed, ocr_fallbacks, float(best), wall_ms, -1)
 
 
 # ---------------------------------------------------------------------------
@@ -554,7 +552,7 @@ def _make_extract_documents(cfg: ExtractConfig, has_media: bool):
 def _extract_document(cfg: ExtractConfig, strategies, extract_page,
                       doc_id: str, work: list[tuple]) -> tuple:
     """One document's COMBINED_SCHEMA row from its work rows
-    ``(page, glyph_blob, payload)``; ``extract`` sets its partition_id."""
+    ``(page, glyph_blob, payload)``."""
     found: dict[str, list] = {st: [] for st in strategies}
     marker = [0, 0, 0, 0]
     for page, glyph_blob, payload in work:
@@ -571,7 +569,7 @@ def _extract_document(cfg: ExtractConfig, strategies, extract_page,
 
     return _doc_row(cfg, doc_id,
                     {st: [sc for _, sc, _ in v] for st, v in found.items()},
-                    winner_tables, tuple(marker), -1)
+                    winner_tables, tuple(marker))
 
 
 def _forget_zip_importers() -> None:
@@ -590,11 +588,6 @@ def _forget_zip_importers() -> None:
     for path, finder in list(sys.path_importer_cache.items()):
         if isinstance(finder, zipimport.zipimporter):
             del sys.path_importer_cache[path]
-
-
-def _partition_id() -> int:
-    tc = TaskContext.get()
-    return tc.partitionId() if tc is not None else -1
 
 
 # ---------------------------------------------------------------------------

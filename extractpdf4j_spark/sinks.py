@@ -145,7 +145,7 @@ def _make_debug_pages(cfg):
                                          "dpi": payload.dpi,
                                          "page_width_pt": payload.page_width_pt,
                                          "page_height_pt": payload.page_height_pt,
-                                         "shape": list(payload.image.shape)}),
+                                         "shape": list(payload.shape)}),
                                      bytes(t.payload)))
                         rows.append((doc_id, page, "", "ocr_words",
                                      payload.words.to_json(orient="records"),

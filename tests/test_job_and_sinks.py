@@ -141,9 +141,9 @@ def test_tess_psm_reaches_backend():
     class RecordingBackend(EmbeddedWordsBackend):
         seen_psm = None
 
-        def words(self, payload, image, psm):
+        def word_columns(self, payload, image, psm):
             RecordingBackend.seen_psm = psm
-            return super().words(payload, image, psm)
+            return super().word_columns(payload, image, psm)
 
     fb = FixtureBuilder(seed=7)
     fb.ocr_words("ocrw-1")

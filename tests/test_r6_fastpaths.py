@@ -16,8 +16,12 @@ import oracle
 from extractpdf4j_spark import fixtures, imageops
 from extractpdf4j_spark.docmodel import (OCR_WORD_COLS, _HDR,
                                          decode_media_payload,
+                                         decode_text_span,
                                          encode_media_payload)
-from extractpdf4j_spark.kernels.lattice import detect_grid
+from extractpdf4j_spark.config import ExtractConfig
+from extractpdf4j_spark.kernels import page_extractor
+from extractpdf4j_spark.kernels.lattice import _payload_grid, detect_grid
+from extractpdf4j_spark.ocr import EmbeddedWordsBackend
 from extractpdf4j_spark.textnorm import edit_distance, edit_distance_le1
 
 
@@ -246,6 +250,19 @@ def test_fixture_pages_take_the_shortcut(monkeypatch):
     assert len(expected["grid_scanned"][1]) > 2
 
 
+def test_mask_path_grid_matches_detect_grid():
+    """A decoded bilevel payload's grid comes off its black mask and
+    equals ``detect_grid`` of the raw page, without building the page:
+    the fixture pages take the window-bound shortcut, the dense page the
+    ``_bilevel_mask01`` fallback."""
+    pages = {**_fixture_images(), "dense": np.zeros((64, 64), np.uint8)}
+    for name, g in pages.items():
+        p = decode_media_payload(encode_media_payload(1, g, 72.0, 1.0, 1.0))
+        assert p.bilevel and p.shape == g.shape, name
+        assert _payload_grid(p) == detect_grid(g), name
+        assert p._image is None, name
+
+
 # -- media payload codec ------------------------------------------------------
 
 def _words(texts):
@@ -287,6 +304,77 @@ def test_media_payload_default_words_empty():
     p = decode_media_payload(
         encode_media_payload(1, np.zeros((10, 10), np.uint8), 72.0, 1.0, 1.0))
     assert len(p.words) == 0 and list(p.words.columns) == OCR_WORD_COLS
+
+
+@pytest.mark.parametrize("case", sorted(_CODEC_CASES))
+def test_payload_keeps_black_mask_and_lazy_image(case):
+    img, texts = _CODEC_CASES[case]
+    img = img.astype(np.uint8)
+    p = decode_media_payload(
+        encode_media_payload(4, img, 144.0, 612.5, 792.25, _words(texts)))
+    assert p.shape == img.shape
+    assert p.bilevel == (not case.startswith("grayscale"))
+    if p.bilevel:
+        assert p.mask.dtype == np.uint8 and p._image is None
+        assert np.array_equal(p.mask, (img == 0).view(np.uint8))
+    else:
+        assert p.mask is None
+    assert p.image.dtype == np.uint8 and np.array_equal(p.image, img)
+
+
+@pytest.mark.parametrize("texts", [
+    _TEXTS, [], ["  ", "", "\t"], ["日本語 ", " x", "ünïcödé", ""],
+    ["plain", "words"]], ids=["mixed", "zero", "all_blank", "non_ascii",
+                              "no_blank"])
+def test_word_columns_match_words_frame(texts):
+    """The embedded backend's word columns are its ``words()`` frame's
+    columns: blank rows dropped, texts trimmed, the same values."""
+    p = decode_media_payload(encode_media_payload(
+        1, np.full((9, 9), 255, np.uint8), 72.0, 1.0, 1.0, _words(texts)))
+    backend = EmbeddedWordsBackend()
+    frame = backend.words(p, None, 6)
+    cols = backend.word_columns(p, None, 6)
+    assert list(cols) == list(frame.columns) == OCR_WORD_COLS
+    for c in OCR_WORD_COLS:
+        assert cols[c] == frame[c].tolist(), c
+    assert cols["text"] == [t.strip() for t in texts if t.strip()]
+
+
+def test_stage1_kernels_build_no_page_and_no_frame(monkeypatch):
+    """Stage 1's kernels read a decoded bilevel page's mask and word
+    arrays only: no ``_is_bilevel`` sniff, no pandas frame and no uint8
+    page, on a ruled page with a text layer, a scanned grid (lattice's
+    OCR fallback) and an OCR word page."""
+    fb = fixtures.FixtureBuilder(seed=42)
+    fb.grid_ruled("ruled")
+    fb.grid_scanned("scanned")
+    fb.ocr_words("ocr")
+    docs, media = fb.to_pandas()
+    glyphs = {}
+    for doc_id, spans in zip(docs["doc_id"], docs["spans"]):
+        text = [s["text"] for s in spans if s["kind"] == "text"]
+        glyphs[doc_id] = decode_text_span(text[0]) if text else None
+    payloads = {d: decode_media_payload(b)
+                for d, b in zip(media["doc_id"], media["payload"])}
+    extract_page = page_extractor(ExtractConfig(), EmbeddedWordsBackend())
+
+    def boom(*args, **kwargs):
+        raise AssertionError("called on the stage-1 kernel path")
+
+    monkeypatch.setattr(pd.DataFrame, "__init__", boom)
+    monkeypatch.setattr(imageops, "_is_bilevel", boom)
+    results = {d: list(extract_page(glyphs[d], p))
+               for d, p in payloads.items()}
+    monkeypatch.undo()
+    for d, p in payloads.items():
+        assert p.bilevel and p._image is None and p._words is None, d
+    tables = {(d, strat): (t.nrows, t.ncols, n_ocr)
+              for d, res in results.items() for strat, t, n_ocr, _ in res}
+    rows_y, cols_x = detect_grid(payloads["ruled"].image)
+    assert tables[("ruled", "lattice")] == (len(rows_y) - 1,
+                                            len(cols_x) - 1, 0)
+    assert tables[("scanned", "lattice")][2] > 0      # cell OCR fallback ran
+    assert tables[("ocr", "ocrstream")][0] > 0
 
 
 def _with_body(payload, edit):
