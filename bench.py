@@ -42,17 +42,14 @@ def make_spark(cores: int, shuffle_partitions: int | None = None):
     for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
         os.environ.setdefault(var, "1")
     from pyspark.sql import SparkSession
+
+    from extractpdf4j_spark.config import spark_confs
     sp = shuffle_partitions or max(cores * 2, 8)
     return (SparkSession.builder
             .master(f"local[{cores}]")
             .appName(f"extractpdf4j-bench-{cores}")
+            .config(map=spark_confs())
             .config("spark.sql.shuffle.partitions", str(sp))
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-            # 64-row batches measured best at local[32]: larger batches
-            # (512) raised T32 ~15% — coarse batches pipeline worse across
-            # the 2x-partition task set
-            .config("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
             # sized like scripts/oracle_battery.py: a 6 GB heap runs the
             # sf0.1 extraction and the query sweep on a 4-core, 15 GB host
             .config("spark.driver.memory", "6g")

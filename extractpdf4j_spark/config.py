@@ -66,3 +66,27 @@ class ExtractConfig:
         if self.mode == MODE_HYBRID:
             return (MODE_STREAM, MODE_LATTICE, MODE_OCRSTREAM)
         return (self.mode,)
+
+
+def spark_confs() -> dict[str, str]:
+    """The session confs the package relies on, where they differ from
+    Spark's defaults; every session builder applies them with
+    ``SparkSession.builder.config(map=spark_confs())``. Session confs
+    bind when a plan executes, so they are set once per session, never
+    by a plan builder.
+
+    * Arrow for pandas conversions.
+    * Size-based AQE partition coalescing (AQE and coalescing are on by
+      default): cuts scheduling and per-batch overhead for
+      data-proportional operator work. ``pipeline.extract`` feeds its
+      Python stages only from numbered exchanges, which AQE never
+      coalesces.
+    * One Arrow batch bound for every Python stage: 4096 records, and
+      at most 4 MiB, which bounds a batch of raster payloads by size
+      while small rows still batch by the thousand."""
+    return {
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "4096",
+        "spark.sql.execution.arrow.maxBytesPerBatch": "4m",
+    }

@@ -68,13 +68,14 @@ def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
     from pyspark.sql import SparkSession, functions as F
 
+    from .config import spark_confs
     from .functions.corpusops import (curate_corpus, remove_contaminated,
                                       scrub_contaminated)
     from .sinks import _shard_manifest, validate_training_shards
 
     spark = (SparkSession.builder
              .appName("extractpdf4j-spark-curate")
-             .config("spark.sql.adaptive.enabled", "true")
+             .config(map=spark_confs())
              .getOrCreate())
 
     if args.warc_input:

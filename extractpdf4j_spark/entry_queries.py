@@ -15,7 +15,6 @@ Determinism rules shared by both sides:
 
 from __future__ import annotations
 
-import functools
 from collections.abc import Callable
 from typing import NamedTuple
 
@@ -8842,35 +8841,7 @@ GATES = (
     Gate(q_extract_spans, None),
 )
 
-
-def _with_exec_prefs(fn):
-    """Set the gate's exec prefs on the session, then build.
-
-    Every gate runs with AQE partition coalescing on, size-based
-    (parallelismFirst off): for data-proportional operator work it cuts
-    scheduling and per-batch overhead (sf0.1 local[32] A/B, e.g. q_bm25
-    6.53→1.77 s, q_ann_scale 2.62→0.93 s), and ``pipeline.extract``
-    feeds its Python stages only from exchanges AQE does not coalesce.
-    Extraction gates (``q_extract_*``, ``q_flagship_*``) take 64-row
-    Arrow batches, the raster-kernel batch; every other gate 4096-row
-    ones. Every gate sets all three confs, so none inherits another's;
-    every caller executes the frame at once."""
-    extraction = fn.__name__.startswith(("q_extract_", "q_flagship_"))
-    batch = "64" if extraction else "4096"
-
-    @functools.wraps(fn)
-    def wrapped(spark: SparkSession, sf: str) -> DataFrame:
-        spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.enabled", "true")
-        spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            "false")
-        spark.conf.set(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", batch)
-        return fn(spark, sf)
-
-    return wrapped
-
-
-QUERIES = {g.build.__name__: _with_exec_prefs(g.build) for g in GATES}
+# A gate only builds its plan and sets no session conf: it runs under the
+# caller's session, set up once with ``config.spark_confs()``.
+QUERIES = {g.build.__name__: g.build for g in GATES}
 ORACLES = {g.build.__name__: g.oracle for g in GATES if g.oracle is not None}

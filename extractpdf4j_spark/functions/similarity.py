@@ -477,29 +477,6 @@ def quantize_embeddings(embeddings: DataFrame, id_col: str = "vec_id",
     return staged.select(id_col, "scale", qv.alias("qvec"))
 
 
-def quantized_cosine_topk(embeddings: DataFrame, query_id: int,
-                          k: int = 10, id_col: str = "vec_id",
-                          vec_col: str = "embedding",
-                          dim: int | None = None) -> DataFrame:
-    """Brute-force cosine top-k over the QUANTIZED representation —
-    cosine of the dequantized vectors (per-vector scales cancel in the
-    normalized dot product, so the int8 arrays are used directly in the
-    same matmul scan as the exact path)."""
-    q8 = quantize_embeddings(embeddings, id_col, vec_col)
-    qrow = (q8.filter(F.col(id_col) == query_id)
-            .select("qvec").collect())
-    if not qrow:
-        return (q8.select(F.col(id_col), F.lit(0.0).alias("cosine"))
-                .filter(F.lit(False)))
-    qv = np.asarray(list(qrow[0][0]), dtype=np.float64)
-    scored = _topk_scan(q8, qv[None, :],
-                        np.asarray([query_id], dtype=np.int64), k,
-                        id_col, "qvec")
-    return (scored.select(id_col, "cosine")
-            .orderBy(F.col("cosine").desc(), F.col(id_col))
-            .limit(k))
-
-
 # ---------------------------------------------------------------------------
 # Product quantization (PQ): 16-32x code compression + ADC search
 # ---------------------------------------------------------------------------

@@ -121,23 +121,6 @@ def hash_embed(df: DataFrame, dim: int = 64, text_col: str = "text",
             .agg(F.sum("_s").cast("long").alias("val")))
 
 
-def hash_embed_vectors(df: DataFrame, dim: int = 64,
-                       text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
-    """Dense form of :func:`hash_embed` for the ANN operators:
-    (id_col, emb array<double>[dim]). Pivot over the literal bucket list
-    (no pivot-discovery job), absent buckets read 0 — a pure codegen
-    projection after hash_embed's single shuffle. dim stays a column
-    count, so keep it ≤ a few hundred here; at larger dim feed the
-    sparse rows to a mapInPandas assembler instead."""
-    sparse = hash_embed(df, dim=dim, text_col=text_col, id_col=id_col)
-    piv = (sparse.groupBy(id_col)
-           .pivot("bucket", list(range(dim))).sum("val"))
-    emb = F.array(*[F.coalesce(F.col(str(i)), F.lit(0)).cast("double")
-                    for i in range(dim)])
-    return piv.select(F.col(id_col), emb.alias("emb"))
-
-
 def bm25_topk(docs: DataFrame, queries: DataFrame, k: int = 10,
               k1: float = 1.2, b: float = 0.75, text_col: str = "text",
               id_col: str = "doc_id",

@@ -79,16 +79,14 @@ def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
     from pyspark.sql import SparkSession
 
-    from .config import ExtractConfig
+    from .config import ExtractConfig, spark_confs
     from .pipeline import run_extraction, with_spans, metrics_view
     from .sinks import write_tables_csv
 
     preexisting = SparkSession.getActiveSession() is not None
     spark = (SparkSession.builder
              .appName("extractpdf4j-spark")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .config("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
+             .config(map=spark_confs())
              .getOrCreate())
 
     cfg = ExtractConfig(

@@ -59,10 +59,13 @@ def main():
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
+
+    from extractpdf4j_spark.config import spark_confs
     # one worker per core of this host; a 6 GB heap runs the sf0.01
     # battery on a 4-core, 15 GB machine
     cores = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
     spark = (SparkSession.builder.master(f"local[{cores}]")
+             .config(map=spark_confs())
              .config("spark.sql.shuffle.partitions", str(args.partitions))
              .config("spark.driver.memory", "6g")
              .appName("oracle-battery").getOrCreate())

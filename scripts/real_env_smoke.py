@@ -116,11 +116,12 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
-    from extractpdf4j_spark.config import ExtractConfig
+    from extractpdf4j_spark.config import ExtractConfig, spark_confs
     from extractpdf4j_spark.pdfio import Pypdfium2Backend, read_pdf_corpus
     from extractpdf4j_spark.pipeline import extract, with_spans
 
     spark = (SparkSession.builder.master("local[4]")
+             .config(map=spark_confs())
              .config("spark.sql.shuffle.partitions", "4")
              .config("spark.ui.enabled", "false").getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")

@@ -80,11 +80,13 @@ import extractpdf4j_spark
 assert "site-packages" in extractpdf4j_spark.__file__, \
     f"imported from {extractpdf4j_spark.__file__}, not the wheel"
 from pyspark.sql import SparkSession
+from extractpdf4j_spark.config import spark_confs
 from extractpdf4j_spark.corpusgen import ensure_fixture_corpus
 from extractpdf4j_spark.job import main
 
 work = os.environ["SMOKE_WORK"]
 spark = (SparkSession.builder.master("local[4]")
+         .config(map=spark_confs())
          .config("spark.sql.shuffle.partitions", "4")
          .config("spark.ui.enabled", "false")
          .appName("wheel-smoke").getOrCreate())

@@ -22,6 +22,8 @@ import time
 import pyarrow.parquet as pq
 from pyspark.sql import SparkSession, functions as F
 
+from extractpdf4j_spark.config import spark_confs
+
 N = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
 FILES = 64
 DOM = 4096
@@ -29,6 +31,7 @@ BASE = "/tmp/zorder_probe"
 
 CORES = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 spark = (SparkSession.builder.master(f"local[{CORES}]")
+         .config(map=spark_confs())
          .config("spark.sql.shuffle.partitions", "32")
          .config("spark.ui.enabled", "false").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")

@@ -10,13 +10,13 @@ import pytest
 @pytest.fixture(scope="session")
 def spark():
     from pyspark.sql import SparkSession
+
+    from extractpdf4j_spark.config import spark_confs
     s = (SparkSession.builder
          .master("local[2]")
          .appName("extractpdf4j-spark-tests")
+         .config(map=spark_confs())
          .config("spark.sql.shuffle.partitions", "4")
-         .config("spark.sql.adaptive.enabled", "true")
-         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
          .config("spark.ui.enabled", "false")
          .config("spark.driver.memory", "4g")
          .getOrCreate())

@@ -1,7 +1,9 @@
 """Mirror of the driver's correctness gate: every queries() entry with an
 oracle_sql() entry must match DuckDB on row count, columns and values."""
 
+import ast
 import math
+import pathlib
 
 import duckdb
 import pytest
@@ -69,40 +71,106 @@ def test_registry_contract():
     assert len(ORACLES) == 142 and set(ORACLES) <= set(QUERIES)
 
 
-def test_exec_prefs_follow_gate_name():
-    """Every gate sets the same three session confs: size-based AQE
-    partition coalescing on, and an Arrow batch size picked by its name:
-    the 12 builders that reach ``pipeline.extract`` (``q_extract_*``,
-    ``q_flagship_*``) take 64-row batches, every other gate 4096-row
-    ones. No Spark: a stub per registered name is wrapped and called on a
-    fake session that records ``conf.set``."""
-    from types import SimpleNamespace
+def test_queries_are_the_gate_builders():
+    """``QUERIES`` registers each gate's builder itself: no wrapper sits
+    between a caller and the plan it builds."""
+    from extractpdf4j_spark.entry_queries import GATES, QUERIES
+    assert len(GATES) == 144
+    for g in GATES:
+        assert QUERIES[g.build.__name__] is g.build
 
-    from extractpdf4j_spark.entry_queries import QUERIES, _with_exec_prefs
 
-    batches = {}
-    for name in QUERIES:
-        confs = {}
-        session = SimpleNamespace(conf=SimpleNamespace(
-            set=lambda k, v, confs=confs: confs.__setitem__(k, v)))
+def _stage_inputs(node):
+    """The shuffle reads feeding ``node``'s stage: the nearest
+    AQEShuffleRead or exchange below it, not looking past one."""
+    for kid in node.kids:
+        if kid.name == "AQEShuffleRead" or "Exchange" in kid.name:
+            yield kid
+        else:
+            yield from _stage_inputs(kid)
 
-        def stub(spark, sf):
-            return (spark, sf)
 
-        stub.__name__ = name
-        assert _with_exec_prefs(stub)(session, "sf") == (session, "sf")
-        assert confs.pop(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst") == "false"
-        assert confs.pop(
-            "spark.sql.adaptive.coalescePartitions.enabled") == "true"
-        batches[name] = confs.pop(
-            "spark.sql.execution.arrow.maxRecordsPerBatch")
-        assert not confs, f"{name}: unexpected confs {confs}"
-    extraction = {n for n, b in batches.items() if b == "64"}
-    assert extraction == {n for n in QUERIES
-                          if n.startswith(("q_extract_", "q_flagship_"))}
-    assert len(extraction) == 12
-    assert sum(b == "4096" for b in batches.values()) == 132
+def test_gates_leave_the_session_confs_alone(spark):
+    """Session confs bind when a plan executes, so a gate that set them
+    while building would change how a frame built earlier runs. Build an
+    extraction gate, build and run an operator gate, then execute the
+    extraction frame: the session still holds ``spark_confs()``'s
+    values, and no Python stage of the executed plan reads a coalesced
+    shuffle."""
+    from test_pipeline import _executed_tree, _nodes
+
+    from extractpdf4j_spark.config import spark_confs
+    from extractpdf4j_spark.entry_queries import QUERIES
+
+    def session():
+        return {k: spark.conf.get(k, None) for k in spark_confs()}
+
+    before = session()
+    extraction = QUERIES["q_extract_stream_metrics"](spark, SF)
+    QUERIES["q_hash_embed"](spark, SF).collect()
+    assert extraction.collect()
+    assert session() == before == spark_confs()
+    python = [n for n, _ in _nodes(_executed_tree(extraction))
+              if n.name in ("MapInPandas", "ArrowEvalPython",
+                            "FlatMapGroupsInPandas")]
+    assert python
+    for stage in python:
+        reads = list(_stage_inputs(stage))
+        assert reads and not [n for n in reads if "coalesced" in n.desc]
+
+
+# the caller-level files that build sessions; tests other than conftest
+# set and restore confs in their own bodies
+_SESSION_FILES = ("extractpdf4j_spark/**/*.py", "bench.py", "scripts/*.py",
+                  "tests/conftest.py")
+
+
+def _calls(tree):
+    """Every method call in ``tree``, descending into string constants
+    that build a session (a script run in a subprocess)."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call) and isinstance(node.func,
+                                                     ast.Attribute):
+            yield node
+        if (isinstance(node, ast.Constant) and isinstance(node.value, str)
+                and ".getOrCreate()" in node.value):
+            yield from _calls(ast.parse(node.value))
+
+
+def _applies_spark_confs(call):
+    return any(k.arg == "map" and isinstance(k.value, ast.Call)
+               and getattr(k.value.func, "id", "") == "spark_confs"
+               for k in call.keywords)
+
+
+def test_only_spark_confs_sets_its_confs():
+    """``config.spark_confs()`` is the one place the package, bench.py,
+    the scripts and the test session set the confs it owns: no other
+    ``.config(...)`` or ``.set(...)`` names one of its keys, and every
+    session builder chain applies ``spark_confs()``."""
+    from extractpdf4j_spark.config import spark_confs
+    owned = set(spark_confs())
+    root = pathlib.Path(__file__).resolve().parent.parent
+    files = sorted({f for pat in _SESSION_FILES for f in root.glob(pat)}
+                   - {root / "extractpdf4j_spark" / "config.py"})
+    assert root / "bench.py" in files and len(files) > 40
+    builders = []
+    for f in files:
+        for call in _calls(ast.parse(f.read_text())):
+            where = f"{f.relative_to(root)}:{call.lineno}"
+            if call.func.attr in ("config", "set"):
+                keys = {n.value for n in ast.walk(call)
+                        if isinstance(n, ast.Constant) and n.value in owned}
+                assert not keys, f"{where} sets {keys}"
+            if call.func.attr == "getOrCreate":
+                chain, node = [], call.func.value
+                while (isinstance(node, ast.Call)
+                       and isinstance(node.func, ast.Attribute)):
+                    chain.append(node)
+                    node = node.func.value
+                assert any(map(_applies_spark_confs, chain)), where
+                builders.append(where)
+    assert len(builders) == 8, builders
 
 
 @pytest.mark.parametrize("name,fn,sql", _oracle_pairs(),

@@ -597,26 +597,38 @@ def test_big_doc_pages_spread_across_partitions(spark, monkeypatch):
 
 
 def test_stage2_streaming_carryover_across_arrow_batches(spark):
-    """The streaming assemble holds back the trailing document of each
-    Arrow batch; with a 2-row batch size every heavy document is split
-    across batches, so this pins the carryover contract: every doc
-    exactly once, same statuses as with the default batch size."""
+    """Both routes' batch functions hold back the trailing document of
+    each Arrow batch (``_whole_documents``); with a 2-row batch size
+    every heavy document's page rows, and every light raster document's
+    media rows, are split across batches, so this pins the carryover
+    contract: every doc exactly once, same statuses as with the default
+    batch size."""
+    import random
+    from extractpdf4j_spark.fixtures import (STMT_COL_X, blank_page,
+                                             layout_text_rows, statement_rows)
     from extractpdf4j_spark.pipeline import LIGHT_SPANS
     fb = FixtureBuilder(seed=11)
     for i in range(6):     # heavy: one text span per page
         fb.stmt_text(f"multi-{i}", n_rows=4, n_pages=LIGHT_SPANS + 1)
+    rng = random.Random(11)
+    for i in range(4):     # light: 3 pages, one media row each
+        fb.add_doc(f"raster-{i}", [
+            {"runs": layout_text_rows(statement_rows(rng, 4), STMT_COL_X),
+             "image": blank_page()} for _ in range(3)])
+    assert len(fb.documents[-1]["spans"]) <= LIGHT_SPANS
     docs_pdf, media_pdf = fb.to_pandas()
     docs = spark.createDataFrame(docs_pdf, schema=DOCUMENTS_SCHEMA)
+    media = spark.createDataFrame(media_pdf, schema=MEDIA_SCHEMA)
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
     try:
         spark.conf.set(key, "2")
-        combined = extract(docs, None, ExtractConfig(), num_partitions=2)
+        combined = extract(docs, media, ExtractConfig(), num_partitions=2)
         rows = combined.collect()
     finally:
         spark.conf.set(key, old)
     assert sorted(r["doc_id"] for r in rows) == sorted(
-        f"multi-{i}" for i in range(6))
+        [f"multi-{i}" for i in range(6)] + [f"raster-{i}" for i in range(4)])
     assert all(r["status"] == "ok" for r in rows), [
         (r["doc_id"], r["status"]) for r in rows]
 
@@ -664,14 +676,19 @@ def test_heavy_doc_spanning_arrow_batches_matches_local(spark):
     assert len(docs_pdf["spans"][0]) > LIGHT_SPANS
     docs = spark.createDataFrame(docs_pdf, schema=DOCUMENTS_SCHEMA)
     cfg = ExtractConfig()
-    batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
-    stage1 = (build_page_work(docs.filter(F.col("doc_id") == "long"), None,
-                              cfg)
-              .mapInPandas(_make_extract_pages(cfg),
-                           schema=PAGE_RESULT_SCHEMA))
-    assert stage1.count() > batch
-    rows = {r["doc_id"]: r for r in
-            extract(docs, None, cfg, num_partitions=2).collect()}
+    key, batch = "spark.sql.execution.arrow.maxRecordsPerBatch", 16
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, str(batch))
+        stage1 = (build_page_work(docs.filter(F.col("doc_id") == "long"),
+                                  None, cfg)
+                  .mapInPandas(_make_extract_pages(cfg),
+                               schema=PAGE_RESULT_SCHEMA))
+        assert stage1.count() > batch
+        rows = {r["doc_id"]: r for r in
+                extract(docs, None, cfg, num_partitions=2).collect()}
+    finally:
+        spark.conf.set(key, old)
     assert set(rows) == {"long", "short"}
     want, status, strategy, _ = extract_document(list(docs_pdf["spans"][0]),
                                                  {}, cfg)
